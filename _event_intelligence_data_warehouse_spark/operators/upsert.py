@@ -112,7 +112,9 @@ def assign_surrogate_keys(
       ``bulk=False``: their batches are dimension-cardinality by
       construction and the auto-probe's count job would be waste.
     - **bulk** (``bulk=True``, or auto above the threshold — the FACT
-      path, plans/facts.py, auto-detects): repartitionByRange on the
+      path, plans/facts.py; the pipeline passes ``bulk`` from its staged
+      row count, an upper bound on new keys, so only other callers
+      auto-detect): repartitionByRange on the
       natural key, per-range-partition row_number, plus an exclusive
       prefix-sum of partition counts as offsets. Every partition sorts
       in parallel; the only global window runs over O(#partitions)

@@ -97,6 +97,7 @@ def upsert_facts(
     incoming: DataFrame,
     *,
     sk_source: DataFrame | None = None,
+    bulk: bool | None = None,
 ) -> DataFrame:
     """Merge semantics of load_facts.sql:92-98: on event_nk match refresh
     the mutable attrs and loaded_at, preserving event_sk and the original
@@ -104,7 +105,9 @@ def upsert_facts(
 
     ``sk_source`` supplies the frame whose max(event_sk) seeds new keys —
     pass the FULL table when ``existing`` is a partition-pruned subset
-    (partitioned upsert), so continuation stays globally unique."""
+    (partitioned upsert), so continuation stays globally unique.
+    ``bulk`` picks the surrogate-key regime (see
+    ``assign_surrogate_keys``); None lets it probe the new-row count."""
     inc = incoming.drop("_ingest_id")
 
     matched_or_existing = merge_upsert(
@@ -121,7 +124,7 @@ def upsert_facts(
     old_rows = with_sk.filter(F.col("event_sk").isNotNull())
     new_rows = assign_surrogate_keys(
         sk_source if sk_source is not None else existing,
-        new_rows, "event_sk", ["event_nk"],
+        new_rows, "event_sk", ["event_nk"], bulk=bulk,
     )
     cols = [c for c in existing.columns]
     return old_rows.select(cols).unionByName(new_rows.select(cols))
@@ -147,6 +150,7 @@ def upsert_facts_partitioned(
     *,
     table: str = "fact_events",
     n_buckets: int = FACT_BUCKETS,
+    bulk: bool | None = None,
 ) -> list[int]:
     """Partition-pruned fact upsert: the 100 TB path.
 
@@ -157,7 +161,10 @@ def upsert_facts_partitioned(
     untouched buckets' files are never read or rewritten, so batch cost
     is proportional to the increment. The surrogate-key base comes from a
     column-pruned max over the full table (a footer-cheap scan of one
-    column). Returns the affected bucket ids (for observability/tests)."""
+    column). ``bulk`` is passed to :func:`upsert_facts`: a caller that
+    knows an upper bound on the batch's new keys saves the surrogate-key
+    size probe. Returns the affected bucket ids (for
+    observability/tests)."""
     from _event_intelligence_data_warehouse_spark import schemas
 
     affected = sorted(
@@ -185,7 +192,7 @@ def upsert_facts_partitioned(
         existing_aff = wh.read(table, schemas.FACT_EVENTS)
         sk_src = existing_aff
     merged = upsert_facts(
-        existing_aff, incoming, sk_source=sk_src
+        existing_aff, incoming, sk_source=sk_src, bulk=bulk
     ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))
     if migrating:
         # Dynamic overwrite would leave the legacy flat files at the

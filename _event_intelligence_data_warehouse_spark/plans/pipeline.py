@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _event_intelligence_data_warehouse_spark import schemas
+from _event_intelligence_data_warehouse_spark.operators.upsert import (
+    SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
+)
 from _event_intelligence_data_warehouse_spark.plans import dims as dims_mod
 from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
 from _event_intelligence_data_warehouse_spark.plans import kpis as kpis_mod
@@ -85,7 +88,18 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
     if raw.isEmpty():
         return {"staged": 0}
     stg = stage_events(raw, only_unprocessed=False).cache()
+    try:
+        return _load_staged(wh, stg)
+    finally:
+        stg.unpersist()
+
+
+def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     now = F.current_timestamp()
+    # One pass over the cached batch: the watermark and the batch size.
+    # New fact keys never outnumber staged rows, so the size also picks
+    # the surrogate-key regime without a probe job on the join result.
+    max_ts, staged = stg.agg(F.max("ingested_at"), F.count("*")).first()
 
     gold = {name: wh.read(name, schema) for name, schema in GOLD.items()}
 
@@ -111,24 +125,18 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
     # Partition-pruned upsert: only the hash buckets containing this
     # batch's keys are read and rewritten (storage.overwrite_partitions) —
     # at 100 TB the merge cost tracks the increment, not the table.
-    facts_mod.upsert_facts_partitioned(wh, fact_rows)
+    facts_mod.upsert_facts_partitioned(
+        wh, fact_rows, bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
+    )
 
-    max_ts = stg.agg(F.max("ingested_at")).first()[0]
-    staged = stg.count()
     if max_ts is not None:
         wh.set_watermark(WATERMARK, max_ts.isoformat(sep=" "))
-    stg.unpersist()
     return {"staged": staged}
 
 
 def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
     raw = wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS)
-    stg = stage_events(raw, only_unprocessed=False)
-    checks = [
-        quality_mod.check_null_event_names(raw, run_id),
-        quality_mod.check_invalid_event_dates(raw, run_id),
-        quality_mod.check_price_min_gt_max(stg, run_id),
-        quality_mod.check_duplicate_event_ids(raw, run_id),
+    out = quality_mod.run_raw_checks_one_pass(raw, run_id).unionByName(
         quality_mod.check_orphan_fact_records(
             wh.read("fact_events", schemas.FACT_EVENTS),
             wh.read("dim_date", schemas.DIM_DATE),
@@ -136,11 +144,8 @@ def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
             wh.read("dim_category", schemas.DIM_CATEGORY),
             wh.read("dim_source", schemas.DIM_SOURCE),
             run_id,
-        ),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
+        )
+    )
     out = out.select([f.name for f in schemas.QUALITY_LOG.fields])
     wh.append(bronze.QUALITY_LOG_TABLE, out)
     return wh.read(bronze.QUALITY_LOG_TABLE)
@@ -156,7 +161,11 @@ def step_kpis(wh: Warehouse, spark: SparkSession) -> dict[str, DataFrame]:
 
 
 def summary(wh: Warehouse) -> dict[str, int]:
-    """The 7 invariant post-run counts (run_pipeline.py:65-87)."""
+    """The 7 invariant post-run counts (run_pipeline.py:65-87). In
+    manifest mode they are served from the manifest's per-file row
+    counts, with no Spark job; a table whose count the stats cannot
+    answer exactly (deletion vectors, files without row stats) falls
+    back to ``count()``, as does legacy mode."""
     out = {}
     for t in [
         "raw_events",
@@ -167,10 +176,13 @@ def summary(wh: Warehouse) -> dict[str, int]:
         "fact_events",
         "quality_log",
     ]:
-        try:
-            out[t] = wh.read(t).count()
-        except FileNotFoundError:
-            out[t] = 0
+        n = wh.stats_count(t) if wh.manifest else None
+        if n is None:
+            try:
+                n = wh.read(t).count()
+            except FileNotFoundError:
+                n = 0
+        out[t] = n
     return out
 
 

@@ -99,20 +99,16 @@ def land_batch(
         raise
 
 
+# Broadcast the existing bronze keys while the live table is under this.
+BROADCAST_KEYS_MAX_BYTES = 64 * 1024 * 1024
+
+
 def _small(wh: Warehouse, table: str) -> bool:
     """Heuristic: broadcast the existing-keys side only while tiny. At real
-    scale AQE's size-based broadcast decision takes over."""
-    import os
-
-    path = wh.path(table)
-    if not os.path.isdir(path):
-        return True
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    return total < 64 * 1024 * 1024
+    scale AQE's size-based broadcast decision takes over. Sizes the LIVE
+    image (``file_stats``): manifest files under data/s*/ count, stale
+    snapshots do not."""
+    return wh.file_stats(table)[1] < BROADCAST_KEYS_MAX_BYTES
 
 
 def _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,

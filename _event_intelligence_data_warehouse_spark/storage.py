@@ -78,6 +78,31 @@ def parquet_row_count(path: str) -> int | None:
         return None
 
 
+# Footer key under which Spark's parquet writer records the row schema
+# (ParquetReadSupport.SPARK_METADATA_KEY): the bytes Spark's own schema
+# inference deserializes when the key is present.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_spark_schema(path: str) -> T.StructType | None:
+    """The Spark schema a Spark-written parquet file records in its
+    footer, read in-process with pyarrow — what a parquet read with
+    ``mergeSchema=false`` would infer from that file, without the Spark
+    job inference runs. None when the footer is unreadable or carries no
+    Spark schema (files Spark did not write): the caller then lets Spark
+    infer."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return None if raw is None else T.StructType.fromJson(json.loads(raw))
+    except (OSError, ValueError, KeyError, TypeError):
+        # OSError / ArrowInvalid (a ValueError) for unreadable footers;
+        # ValueError, KeyError or TypeError for a schema string Spark
+        # wrote in its pre-JSON legacy format
+        return None
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed the version this writer raced for."""
 
@@ -188,7 +213,13 @@ class Warehouse:
         immutable manifest, so any still-vacuum-retained snapshot is
         readable by resolving its manifest instead of the pointer. The
         reproducible-training-data primitive: pin a dataset to the exact
-        file set a run trained on, diff versions, audit what changed."""
+        file set a run trained on, diff versions, audit what changed.
+
+        A manifest-mode read runs no schema-inference job: each snapshot
+        group's schema comes from its first file's parquet footer, read
+        in-process. Legacy-adopted root files and files without
+        Spark's footer schema fall back to inference, as does legacy
+        (non-manifest) mode."""
         if self.manifest:
             return self._m_read(table, schema, version=version)
         if version is not None:
@@ -971,6 +1002,7 @@ class Warehouse:
         # <col>=<val>/ path components under each basePath; compaction
         # collapses the table to one group, bounding the union width.
         groups: dict[str, list[str]] = {}
+        snapshots: set[str] = set()  # roots that are one data/s* dir
         for rel in files:
             # Normalize first: a shallow clone's entries reach into the
             # source table ("../src/data/s*/..."), and basePath must be
@@ -979,6 +1011,7 @@ class Warehouse:
             nparts = os.path.relpath(full, base).split(os.sep)
             if nparts[0] == "data" and len(nparts) >= 2:
                 root = os.path.join(base, *nparts[:2])
+                snapshots.add(root)
             elif ".." in nparts:
                 # borrowed file: group by ITS snapshot root (or its
                 # table dir) so partition recovery still works
@@ -986,23 +1019,33 @@ class Warehouse:
                 if "data" in fparts:
                     di = len(fparts) - 1 - fparts[::-1].index("data")
                     root = os.sep.join(fparts[: di + 2])
+                    snapshots.add(root)
                 else:
                     root = os.path.dirname(full)
             else:
                 root = base
             groups.setdefault(root, []).append(full)
-        # mergeSchema only where schemas CAN be heterogeneous: the
-        # legacy-adopted base-root group (files from many historical
-        # writes). Files inside one data/s* snapshot dir come from a
-        # single job and share a schema — skip the per-footer merge I/O
-        # there; cross-SNAPSHOT evolution is handled by the
-        # allowMissingColumns union below.
-        dfs = [
-            self.spark.read.option("basePath", root)
-            .option("mergeSchema", "true" if root == base else "false")
-            .parquet(*sorted(fs))
-            for root, fs in sorted(groups.items())
-        ]
+        # No schema-inference job: files inside one data/s* snapshot dir
+        # come from a single Spark job and share a schema, so the first
+        # file's footer (read here, in-process) is the schema Spark
+        # would infer, and it is passed to the reader; partition columns
+        # are still discovered from the paths. Two cases keep inference:
+        # the legacy-adopted base-root group (files from many historical
+        # writes, merged with mergeSchema) and footers without Spark's
+        # schema key (files Spark did not write). Cross-SNAPSHOT
+        # evolution is handled by the allowMissingColumns union below.
+        dfs = []
+        for root, fs in sorted(groups.items()):
+            fs = sorted(fs)
+            reader = self.spark.read.option("basePath", root)
+            schema = footer_spark_schema(fs[0]) if root in snapshots else None
+            if schema is not None:
+                reader = reader.schema(schema)
+            else:
+                reader = reader.option(
+                    "mergeSchema", "true" if root == base else "false"
+                )
+            dfs.append(reader.parquet(*fs))
         if rowpos:
             # row identity for deletion vectors, resolved per group
             # while _metadata is still bound to the scan

@@ -1,0 +1,251 @@
+"""The manifest warehouse's metadata path runs no Spark job: reads take
+each snapshot group's schema from its parquet footer instead of an
+inference job, pipeline counts come from the manifest, and a tick leaves
+no cached blocks behind. Job counts are exact: the DAG scheduler's next
+job id, read before and after."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from _event_intelligence_data_warehouse_spark import storage
+from _event_intelligence_data_warehouse_spark.plans import facts, pipeline
+from _event_intelligence_data_warehouse_spark.sources import bronze
+from _event_intelligence_data_warehouse_spark.sources.synthetic import (
+    generate_sample_events,
+)
+from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _mwh(spark, tmp_path, name="mwh"):
+    return Warehouse(spark, str(tmp_path / name), manifest=True)
+
+
+def _frame(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 5).cast("int").alias("grp"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("s"),
+        F.col("id").cast("decimal(10,2)").alias("price"),
+        F.current_timestamp().alias("ts"),
+    )
+
+
+def _snapshot(df):
+    return df.schema, sorted(df.collect(), key=repr)
+
+
+def _footer_read_matches_inference(wh, table, monkeypatch):
+    """Assert ``wh.read(table)`` gives the same schema and rows with the
+    footer schema as with forced inference; return whether any group's
+    schema actually came from a footer."""
+    real = storage.footer_spark_schema
+    hits = []
+
+    def counting(path):
+        schema = real(path)
+        hits.append(schema is not None)
+        return schema
+
+    monkeypatch.setattr(storage, "footer_spark_schema", counting)
+    footer = _snapshot(wh.read(table))
+    monkeypatch.setattr(storage, "footer_spark_schema", lambda path: None)
+    inferred = _snapshot(wh.read(table))
+    monkeypatch.setattr(storage, "footer_spark_schema", real)
+    assert footer[0] == inferred[0], table
+    assert footer[1] == inferred[1], table
+    return any(hits)
+
+
+def test_footer_schema_read_matches_inference_on_pipeline_tables(
+    spark, tmp_path, monkeypatch
+):
+    """Every table of a two-run dirty-sample manifest pipeline, including
+    the partitioned fact table."""
+    whdir = str(tmp_path / "wh")
+    argv = ["--source", "csv", "--generate-sample", "--dirty", "--manifest"]
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        argv + ["--sample-rows", "120"]))
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        argv + ["--sample-rows", "200"]))
+    wh = Warehouse(spark, whdir, manifest=True)
+    tables = sorted(
+        t for t in os.listdir(whdir)
+        if os.path.isdir(os.path.join(whdir, t, "_manifests"))
+    )
+    assert {"raw_events", "fact_events", "quality_log",
+            "dim_venue"} <= set(tables)
+    assert wh._manifest("fact_events")["partition_col"] == "p_bucket"
+    for t in tables:
+        assert _footer_read_matches_inference(wh, t, monkeypatch), t
+
+
+def test_footer_schema_read_after_schema_evolution(spark, tmp_path,
+                                                   monkeypatch):
+    wh = _mwh(spark, tmp_path)
+    wh.append("t", _frame(spark, 0, 20))
+    wh.evolve_schema("t", rename={"s": "label"},
+                     add={"flag": ("boolean", "true")})
+    wh.append("t", _frame(spark, 20, 30).withColumnRenamed("s", "label")
+              .withColumn("flag", F.lit(False)))
+    df = wh.read("t")
+    assert "label" in df.columns and "s" not in df.columns
+    assert _footer_read_matches_inference(wh, "t", monkeypatch)
+
+
+def test_footer_schema_read_of_shallow_clone(spark, tmp_path, monkeypatch):
+    wh = _mwh(spark, tmp_path)
+    wh.append("src", _frame(spark, 0, 15))
+    wh.append("src", _frame(spark, 15, 25))
+    wh.clone("src", "dst")
+    wh.append("dst", _frame(spark, 25, 30))
+    assert wh.read("dst").count() == 30
+    assert _footer_read_matches_inference(wh, "dst", monkeypatch)
+
+
+def test_footer_schema_read_with_deletion_vectors(spark, tmp_path,
+                                                  monkeypatch):
+    wh = _mwh(spark, tmp_path)
+    wh.append("t", _frame(spark, 0, 40))
+    wh.append("t", _frame(spark, 40, 60))
+    wh.delete_where("t", [("grp", "==", 3)], mode="dv")
+    assert wh._manifest("t").get("dv_files")
+    assert wh.read("t").count() == 48
+    assert _footer_read_matches_inference(wh, "t", monkeypatch)
+
+
+def test_footer_schema_read_of_legacy_adopted_table(spark, tmp_path,
+                                                    monkeypatch):
+    """The adopted root group keeps mergeSchema inference (its files come
+    from many writes); later snapshot groups read their footers."""
+    root = str(tmp_path / "legacy")
+    legacy = Warehouse(spark, root)
+    # neither write's schema contains the other's: no single footer
+    # holds the merged schema
+    legacy.append("t", _frame(spark, 0, 10).withColumn("a", F.lit(1)))
+    legacy.append("t", _frame(spark, 10, 20).withColumn("b", F.lit(2)))
+    wh = Warehouse(spark, root, manifest=True)
+    assert {"a", "b"} <= set(wh.read("t").columns)
+    wh.append("t", _frame(spark, 20, 25).withColumn("a", F.lit(3))
+              .withColumn("b", F.lit(4)))
+    assert _footer_read_matches_inference(wh, "t", monkeypatch)
+
+
+def test_footer_schema_is_none_without_spark_key(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert storage.footer_spark_schema(path) is None
+    assert storage.footer_spark_schema(str(tmp_path / "missing")) is None
+
+
+def test_manifest_read_submits_no_job(spark, tmp_path, monkeypatch):
+    """Structural gate: reading a manifest table of three snapshot groups
+    resolves its schema in-process, so no Spark job is submitted.
+    Forced inference submits one job per group."""
+    wh = _mwh(spark, tmp_path)
+    for lo in (0, 10, 20):
+        wh.append("t", _frame(spark, lo, lo + 10))
+    groups = {f.split(os.sep)[1] for f in wh._manifest("t")["files"]}
+    assert len(groups) >= 3
+    j0 = _jobs(spark)
+    df = wh.read("t")
+    assert _jobs(spark) - j0 == 0
+    assert df.count() == 30
+    monkeypatch.setattr(storage, "footer_spark_schema", lambda path: None)
+    j0 = _jobs(spark)
+    wh.read("t")
+    assert _jobs(spark) - j0 >= len(groups)
+
+
+def test_noop_tick_job_count(spark, tmp_path):
+    """Structural gate: a scheduler tick that finds nothing new on a small
+    manifest warehouse submits exactly 13 jobs: 1 for the ``isEmpty``
+    probe of unprocessed bronze rows and 12 for the quality step (its
+    one-pass aggregate, the orphan check's dimension broadcasts and the
+    ``quality_log`` append). Reads, KPI view registration and the summary
+    counts submit none. With schema inference on every read, per-check
+    quality plans and counted summaries, the same tick submitted 58, and
+    more on every later tick as snapshot groups accumulated."""
+    whdir = str(tmp_path / "wh")
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        ["--source", "csv", "--generate-sample", "--sample-rows", "60",
+         "--manifest"]))
+    noop = pipeline.parse_args(["--skip-ingest", "--manifest"])
+    j0 = _jobs(spark)
+    res = pipeline.run_pipeline(spark, whdir, noop)
+    assert _jobs(spark) - j0 == 13
+    assert res["load"] == {"staged": 0}
+    assert res["summary"]["fact_events"] == 60
+
+
+def test_summary_counts_from_manifest_match_count(spark, tmp_path):
+    """Manifest-served counts equal real counts, and a table with deletion
+    vectors (whose file row counts overstate it) falls back to count()."""
+    whdir = str(tmp_path / "wh")
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        ["--source", "csv", "--generate-sample", "--sample-rows", "40",
+         "--manifest"]))
+    wh = Warehouse(spark, whdir, manifest=True)
+    wh.delete_where("raw_events", [("raw_event_id", "==", "MOCK_00003")],
+                    mode="dv")
+    got = pipeline.summary(wh)
+    want = {t: wh.read(t).count() for t in got}
+    assert got == want
+    assert got["raw_events"] == 39
+
+
+def test_pipeline_leaves_no_cached_blocks(spark, tmp_path):
+    """A manifest-mode run, loading ticks included, releases every block
+    it cached: storage memory returns to where it was."""
+    before = _cached_rdd_ids(spark)
+    whdir = str(tmp_path / "wh")
+    argv = ["--source", "csv", "--generate-sample", "--manifest"]
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        argv + ["--sample-rows", "50"]))
+    pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
+        argv + ["--sample-rows", "80"]))
+    assert _cached_rdd_ids(spark) - before == set()
+
+
+def test_failed_upsert_releases_staged_cache(spark, tmp_path, monkeypatch):
+    """A failed fact upsert leaves neither the cached staging batch nor an
+    advanced watermark behind."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("upsert failed")
+
+    wh = _mwh(spark, tmp_path)
+    bronze.land_batch(wh, generate_sample_events(spark, 30), source="csv")
+    monkeypatch.setattr(facts, "upsert_facts_partitioned", boom)
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="upsert failed"):
+        pipeline.step_transform_and_load(wh, spark)
+    assert _cached_rdd_ids(spark) - before == set()
+    assert wh.get_watermark(pipeline.WATERMARK) is None
+
+
+def test_small_sizes_manifest_tables(spark, tmp_path, monkeypatch):
+    """bronze._small sees a manifest table's bytes: its files live under
+    data/s*/, not at the table root."""
+    wh = _mwh(spark, tmp_path)
+    assert bronze._small(wh, "raw_events")  # no table yet
+    wh.append("raw_events", _frame(spark, 0, 10))
+    live = wh.file_stats("raw_events")[1]
+    assert live > 0
+    monkeypatch.setattr(bronze, "BROADCAST_KEYS_MAX_BYTES", live)
+    assert not bronze._small(wh, "raw_events")
+    monkeypatch.setattr(bronze, "BROADCAST_KEYS_MAX_BYTES", live + 1)
+    assert bronze._small(wh, "raw_events")
