@@ -16,10 +16,23 @@ with columns sorted by name, so the house rules are:
 - integer-ish computed columns are cast to BIGINT on both sides;
 - raw timestamps pass through ``contract.load``'s ns->us truncation, and
   oracle SQL casts TIMESTAMP_NS to TIMESTAMP to match.
+
+The driver re-verifies only the FIRST ``DRIVER_SAMPLE`` (50) entries and
+writes one ``CORRECTNESS_r<N>.json`` ledger per round next to the
+package. At import, :func:`driver_sample_order` puts first the names no
+ledger has a row for (registration order), then the names whose latest
+ledger row is oldest, by (round, name), up to 50; every other entry
+follows in registration order. With no ledgers that is plain
+registration order. So a new ledger rotates the head by itself; before a
+round closes, run ``tools/check_oracle.py`` on ``list(QUERIES)[:50]``.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +40,8 @@ from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+
+DRIVER_SAMPLE = 50
 
 
 def query(name: str, oracle: str | None = None):
@@ -39,6 +54,31 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def driver_sample_order(names: list[str], ledger_dir: str) -> list[str]:
+    """``names`` (registration order) reordered so the driver's sample of
+    the first ``DRIVER_SAMPLE`` checks what it has checked least recently.
+
+    A name counts as verified in round N when ``CORRECTNESS_rN.json`` in
+    ``ledger_dir`` has a row for it. The head is the never-verified names
+    in registration order, then the verified ones by (last round, name),
+    up to ``DRIVER_SAMPLE`` in all; the rest keep registration order.
+    Ledger rows for unregistered names are ignored."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(ledger_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                last[name] = max(last.get(name, rnd), rnd)
+    never = [n for n in names if n not in last]
+    stale = sorted((n for n in names if n in last), key=lambda n: (last[n], n))
+    head = (never + stale)[:DRIVER_SAMPLE]
+    chosen = set(head)
+    return head + [n for n in names if n not in chosen]
 
 
 # Testdata columns stored as parquet TIMESTAMP(NANOS): Spark 4 has no ns
@@ -61,7 +101,6 @@ def staging_dir(name: str, sf_dir: str) -> str:
     users of one box) can't wipe each other's live stream inputs or
     checkpoints — each process cleans only its own root at exit."""
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -128,731 +167,14 @@ from _event_intelligence_data_warehouse_spark.contract import (  # noqa: E402,F4
     warehouse_queries,
 )
 
-# The driver's correctness gate samples the FIRST 50 registry entries
-# (round 1: CORRECTNESS_r01.json == registration-order positions 0-49, so
-# 19 registered queries never got a driver row). Reorder so every SURVEY
-# §2 operator id has a driver-checked covering entry: queries whose ids
-# are redundantly covered by another sampled query move to the tail.
-# Tail entries are still fully verified locally (tools/check_oracle.py,
-# pytest) — this only chooses which 50 the driver re-verifies.
-#
-# Round-3 rotation (r2 verdict item 5): sketch_hll_distinct,
-# rollup_cascade_daily, text_chunk_documents, join_scd2_point_in_time and
-# text_redact_pii move INTO the sample (plus the two new recall audits,
-# registered in the head region); seven entries whose mechanisms stay
-# sampled elsewhere move out — kpi_events_by_city / kpi_data_quality
-# (V2/F8/A10 remain covered by kpi_events_by_category,
-# kpi_weekend_vs_weekday, kpi_pipeline_health, quality_five_checks,
-# staging_cleanse, agg_pct_scalar_subquery), funnel / moving-avg / kNN
-# (extension shapes covered by cohort+window+brute-force entries), and
-# embedding_near_duplicates / similarity_topk_bruteforce (LSH bucketing
-# and the exact baseline are re-exercised inside the recall audits).
-#
-# Round-4 rotation (r3 verdict item 1): the 11 round-3 additions move
-# INTO the sample (incremental dedup, decontamination, mixture
-# plan/sample, leakage-safe split, sequence packing, CDC diff,
-# constraint validation, anomaly + drift screens, cluster telemetry).
-# Moving out, with every SURVEY §2 id still head-covered:
-# - sketch_hll_distinct / rollup_cascade_daily / text_chunk_documents /
-#   text_redact_pii / join_scd2_point_in_time: rotated in for r3 and
-#   earned green CORRECTNESS_r03 rows; U5 stays covered by
-#   scd2_change_intervals, the mechanisms by their r03 rows + local gate.
-# - window_pct_of_total (W1 stays via kpi_weekend_vs_weekday),
-#   window_sessionize (D8 stays via kpi_pipeline_health's duration;
-#   gap-lag is extension), agg_exact_percentiles (OLAP family stays via
-#   rollup+pivot), dedup_simhash (4 other dedup mechanisms + 2 promoted
-#   stay sampled), join_star_revenue (J5-J7 stay via the KPI joins),
-#   agg_salted_skew_safe (driver-green r1-r3; salting plan-asserted in
-#   tests/test_scale_fallbacks.py).
-_DRIVER_SAMPLE_TAIL = [
-    "kpi_events_by_city",
-    "kpi_data_quality",
-    "funnel_view_click_purchase",
-    "window_moving_avg_7d",
-    "knn_label_prediction",
-    "embedding_near_duplicates",
-    "similarity_topk_bruteforce",
-    # subsumed by dedup_minhash_lsh_pairs (same signing path + verify)
-    "dedup_minhash_signatures",
-    # Expand-based grouping family: rollup + pivot stay sampled
-    "agg_cube_type_weekday",
-    "agg_grouping_sets_mix",
-    # J7/O2 covered by kpi_weekend_vs_weekday + ubiquitous sorts
-    "kpi_monthly_trend",
-    # hash-bucket sampling: sample_stratified_hash stays sampled
-    "split_train_holdout",
-    # column algebra covered by text_quality_score
-    "text_metrics",
-    # F.window mechanism covered by window_tumbling_hourly
-    "window_sliding_hourly",
-    # rank+filter covered by window_rank_family / topk_recent_events
-    "topk_docs_per_source",
-    # centroid math re-exercised by similarity_ivf_topk
-    "embedding_label_centroids",
-    # lag covered by window_sessionize's gap-lag
-    "window_day_over_day_delta",
-    # A8/A9/A11 covered by quality_five_checks (c1-c5 + tiers)
-    "quality_whole_table_check",
-    "agg_duplicate_groups",
-    # A1-A7 covered by kpi_events_by_category + agg_distinct_counts
-    "agg_orders_by_priority",
-    # J1-J4 left-join mechanics covered by fact_build_star
-    "join_left_unmatched",
-    # set ops (absent in reference; extension nicety)
-    "setop_customer_cohorts",
-    # D7 date_trunc covered by kpi_pipeline_health's run_date
-    "daily_event_stats",
-    # F6 EUR CASE covered by fact_build_star's price_min_eur
-    "fx_case_mapping",
-    # F4 ROUND covered by fact_build_star's price_avg
-    "round_nullif_guard",
-    # U1 distinct covered by fact_build_star's dim builds
-    "dedup_distinct_pairs",
-    # round-2 additions beyond the §2 surface: full local oracles, but
-    # kept out of the driver's 50-sample so no §2-covering entry loses
-    # its driver row (tokenize/wordcount mechanics are driver-covered
-    # via text_quality_score; the CC+quality composition via
-    # dedup_connected_components + text_quality_score)
-    "text_tfidf_top_terms",
-    "text_repetition_filter",
-    "dedup_canonical_keep_best",
-    "streaming_dedup_within_watermark",
-    "cohort_retention",
-    # round-4 demotions (see rotation note above): r3-rotated entries
-    # with earned driver rows + same-family duplicates
-    "sketch_hll_distinct",
-    "rollup_cascade_daily",
-    "text_chunk_documents",
-    "text_redact_pii",
-    "join_scd2_point_in_time",
-    "window_pct_of_total",
-    "window_sessionize",
-    "agg_exact_percentiles",
-    "dedup_simhash",
-    "join_star_revenue",
-    "agg_salted_skew_safe",
-    "sketch_cms_heavy_hitters",
-    "sketch_hll_grouped_merge",
-    "sketch_binned_quantiles",
-    "text_winnowing_overlap_pairs",
-    "sample_weighted_by_quality",
-    "stats_analyze_columns",
-    "embedding_quantize_int8",
-    "embedding_quantized_topk_recall",
-    # round-4 demotions making room for dedup_semantic,
-    # text_boilerplate_lines and text_bpe_pair_stats (all three new this
-    # round, so they take the driver rows; every demotee is r01-r03
-    # driver-green):
-    # rank/dense_rank/ntile are extension shapes; row_number coverage
-    # stays via dedup_latest_per_key + topk_recent_events
-    "window_rank_family",
-    # extension range join, 3 green rounds; the as-of join stays sampled
-    "join_range_price_band",
-    # A1-A6 stay covered by kpi_events_by_category + quality_five_checks;
-    # count_distinct by text_boilerplate_lines' document-frequency agg
-    "agg_distinct_counts",
-    # J8's anti join stays sampled (join_anti_not_exists); semi-join
-    # mechanics also run inside the incremental-dedup index prune —
-    # frees the slot for dedup_exact_substrings
-    "join_semi_exists",
-    # stream-stream interval join, driver-green r01-r03; the streaming
-    # family keeps stateful sessions + tumbling windows sampled — frees
-    # the slot for sketch_bloom_membership
-    "streaming_purchase_attribution",
-    # recall-audit mechanism stays sampled via similarity_ivf_recall and
-    # the LSH path via similarity_lsh_topk — frees a slot for
-    # text_url_canonicalize
-    "similarity_lsh_recall",
-    # md5 hash-bucket sampling stays sampled via curation_mixture_sample
-    # (rate application) and split_leakage_safe — frees a slot for
-    # text_url_host_stats
-    "sample_stratified_hash",
-    # Expand-family grouping keeps pivot_status_by_priority sampled
-    # (cube/grouping-sets already tail on the same rationale) — frees a
-    # slot for split_kfold_leakage_safe
-    "agg_rollup_status_priority",
-    # composed pipeline, driver-green r01-r03; every stage it composes
-    # (quality score, exact dedup, hash sampling) keeps its own sampled
-    # or r03-green entry — frees a slot for dedup_cc_incremental
-    "curation_pipeline",
-    # F.window tumbling, driver-green r01-r03 (sliding variant in tail);
-    # the streaming family keeps stateful sessions sampled — frees a
-    # slot for curation_pipeline_v2 (the round-4 composition)
-    "window_tumbling_hourly",
-    # shares its entire machinery (training, cells, pairs, components)
-    # with dedup_semantic, which IS sampled; the audit stays local-gated
-    "dedup_semantic_recall",
-    # rank-selection percentile machinery identical to
-    # agg_exact_percentiles (tail, r03-green); local-gated
-    "clean_winsorize_values",
-    # gram-hash df aggregate shape shared with text_decontaminate
-    # (sampled); local-gated
-    "text_ngram_novelty",
-    # component-size histogram telemetry over CC labels; the CC
-    # machinery keeps TWO sampled entries (dedup_connected_components,
-    # dedup_cc_incremental) — frees the slot for text_lm_surprise (new
-    # mechanism: corpus-trained model scored by join-back)
-    "dedup_cluster_sizes",
-    # round-4 LATE additions still tail-resident after the round-5
-    # rotation (each has a full local oracle; remaining r6 slate):
-    "text_ccnet_buckets",
-    "sample_stratified_exact",
-    "embedding_contrastive_pairs",
-    "governance_stats_drift",
-    "text_lang_fertility",
-    "embedding_trimmed_centroids",
-    "dedup_similarity_histogram",
-    "text_langid_confusion",
-    "clean_mad_outliers",
-    # Round-5 rotation (r4 verdict item 1): the never-driver-verified
-    # PQ/IVF-PQ ANN serving family and late-r4 additions move INTO the
-    # 50-sample — similarity_pq_topk, similarity_pq_recall,
-    # similarity_ivfpq_topk, text_bpe_encode, curation_dsir_affinity,
-    # curation_pipeline_v3, curation_quality_percentile,
-    # profile_key_skew, embedding_random_projection,
-    # dedup_containment_pairs, dedup_cluster_density — plus the new
-    # dedup_semantic_incremental (r4 verdict item 6). Moving out, every
-    # one r4-driver-green with its SURVEY §2 id / mechanism still
-    # head-covered:
-    # - kpi_anomalous_days: V2 KPI family stays via kpi_events_by_category,
-    #   kpi_weekend_vs_weekday, kpi_pipeline_health
-    # - cdc_snapshot_diff: storage family has 54 unit tests incl. crash
-    #   injection; the manifest MERGE stays exercised by
-    #   upsert_merge_latest_state
-    # - embedding_batch_drift: drift screen; stateless projection family
-    #   stays via embedding_random_projection (promoted)
-    # - text_url_host_stats: URL column algebra stays sampled via
-    #   text_url_canonicalize
-    # - split_kfold_leakage_safe: split-per-component machinery stays via
-    #   split_leakage_safe
-    # - curation_mixture_plan: int64-exact planning feeds
-    #   curation_mixture_sample, which stays sampled
-    # - governance_validate_rules: single-scan rule folding also runs
-    #   inside storage constraint enforcement (unit) and quality_five_checks
-    # - text_winnowing_fingerprints: gram-hash machinery stays via
-    #   text_decontaminate; overlap variant r03-green in tail
-    # - dedup_exact: sha2-groupBy mechanism re-exercised inside
-    #   curation_pipeline_v3 (promoted) and dedup_latest_per_key
-    # - similarity_ivf_topk / similarity_ivf_recall: IVF training+serve
-    #   and the recall-audit mechanism stay sampled via
-    #   similarity_ivfpq_topk + similarity_pq_recall (promoted)
-    # - curation_pipeline_v2: superseded composition; v3 (promoted)
-    #   composes the same stages plus DSIR/percentile gating
-    "kpi_anomalous_days",
-    "cdc_snapshot_diff",
-    "embedding_batch_drift",
-    "text_url_host_stats",
-    "split_kfold_leakage_safe",
-    "curation_mixture_plan",
-    "governance_validate_rules",
-    "text_winnowing_fingerprints",
-    "dedup_exact",
-    "similarity_ivf_topk",
-    "similarity_ivf_recall",
-    "curation_pipeline_v2",
-    # round-5 NEW additions (Gopher rule battery, temperature mixture,
-    # SSL-prototypes pruning): full local oracles from day one; they
-    # join the round-6 rotation slate rather than displacing the §2
-    # warehouse entries at the head's end (dim_date_attributes,
-    # keys_md5_concat_split, json_extract_props)
-    "text_gopher_filters",
-    "curation_mixture_temperature",
-    "curation_prototypes",
-    "curation_pipeline_v4",
-    "timeseries_gapfill_daily",
-    "stats_numeric_correlations",
-    "text_c4_line_filter",
-    "similarity_ivfpq_residual_topk",
-    # round-5 LATE additions (link analysis, record linkage, BM25,
-    # k-anonymity, Markov transitions, Heaps growth): full local oracles
-    # from day one; round-6 rotation slate
-    "graph_pagerank",
-    "join_fuzzy_blocked",
-    "text_bm25_search",
-    "governance_k_anonymity",
-    "events_markov_transitions",
-    "text_vocab_growth",
-    "multimodal_phash_dedup",
-    "window_session_native",
-    "entity_resolution_clusters",
-    "graph_pagerank_incremental",
-    "json_variant_stats",
-    "governance_masked_read",
-    "stats_bootstrap_mean_ci",
-    "storage_dv_roundtrip",
-    "timeseries_ohlc_hourly",
-    "analytics_growth_accounting",
-    "timeseries_seasonal_anomaly",
-    "streaming_attribution_outer",
-    "sketch_gk_error_audit",
-    "text_lm_trigram_backoff",
-    "join_lateral_topk",
-    "agg_unpivot_metrics",
-    # Late-round-5 OLAP/stats/graph/timeseries additions — queued for the
-    # r6 rotation with the slate above (the r5 head-50 was already
-    # curated when these landed).
-    "olap_pricing_summary",
-    "olap_shipping_priority",
-    "olap_local_supplier_volume",
-    "olap_top_supplier_share",
-    "stats_regression_daily_trend",
-    "stats_benford_screen",
-    "stats_ab_conversion",
-    "stats_autocorr_daily",
-    "timeseries_ewma_daily",
-    "timeseries_cusum_total",
-    "graph_khop_reachability",
-    "text_pmi_collocations",
-    "text_keyword_chi2",
-    "streaming_static_enrich_cohort",
-    "olap_small_order_revenue",
-    "olap_large_orders",
-    "governance_l_diversity",
-    "olap_promo_revenue_share",
-    "olap_single_late_supplier",
-    "analytics_rolling_wau",
-    "linkage_fellegi_sunter",
-    "basket_part_pair_lift",
-    "stats_group_variance",
-    "window_value_family",
-    "olap_share_of_parent",
-    "join_null_safe",
-    "setop_multiset_ops",
-    "trending_types_weekly",
-    "olap_customer_order_histogram",
-    "olap_dormant_rich_customers",
-    "timeseries_holt_forecast",
-    "governance_reconciliation_audit",
-    "sql_frontend_daily_mix",
-    "streaming_ewma_daily",
-    "storage_partition_evolution_roundtrip",
-    "olap_disjunctive_promo_revenue",
-    "olap_supplier_part_counts",
-    "olap_forecast_revenue_change",
-    "olap_trade_volume_pairs",
-    "olap_margin_by_nation_year",
-    "olap_returned_item_report",
-    # Third-session round-5 additions: the final TPC-H adaptations
-    # (Q2/Q4/Q8/Q11/Q12/Q20 shapes) — r6 rotation slate with the rest.
-    "olap_min_cost_supplier",
-    "olap_order_priority_exists",
-    "olap_nation_market_share",
-    "olap_important_part_value",
-    "olap_late_shipment_priority",
-    "olap_dominant_supply_share",
-    # Third-session NEW mechanisms (KMV set algebra, skyline, linear
-    # interpolation, schema evolution, FD profiling, incremental IVF,
-    # exact KS, sweep-line concurrency, Z-order roundtrip,
-    # Bloom-prefilter dedup, streak islands) — all full local oracles
-    # at >= 2 SFs from day one; r6 rotation slate with the rest.
-    "sketch_kmv_set_ops",
-    "olap_pareto_frontier",
-    "timeseries_interpolate_linear",
-    "governance_functional_deps",
-    "similarity_ivf_incremental",
-    "stats_ks_two_sample",
-    "timeseries_peak_concurrency",
-    "dedup_bloom_prefilter_incremental",
-    "analytics_activity_streaks",
-    "agg_quantiles_interpolated",
-    "olap_rfm_segmentation",
-    "analytics_user_concentration",
-    "join_asof_nearest_run",
-    "analytics_cohort_ltv",
-    "analytics_multitouch_attribution",
-    "storage_jsonl_export_roundtrip",
-    "governance_bot_regularity",
-    "text_rake_keyphrases",
-    "events_top_paths",
-    "similarity_mmr_rerank",
-    "olap_abc_classification",
-    # Round-6 demotions (r5 verdict item 7): ten r5-driver-green entries
-    # move out to make room for the promoted slate in
-    # _DRIVER_SAMPLE_HEAD below. Every demotee keeps its mechanism
-    # head-covered:
-    # - dedup_minhash_lsh_pairs / dedup_connected_components: the full
-    #   minhash->LSH->CC pipeline still runs head-sampled inside
-    #   dedup_cluster_density, and incrementally via
-    #   dedup_minhash_incremental(+_pruned) and dedup_cc_incremental
-    # - dedup_ngram_jaccard: gram-set blocking + pair scoring stay via
-    #   dedup_containment_pairs and text_decontaminate
-    # - similarity_lsh_topk: the ANN serve family keeps three head rows
-    #   (PQ topk/recall, IVF-PQ topk); LSH banding stays via the
-    #   minhash incremental entries
-    # - text_lm_surprise: corpus-trained-model scoring by join-back
-    #   stays via curation_dsir_affinity
-    # - text_bpe_pair_stats: BPE machinery stays via text_bpe_encode
-    #   (train + encode in one entry)
-    # - curation_quality_percentile: percentile gating is composed
-    #   inside curation_pipeline_v3 (head)
-    # - embedding_random_projection: deterministic projection is the
-    #   first stage of the sampled PQ encode path
-    # - text_url_canonicalize / profile_key_skew: extension screens,
-    #   driver-green r3-r5; no §2 id rides on them
-    "dedup_minhash_lsh_pairs",
-    "dedup_connected_components",
-    "dedup_ngram_jaccard",
-    "similarity_lsh_topk",
-    "text_lm_surprise",
-    "text_bpe_pair_stats",
-    "curation_quality_percentile",
-    "embedding_random_projection",
-    "text_url_canonicalize",
-    "profile_key_skew",
-    # Round-7 demotions (r6 verdict item 1): every entry below earned a
-    # green CORRECTNESS_r06 row; they rotate out so the head can take
-    # the never-driver-verified r6 mechanisms, the r5 leftovers and the
-    # five r7 additions. Mechanism coverage after demotion:
-    # - dedup_minhash_incremental(+_pruned) / dedup_cc_incremental /
-    #   dedup_semantic(+_incremental) / dedup_containment_pairs /
-    #   dedup_exact_substrings / dedup_cluster_density: r6-green; the
-    #   minhash->LSH->CC lineage still runs head-sampled inside
-    #   dedup_kcore_survivors (promoted), and the semantic/cell
-    #   machinery inside similarity_knn_graph (promoted, same scorer)
-    # - similarity_pq_topk / similarity_pq_recall / similarity_ivfpq_topk:
-    #   the ANN serve family verified r6; embedding model math keeps a
-    #   head row via embedding_covariance_exact (promoted)
-    # - text_quality_score / text_pack_sequences / text_decontaminate /
-    #   text_boilerplate_lines / text_bpe_encode / curation_dsir_affinity
-    #   / curation_mixture_sample / curation_pipeline_v3 /
-    #   split_leakage_safe: the text/curation battery, all r6-green;
-    #   text keeps head rows via text_phrase_search, text_proximity_search
-    #   and text_bm25_search (promoted)
-    # - multimodal_media_features: r6-green; the multimodal family keeps
-    #   a head row via multimodal_phash_dedup (promoted)
-    # - streaming_stateful_sessions: r6-green; streaming keeps head rows
-    #   via streaming_ivm_cdc_view and window_session_native (promoted)
-    # - storage_schema_evolution/bucketed_join/zorder_scan roundtrips:
-    #   r6-green; storage keeps THREE head rows via storage_dv_roundtrip,
-    #   storage_partition_evolution_roundtrip and
-    #   storage_compaction_roundtrip (promoted)
-    # - olap_min_cost_supplier / olap_dominant_supply_share /
-    #   olap_tier_migration_matrix: r6-green; OLAP keeps a head row via
-    #   olap_nation_market_share (promoted, the widest snowflake)
-    # - stats_mann_whitney_u / stats_runs_test: r6-green; the stats
-    #   screen family takes SEVEN promoted head rows
-    # - pivot_status_by_priority / join_asof_event_run: r1-r6-green
-    #   multiple rounds; pivot/as-of mechanics unchanged since r4
-    # - governance_duplicate_payments: de-vacuified + verified r6
-    # - sketch_bloom_membership: r6-green; sketches keep head rows via
-    #   sketch_kmv_set_ops and sketch_gk_error_audit (promoted)
-    "pivot_status_by_priority",
-    "join_asof_event_run",
-    "split_leakage_safe",
-    "text_quality_score",
-    "text_pack_sequences",
-    "dedup_minhash_incremental",
-    "dedup_minhash_incremental_pruned",
-    "curation_mixture_sample",
-    "text_decontaminate",
-    "multimodal_media_features",
-    "streaming_stateful_sessions",
-    "dedup_semantic",
-    "dedup_semantic_incremental",
-    "text_boilerplate_lines",
-    "dedup_exact_substrings",
-    "sketch_bloom_membership",
-    "dedup_cc_incremental",
-    "text_bpe_encode",
-    "curation_dsir_affinity",
-    "similarity_pq_topk",
-    "similarity_pq_recall",
-    "curation_pipeline_v3",
-    "similarity_ivfpq_topk",
-    "dedup_containment_pairs",
-    "dedup_cluster_density",
-    "storage_schema_evolution_roundtrip",
-    "storage_bucketed_join_roundtrip",
-    "storage_zorder_scan_roundtrip",
-    "olap_min_cost_supplier",
-    "olap_dominant_supply_share",
-    "stats_mann_whitney_u",
-    "stats_runs_test",
-    "olap_tier_migration_matrix",
-    "governance_duplicate_payments",
-    # Round-8 demotions (r7 verdict item 1): every r7 head entry earned
-    # a green CORRECTNESS_r07 row AND the r7 judge re-ran the ENTIRE
-    # 262-query oracle gate end-to-end (0 failures, 0 vacuous), so all
-    # demotees carry judge-reproduced evidence, not just driver rows.
-    # The whole head rotates onto 50 never-driver-verified names —
-    # after 7 rounds 115 of 262 had never had a driver row, and the
-    # verdict names that tail (olap 23, text 14, timeseries 7,
-    # governance 6, analytics 6, streaming 4) as the single biggest
-    # evidence gap. Mechanism coverage for every demotee: its §2 id
-    # and operator machinery are pinned by the judge-rerun full gate +
-    # the 403-test suite, and the r8 head keeps the same FAMILIES
-    # sampled through different queries (e.g. stats via bootstrap/
-    # benford/correlations/wilcoxon, storage via jsonl_export, graph
-    # via events_markov_transitions, similarity via mmr_rerank +
-    # ivf_incremental).
-    "dedup_kcore_survivors",
-    "stats_theil_sen_trend",
-    "stats_changepoint_daily",
-    "stats_mann_kendall",
-    "stats_kruskal_wallis",
-    "stats_hodges_lehmann",
-    "embedding_covariance_exact",
-    "ivm_retraction_roundtrip",
-    "streaming_ivm_cdc_view",
-    "text_phrase_search",
-    "text_proximity_search",
-    "sketch_join_size_estimate",
-    "stats_histogram_selectivity",
-    "graph_pagerank",
-    "graph_pagerank_incremental",
-    "graph_label_propagation",
-    "similarity_knn_graph",
-    "storage_compaction_roundtrip",
-    "timeseries_downsample_lttb",
-    "stats_spearman_daily",
-    "graph_khop_reachability",
-    "entity_resolution_clusters",
-    "linkage_fellegi_sunter",
-    "text_bm25_search",
-    "multimodal_phash_dedup",
-    "storage_dv_roundtrip",
-    "storage_partition_evolution_roundtrip",
-    "sketch_kmv_set_ops",
-    "sketch_gk_error_audit",
-    "stats_ks_two_sample",
-    "window_session_native",
-    "timeseries_peak_concurrency",
-    "governance_functional_deps",
-    "olap_nation_market_share",
-    "kpi_events_by_category",
-    "staging_cleanse",
-    "kpi_weekend_vs_weekday",
-    "fact_build_star",
-    "quality_five_checks",
-    "kpi_pipeline_health",
-    "agg_pct_scalar_subquery",
-    "join_anti_not_exists",
-    "dedup_latest_per_key",
-    "upsert_merge_latest_state",
-    "scd2_change_intervals",
-    "surrogate_keys_dense",
-    "topk_recent_events",
-    "dim_date_attributes",
-    "keys_md5_concat_split",
-    "json_extract_props",
-    # Round-10 demotions (r9 verdict item 1): every r9 head entry
-    # earned a green CORRECTNESS_r09 row (50/50, including the
-    # re-pinned ohlc whose r8 red is now closed) AND the r9 judge
-    # re-ran the ENTIRE 273-query oracle gate end-to-end (0
-    # failures, 0 vacuous), so all demotees carry judge-reproduced
-    # evidence on top of their driver rows.
-    "timeseries_ohlc_hourly",
-    "olap_disjunctive_promo_revenue",
-    "olap_forecast_revenue_change",
-    "olap_important_part_value",
-    "olap_late_shipment_priority",
-    "olap_single_late_supplier",
-    "olap_supplier_part_counts",
-    "olap_trade_volume_pairs",
-    "text_ccnet_buckets",
-    "text_keyword_chi2",
-    "text_lang_fertility",
-    "text_langid_confusion",
-    "text_ngram_novelty",
-    "text_pmi_collocations",
-    "dedup_bloom_prefilter_incremental",
-    "dedup_canonical_keep_best",
-    "dedup_distinct_pairs",
-    "dedup_global_lines",
-    "dedup_semantic_recall",
-    "join_asof_nearest_run",
-    "join_fuzzy_blocked",
-    "join_lateral_topk",
-    "join_null_safe",
-    "similarity_ivf_incremental",
-    "similarity_ivf_range_search",
-    "similarity_ivfpq_residual_topk",
-    "similarity_mmr_rerank",
-    "stats_ab_conversion",
-    "stats_autocorr_daily",
-    "stats_group_variance",
-    "stats_regression_daily_trend",
-    "embedding_quantize_int8",
-    "embedding_quantized_topk_recall",
-    "embedding_trimmed_centroids",
-    "timeseries_cusum_total",
-    "timeseries_ewma_daily",
-    "curation_pipeline_v4",
-    "curation_prototypes",
-    "agg_unpivot_metrics",
-    "analytics_user_concentration",
-    "clean_winsorize_values",
-    "governance_stats_drift",
-    "json_variant_stats",
-    "sample_stratified_exact",
-    "setop_multiset_ops",
-    "sketch_hll_grouped_merge",
-    "sql_frontend_daily_mix",
-    "storage_jsonl_export_roundtrip",
-    "streaming_static_enrich_cohort",
-    "window_value_family",
-    # r11 demotions: the entire r10 head — every one of its 50 names is
-    # r10-driver-green (CORRECTNESS_r10 50/50), i.e. the FRESHEST
-    # evidence in the ledger, so none qualifies for the r11
-    # staleness-bounded head. Mechanisms stay covered by the full local
-    # gate and, where §2-critical, by the must-stay-registered list in
-    # tests/test_pipeline.py.
-    "similarity_dbscan_clusters",
-    "text_rouge2_contamination",
-    "multimodal_frame_sample",
-    "similarity_matryoshka_recall",
-    "graph_common_neighbors",
-    "graph_clustering_coefficient",
-    "curation_pipeline_v6",
-    "sql_recursive_event_chains",
-    "basket_frequent_itemsets",
-    "join_left_unmatched",
-    "setop_customer_cohorts",
-    "daily_event_stats",
-    "fx_case_mapping",
-    "round_nullif_guard",
-    "sketch_binned_quantiles",
-    "sample_weighted_by_quality",
-    "stats_analyze_columns",
-    "dedup_cluster_sizes",
-    "embedding_contrastive_pairs",
-    "dedup_similarity_histogram",
-    "clean_mad_outliers",
-    "curation_mixture_temperature",
-    "trending_types_weekly",
-    "analytics_activity_streaks",
-    "agg_quantiles_interpolated",
-    "governance_bot_regularity",
-    "events_top_paths",
-    "curation_loss_mask_spans",
-    "curation_pipeline_v7",
-    "curation_packing_efficiency",
-    "curation_dedup_aware_mixture",
-    "text_pii_scrub",
-    "governance_pii_exposure",
-    "curation_contamination_matrix",
-    "agg_cube_type_weekday",
-    "agg_duplicate_groups",
-    "agg_grouping_sets_mix",
-    "agg_orders_by_priority",
-    "dedup_minhash_signatures",
-    "embedding_label_centroids",
-    "kpi_monthly_trend",
-    "quality_whole_table_check",
-    "split_train_holdout",
-    "text_metrics",
-    "topk_docs_per_source",
-    "window_day_over_day_delta",
-    "window_sliding_hourly",
-    "embedding_near_duplicates",
-    "funnel_view_click_purchase",
-    "knn_label_prediction",
-]
 
-# Round-12 slate + the exact driver sample, pinned. The head is an
-# explicit list (r5 lesson: registration-order inference broke when a
-# new query registered mid-head): exactly these 50, in this order.
-# Composition (staleness-bounded rotation, r11 verdict item 1): the
-# round-12 additions with NO driver row (inserted at the top as they
-# register this round, each displacing the LAST r7 re-pin below so the
-# list stays at exactly 50), then the OLDEST-verified names by
-# (last driver-green round, name) under the CORRECTNESS_r01-r11 union:
-# the 3 remaining r5 greens, all 34 r6 greens, and the alphabetically
-# first r7 greens filling to 50. The executable source of truth is
-# tests/test_pipeline.py::test_driver_sample_head_slate_invariants
-# (capped at _SLATE_LEDGER_ROUND so a post-close driver ledger cannot
-# turn a fresh clone red — r11 verdict "what's wrong" #1) plus the
-# UNCAPPED rotation alarm tools/check_head_rotation.py that the round
-# protocol runs instead. Green across this head drops max staleness
-# from 7 rounds (r5 names) to 6 (the remaining r7 cohort).
-
-# The newest CORRECTNESS round this slate was computed FROM (the
-# ledgers on disk at rotation time). The pytest invariant recomputes
-# the slate from ledgers <= this round only; newer ledgers landing
-# post-close trip tools/check_head_rotation.py, not the test suite.
-_SLATE_LEDGER_ROUND = 11
-
-_DRIVER_SAMPLE_HEAD = [
-    # round-12 additions (never driver-verified) go here as they land
-    "text_token_decontaminate_fast",
-    "curation_release_gate_incremental",
-    "text_leakage_attribution",
-    "governance_dataset_card",
-    # oldest-verified re-pins: r5 (3)
-    "text_bpe_pair_stats",
-    "text_lm_surprise",
-    "text_url_canonicalize",
-    # r6 (34)
-    "curation_dsir_affinity",
-    "curation_mixture_sample",
-    "curation_pipeline_v3",
-    "dedup_cc_incremental",
-    "dedup_cluster_density",
-    "dedup_containment_pairs",
-    "dedup_exact_substrings",
-    "dedup_minhash_incremental",
-    "dedup_minhash_incremental_pruned",
-    "dedup_semantic",
-    "dedup_semantic_incremental",
-    "governance_duplicate_payments",
-    "join_asof_event_run",
-    "multimodal_media_features",
-    "olap_dominant_supply_share",
-    "olap_min_cost_supplier",
-    "olap_tier_migration_matrix",
-    "pivot_status_by_priority",
-    "similarity_ivfpq_topk",
-    "similarity_pq_recall",
-    "similarity_pq_topk",
-    "sketch_bloom_membership",
-    "split_leakage_safe",
-    "stats_mann_whitney_u",
-    "stats_runs_test",
-    "storage_bucketed_join_roundtrip",
-    "storage_schema_evolution_roundtrip",
-    "storage_zorder_scan_roundtrip",
-    "streaming_stateful_sessions",
-    "text_boilerplate_lines",
-    "text_bpe_encode",
-    "text_decontaminate",
-    "text_pack_sequences",
-    "text_quality_score",
-    # r7 (alphabetically first, filling to 50; each r12 addition above
-    # displaces the LAST name in this block)
-    "agg_pct_scalar_subquery",
-    "dedup_kcore_survivors",
-    "dedup_latest_per_key",
-    "dim_date_attributes",
-    "embedding_covariance_exact",
-    "entity_resolution_clusters",
-    "fact_build_star",
-    "governance_functional_deps",
-    "graph_khop_reachability",
-]
-
-
-def _reorder_for_driver_sample() -> None:
-    # Exact head slate first (in slate order), then every other entry in
-    # registration order, then the documented tail. A name in both lists
-    # lands in the head; the tail list is the demotion ledger.
-    for name in _DRIVER_SAMPLE_TAIL:
-        if name in _DRIVER_SAMPLE_HEAD:
-            continue
-        QUERIES[name] = QUERIES.pop(name)
-        if name in ORACLES:
-            ORACLES[name] = ORACLES.pop(name)
-    head_q = {n: QUERIES.pop(n) for n in _DRIVER_SAMPLE_HEAD}
-    rest_q = dict(QUERIES)
-    QUERIES.clear()
-    QUERIES.update(head_q)
-    QUERIES.update(rest_q)
-    head_o = {
-        n: ORACLES.pop(n) for n in _DRIVER_SAMPLE_HEAD if n in ORACLES
-    }
-    rest_o = dict(ORACLES)
-    ORACLES.clear()
-    ORACLES.update(head_o)
-    ORACLES.update(rest_o)
-
-
-_reorder_for_driver_sample()
+# Moving every name to the end in the computed order leaves both dicts in
+# that order. The ledgers sit beside the package directory.
+for _name in driver_sample_order(
+    list(QUERIES),
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+):
+    QUERIES[_name] = QUERIES.pop(_name)
+    if _name in ORACLES:
+        ORACLES[_name] = ORACLES.pop(_name)
+del _name

@@ -162,6 +162,9 @@ def stream_facts_from_bronze(
     pipeline, the standard split between dim maintenance and fact
     streaming."""
     from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.operators.upsert import (
+        SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
+    )
     from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
     from _event_intelligence_data_warehouse_spark.plans.staging import (
         stage_events,
@@ -195,9 +198,13 @@ def stream_facts_from_bronze(
             ))
             # Log what actually LOADS (post-cleanse/dedup fact rows),
             # not the raw batch size; the persist means the count and
-            # the upsert share one computation of the build.
+            # the upsert share one computation of the build. ``n`` also
+            # bounds the batch's new keys, so it picks the surrogate-key
+            # regime without the upsert's own size probe.
             n = fact_rows.count()
-            facts_mod.upsert_facts_partitioned(wh, fact_rows)
+            facts_mod.upsert_facts_partitioned(
+                wh, fact_rows, bulk=n > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
+            )
             cache.release_all()
         except Exception as exc:
             bronze._log(

@@ -1,10 +1,21 @@
 """End-to-end pipeline tests (SURVEY.md §5): double-run idempotency, dirty
-data through the quality gate, KPI view shapes."""
+data through the quality gate, KPI view shapes; plus the ordering that
+picks which 50 registered queries the driver re-verifies."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
+
 from pyspark.sql import functions as F
 
+from _event_intelligence_data_warehouse_spark.contract import (
+    ORACLES,
+    QUERIES,
+    driver_sample_order,
+)
 from _event_intelligence_data_warehouse_spark.plans import pipeline
 
 
@@ -162,31 +173,33 @@ def test_pipeline_end_to_end_in_manifest_mode(spark, tmp_path):
     assert wh._current_version("fact_events") == v_before
 
 
-def test_driver_sample_head_slate_invariants():
-    """The driver verifies the FIRST 50 registry entries; the explicit
-    head slate must stay exactly 50 known names, duplicate-free, first
-    in registration order, and keep the §2-critical warehouse rows
-    resident (the r6 regression this guards: a new query registering
-    mid-head silently pushed the S4 covering row out of the sample)."""
-    from _event_intelligence_data_warehouse_spark.contract import (
-        _DRIVER_SAMPLE_HEAD,
-        ORACLES,
-        QUERIES,
-    )
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    assert len(_DRIVER_SAMPLE_HEAD) == 50
-    assert len(set(_DRIVER_SAMPLE_HEAD)) == 50
-    assert list(QUERIES)[:50] == _DRIVER_SAMPLE_HEAD
-    assert list(ORACLES)[:50] == _DRIVER_SAMPLE_HEAD
-    missing = [n for n in _DRIVER_SAMPLE_HEAD if n not in QUERIES]
-    assert not missing, f"head slate names unregistered: {missing}"
-    # r8 policy change: the head rotated WHOLESALE onto 50
-    # never-driver-verified names (r7 verdict item 1 — the 115-query
-    # never-verified tail was the biggest evidence gap, and the r7
-    # judge re-ran the FULL 262-query gate, so the §2-critical rows
-    # carry judge-reproduced evidence without a head slot). The §2
-    # rows must still be registered with full oracles so any future
-    # head can re-pin them and the full local gate keeps checking them.
+
+def _reference_head(names, ledger_dir):
+    """The driver-sample rule, stated here independently of
+    contract.driver_sample_order: names with no ledger row first, then
+    the rest by (last round with a row, name), 50 in all."""
+    last = {}
+    for path in glob.glob(os.path.join(ledger_dir, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
+        with open(path) as f:
+            for name in json.load(f):
+                last[name] = max(last.get(name, 0), rnd)
+    never = [n for n in names if n not in last]
+    by_age = sorted((n for n in names if n in last), key=lambda n: (last[n], n))
+    return (never + by_age)[:50]
+
+
+def test_driver_sample_head_slate_invariants():
+    """The driver verifies the FIRST 50 registry entries: they must be 50
+    distinct names, the same in QUERIES and ORACLES, and exactly the
+    stalest-verified names under the committed CORRECTNESS ledgers; the
+    §2-critical warehouse rows must stay registered with oracles so the
+    full local gate keeps checking them whether or not they are sampled."""
+    head = list(QUERIES)[:50]
+    assert len(set(head)) == 50
+    assert list(ORACLES)[:50] == head
     for must in (
         "json_extract_props",        # S4
         "staging_cleanse",           # P1-P10 / V1
@@ -201,52 +214,74 @@ def test_driver_sample_head_slate_invariants():
         assert must in QUERIES and must in ORACLES, (
             f"{must} lost its registration/oracle"
         )
-    # And the head must actually BE the slate it claims (r10 verdict
-    # item 6, staleness-bounded rotation; r10 advice item 3 made this
-    # executable check the source of truth over any comment
-    # arithmetic): every name with NO driver row across the CORRECTNESS
-    # ledger AS OF THE SLATE'S COMPUTATION ROUND (the round's new
-    # queries), plus OLDEST-verified re-pins filling to 50 — exactly
-    # the names whose most recent driver green is the stalest, ordered
-    # by (last green round, name). For r12 that is the r12 additions +
-    # 3 r5 + 34 r6 + the alphabetically first r7 greens.
-    #
-    # The glob is CAPPED at _SLATE_LEDGER_ROUND (r11 verdict item 1 /
-    # advice item 1): the driver drops a fresh CORRECTNESS ledger after
-    # every round closes, and an uncapped recomputation flips this test
-    # red on a clean clone the moment that file lands — rotation-due is
-    # an operational alarm, not a product bug, and it lives in
-    # tools/check_head_rotation.py (uncapped), which the round protocol
-    # runs at round start.
-    import glob
-    import json as _json
-    import re as _re
+    assert head == _reference_head(list(QUERIES), REPO)
 
-    from _event_intelligence_data_warehouse_spark.contract import (
-        _SLATE_LEDGER_ROUND,
-    )
 
-    last_round: dict[str, int] = {}
-    # numeric round parse: a r0[1-9] glob silently drops r10+ ledgers
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        rnd = int(_re.search(r"r(\d+)", f).group(1))
-        if rnd > _SLATE_LEDGER_ROUND:
-            continue
-        for k in _json.load(open(f)):
-            last_round[k] = max(last_round.get(k, 0), rnd)
-    never = [n for n in QUERIES if n not in last_round]
-    missing_never = [n for n in never if n not in _DRIVER_SAMPLE_HEAD]
-    assert not missing_never, (
-        f"never-driver-verified names left out of the head: "
-        f"{missing_never}"
+def _write_ledger(ledger_dir, tag, names):
+    rows = {n: {"rows_match": True, "hash_match": True} for n in names}
+    (ledger_dir / f"CORRECTNESS_r{tag}.json").write_text(json.dumps(rows))
+
+
+def test_driver_sample_order_on_synthetic_ledgers(tmp_path):
+    names = ["c", "a", "b", "x", "y"]
+    # no ledgers: plain registration order
+    assert driver_sample_order(names, str(tmp_path)) == names
+    # never-verified first in registration order, then oldest-verified;
+    # ledger rows for unregistered names are ignored
+    _write_ledger(tmp_path, "01", ["y", "ghost"])
+    _write_ledger(tmp_path, "02", ["x"])
+    assert driver_sample_order(names, str(tmp_path)) == [
+        "c", "a", "b", "y", "x",
+    ]
+
+
+def test_driver_sample_order_parses_round_numbers(tmp_path):
+    """r10 is newer than r9, both unpadded and zero-padded."""
+    _write_ledger(tmp_path, "9", ["a", "b"])
+    _write_ledger(tmp_path, "10", ["a", "c"])
+    assert driver_sample_order(["a", "b", "c"], str(tmp_path)) == [
+        "b", "a", "c",
+    ]
+    _write_ledger(tmp_path, "08", ["c"])
+    _write_ledger(tmp_path, "11", ["b"])
+    assert driver_sample_order(["a", "b", "c"], str(tmp_path)) == [
+        "a", "c", "b",
+    ]
+
+
+def test_driver_sample_order_breaks_ties_by_name(tmp_path):
+    _write_ledger(tmp_path, "01", ["zeta", "alpha", "mid"])
+    assert driver_sample_order(["zeta", "alpha", "mid"], str(tmp_path)) == [
+        "alpha", "mid", "zeta",
+    ]
+
+
+def test_driver_sample_order_caps_head_at_50(tmp_path):
+    """40 never-verified names plus the 10 oldest fill the head; the
+    other verified names follow in registration order."""
+    names = [f"q{i:02d}" for i in range(59, -1, -1)]  # q59 .. q00
+    _write_ledger(tmp_path, "02", names[:10])
+    _write_ledger(tmp_path, "01", names[10:20])
+    got = driver_sample_order(names, str(tmp_path))
+    assert got[:50] == names[20:] + sorted(names[10:20])
+    assert got[50:] == names[:10]
+
+
+def test_new_ledger_rotates_head_without_failing(tmp_path):
+    """A ledger landing after a round closes covers the current head; the
+    computed head then moves wholly onto the next-stalest names and every
+    invariant still holds, so a fresh clone holding it stays green."""
+    ledgers = glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
+    for path in ledgers:
+        shutil.copy(path, tmp_path)
+    nxt = 1 + max(
+        int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
+        for p in ledgers
     )
-    repins = [n for n in _DRIVER_SAMPLE_HEAD if n in last_round]
-    want_repins = sorted(
-        (n for n in QUERIES if n in last_round),
-        key=lambda n: (last_round[n], n),
-    )[: 50 - len(never)]
-    assert sorted(repins) == sorted(want_repins), (
-        "re-pins must be exactly the oldest-driver-verified names: "
-        f"extra={sorted(set(repins) - set(want_repins))} "
-        f"missing={sorted(set(want_repins) - set(repins))}"
-    )
+    head = list(QUERIES)[:50]
+    _write_ledger(tmp_path, str(nxt), head)
+
+    got = driver_sample_order(list(QUERIES), str(tmp_path))
+    assert sorted(got) == sorted(QUERIES)
+    assert not set(got[:50]) & set(head)
+    assert got[:50] == _reference_head(list(QUERIES), str(tmp_path))

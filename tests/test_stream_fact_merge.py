@@ -58,6 +58,36 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
     assert sum(r["records_loaded"] for r in stream_runs) == n0 + 30
 
 
+def test_stream_fact_merge_skips_surrogate_key_probe(
+    spark, tmp_path, monkeypatch
+):
+    """Each micro-batch already counts its fact rows, an upper bound on
+    its new keys, so it must pass the surrogate-key regime down instead
+    of letting assign_surrogate_keys probe (persist + count) per batch."""
+    from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
+
+    whdir = str(tmp_path / "wh")
+    args = pipeline.parse_args(
+        ["--warehouse-dir", whdir, "--source", "csv", "--generate-sample",
+         "--sample-rows", "40"]
+    )
+    pipeline.run_pipeline(spark, whdir, args)
+    wh = Warehouse(spark, whdir)
+
+    real_assign = facts_mod.assign_surrogate_keys
+    seen = []
+
+    def spy(*a, **kw):
+        seen.append(kw.get("bulk"))
+        return real_assign(*a, **kw)
+
+    monkeypatch.setattr(facts_mod, "assign_surrogate_keys", spy)
+    jobs.stream_facts_from_bronze(spark, wh, str(tmp_path / "ckpt"))
+    assert seen, "the drain never reached the fact upsert"
+    assert None not in seen, f"surrogate-key probe ran: bulk={seen}"
+    assert wh.read("fact_events").count() == 40
+
+
 def test_stream_fact_merge_crash_restart_is_exactly_once(
     spark, tmp_path, monkeypatch
 ):

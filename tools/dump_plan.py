@@ -1,8 +1,8 @@
-"""Dump .explain("formatted") for named queries into plans/r12/.
+"""Dump .explain("formatted") for named queries into a directory.
 
-Usage: python tools/dump_plan_r12.py before|after query [query ...]
+Usage: python tools/dump_plan.py <out_dir> before|after query [query ...]
 
-Writes plans/r12/<query>_<tag>.txt with the FORMATTED physical plan of
+Writes <out_dir>/<query>_<tag>.txt with the FORMATTED physical plan of
 the DataFrame the contract query returns (the driver-checked result
 frame). Queries whose construction runs eager work (adaptive counts,
 export writes) pay it here too — the dump reflects exactly what the
@@ -12,19 +12,26 @@ bench times. sf dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
 import os
 import sys
 
+if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+    sys.exit(__doc__)
+
 # SPARK_GRAFT_REPO lets the before/after pair come from two checkouts
-# (worktree at the pre-change commit vs the working tree) while both
-# write into the repo's plans/r12/.
-sys.path.insert(0, os.environ.get("SPARK_GRAFT_REPO", "/root/repo"))
+# (a clone at the pre-change commit vs the working tree) while both
+# write into the same out_dir.
+sys.path.insert(
+    0,
+    os.environ.get(
+        "SPARK_GRAFT_REPO",
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ),
+)
 
 from _event_intelligence_data_warehouse_spark import cache  # noqa: E402
 from _event_intelligence_data_warehouse_spark.contract import QUERIES  # noqa: E402
 from _event_intelligence_data_warehouse_spark.session import get_spark  # noqa: E402
 
-tag = sys.argv[1]
-names = sys.argv[2:]
+out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-out_dir = os.path.join("/root/repo", "plans", "r12")
 os.makedirs(out_dir, exist_ok=True)
 
 spark = get_spark("eidw-plan-dump")
