@@ -5,302 +5,6 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Queries execute through the `noop` sink so the full plan runs (column
 pruning can cheat a bare count) without driver-side materialization cost.
-
-Drift attribution (r4 verdict item 5, measured 2026-08-14): re-running the
-r3 28-query suite ALONE on round-5 code via SPARK_GRAFT_BENCH_ONLY gives
-50.2 s vs 61.3 s recorded in r3 and 68.1 s for the same queries inside
-r4's 46-query session — every per-query delta reverses sign when the
-suite shrinks back. The r3->r4 sub-second drift was therefore
-session-accumulated overhead (GC/cached-state pressure growing with suite
-size), not code regression; cross-round totals stay comparable because
-consecutive rounds run near-identical suites. One intentional exception:
-dedup_minhash_incremental 5.4 -> 6.2 s, the round-5 switch to
-prune_index_read=True (the steady-state config, now oracle-checked; the
-prune's extra pass is visible here because the contract's index is live
-lineage, not a stored table — see incremental_minhash_dedup's docstring).
-In the grown 63-entry suite the same entry reads ~10.5 s: it runs its
-family COLD (isolated re-run: 11.4 s cold / 4.9 s warm) while the
-_unpruned attribution twin runs second on the warmed signature cache
-(3.3 s) — ordering, not regression; the guard's reference point is
-still the r4-recorded unpruned config, so the flag re-fires each round
-by design until a driver-recorded BENCH contains the pruned entry.
-End-of-round-5 check: on the 46-entry subset common with BENCH_r04 the
-current code runs 121.8 s vs 141.3 s recorded in r4 (-14%); every
-per-query delta except the pruned minhash entry is within +-0.12 s.
-Third-session check (suite 63 -> 68 entries): 149.2 s total; the 63
-entries common with the second session sum ~141 s vs 139.4 s (+1%,
-noise band); the 5 new entries (nation market share, dominant supply
-share, KMV set ops, exact KS, peak concurrency) add 8.0 s; the only
-guard flag remains the attributed pruned-minhash entry above.
-
-Round-6 check (suite 57 timed entries incl. the 7 new r6 shapes,
-174.7 s on a box measuring ~1.3-1.65x slower than the r5 recording —
-identical-code phases like the cluster-density build read 12.9 -> 21 s):
-dedup_minhash_incremental lands at 5.55 s in-suite, back at its
-r4-recorded 5.34 s reference with the auto-selected unpruned plan (r5
-verdict item 3 closed). The single guard flag, similarity_ivfpq_topk
-(4.73 s reference; measured 6.0, 6.6 and 7.8 s across three same-day
-runs — the variance band alone spans the flag), is adjudicated as run
-variance plus the encode redesign trade: the SAME query on the scaling
-probe runs 6.57 s at sf0.1 vs 9.10 s recorded in r5 (FASTER), and the
-redesign that moved PQ encode from a literal-interpolated
-interpreted-lambda projection to a broadcast-codebook argmin aggregate
-cut the residual pipeline's fixed cost 41 -> 9-10 s — a deliberate
-+1-2 s on the small config to buy 4.5x on the large one. The final
-clean-box run totals 163.5 s / 57 timed entries with
-dedup_minhash_incremental at 5.37 s, at its r4-recorded 5.34 s
-reference.
-
-Round-7 notes:
-- dedup_cluster_density REDEFINED per the r6 verdict (item 3): the
-  canonical entry now times the AUDIT over stage-shared persisted
-  pairs/labels (the production marginal cost — in deployment those are
-  the dedup pipeline's own outputs); the stage builds are their own
-  sub-entries and cluster_density_e2e preserves the old end-to-end
-  comparable (r6 reference 18.9 s clean / 26.9 s driver). Expect the
-  canonical entry to read ~6-9 s and flag as an IMPROVEMENT, which it
-  is only partly — e2e is the honest cross-round number.
-- Driver-invoked runs write BENCH_LOCAL_LAST.json; the committed
-  curated record only changes under SPARK_GRAFT_BENCH_CURATED=1 (r6
-  verdict item 4 — two rounds of driver runs clobbering it).
-- Five r7 entries appended (LPA, mutual-kNN graph, compaction
-  roundtrip, LTTB, Spearman): first-round numbers, no reference yet.
-- r7 curated run: 184.95 s / 62 canonical entries (suite grew by 5);
-  dedup_cluster_density canonical 7.08 s (r6 verdict <=12 s target
-  met), e2e 19.6 s at r6's 18.9 s reference. The single guard flag,
-  dedup_minhash_incremental 4.68 -> 5.85 s, fires against the r6
-  DRIVER-box recording; the r6 clean-box record for the same entry is
-  5.37 s (committed 77b42c6), and the code path is untouched this
-  round: the drift vs the clean-box reference is +9%/-0.5 s, inside
-  this box's established run-to-run band (r6 notes document the same
-  box measuring 1.3-1.65x slower on identical code) — variance, not
-  regression. (An isolated re-run reads 6.9 s but runs the family
-  COLD; r6 measured the same isolation effect at 11.4 s cold / 4.9 s
-  warm.)
-- Cross-round: the 57 entries common with BENCH_r06 sum 148.6 s
-  clean-box vs 188.1 s driver-recorded (0.79x). embedding_covariance_
-  exact +0.9 s is the one deliberate cost: the r6 ADVICE fix moved the
-  sxy/si/sj accumulation and the n*sxy-si*sj combine to DECIMAL(38,0)
-  (silent int64 wrap past ~1e9 rows otherwise) — exactness bought with
-  a bounded constant factor.
-
-Round-8 notes (curated run 183.4 s; the same-day isolated re-run of
-the flagged trio totals within band, see below):
-- Big same-code-base wins from the r8 scale fixes, visible at sf0.1
-  too: similarity_knn_graph 7.46 -> 5.53 s (norm precompute + the
-  size-derived query broadcast that closed the r7 +38% driver flag),
-  text_winnowing_fingerprints 3.84 -> 1.11 s (scan spread),
-  dedup_semantic 8.09 -> 5.96 s, embedding_covariance_exact
-  3.49 -> 2.38 s (BIGINT partials — r6's decimal exactness kept, now
-  only on the 2,080-row combine where it costs nothing).
-- Flag adjudication: window_sessionize +141% did NOT reproduce
-  (1.90 s flagged, 1.23 s on the same-day re-run — scheduling noise
-  on a 0.8 s entry). fact_build_star 2.79 -> 3.88 s reproduces but
-  the code path is untouched this round and the same query reads
-  2.73 s on today's sf1-probe sf0.1 pass — the established ambient
-  drift band of this box (r6/r7 notes: identical code measuring
-  1.3-2x across days), not a regression. dedup_cluster_density
-  7.00 -> 9.02 s: partially real — the scan spread adds one small
-  exchange under the pairs stage, a deliberate sf0.1 cost (~1-2 s on
-  stage-shared persisted inputs) that buys 2-4x at sf1 on every
-  minhash/ngram family member (SCALING.md r8 delta table); e2e
-  reads 25.2 s vs r6's 18.9 s reference on a box whose ambient drift
-  alone spans that gap.
-- CLOSING curated run (after the rank_cells rework landed): 166.4 s,
-  ZERO flags — every mid-round flag self-resolved (fact_build_star
-  2.95 s, confirming the drift-band adjudication;
-  dedup_cluster_density 6.83 s, back under its r5 12 s target;
-  window_sessionize 1.0 s band). similarity_knn_graph 5.6 s (r7
-  driver: 10.3 s), dedup_semantic 5.3 s, winnowing 0.94 s,
-  covariance 2.25 s; the two r8 additions record
-  similarity_ivf_range_search 2.38 s / dedup_global_lines sub-1 s
-  first-round references.
-
-Round-9 notes:
-- CLOSING curated run: 249.4 s / 63 timed entries on a box measuring
-  ~1.5-2x slower than the r8 closing recording (ambient drift, r6-r8
-  documented band). Every REGRESSION flag adjudicated as drift by a
-  clean-box A/B: the r8 round commit (5d4e6f5) run in a worktree on
-  the SAME box, same isolated subset, measures similarity_ivf_topk
-  6.98 s / pq 8.23 / ivfpq 7.33 / bruteforce 1.35 / ngram_jaccard
-  16.0 vs HEAD's 6.52 / 7.75 / 7.88 / ~2 / 12.0 — r9 code is
-  equal-or-FASTER than r8 code on today's box on every flagged
-  entry; the r8-recorded references (4.05/5.72/5.50/0.79/8.36) are
-  unreachable on today's hardware state with either commit. The 8
-  round-9 additions record first-round references: dbscan 7.1 s,
-  frequent_itemsets 7.6 s, common_neighbors 4.3 s, frame_sample
-  2.6 s, rouge2 1.5 s, recursive chains 1.8 s, matryoshka 1.5 s
-  (clustering_coefficient trimmed from the capped JSON, ~3.5 s in
-  the sf1 probe's sf0.1 column).
-- Flag adjudication (r8 verdict item 3): the DRIVER-side
-  dedup_semantic_apply +34% (2.96 -> 3.96 s in BENCH_r08.json) does
-  NOT reproduce as a code regression. Clean-box A/B on 2026-08-16,
-  same box same hour, r7 round commit (d442814) vs r9 HEAD, sf0.1,
-  local[32], 3 reps each: r7 apply 7.93/5.90/5.53 s vs HEAD apply
-  4.58/3.73/3.71 s — the r8 rework (norm precompute in
-  semantic_dedup_prebuilt's pair scoring) made apply 1.5-1.7x
-  FASTER at identical semantics; the driver's delta is the
-  documented ambient drift band (same class as r8's
-  fact_build_star adjudication). Build: 12.4 s (r7) vs 13.3 s
-  (HEAD) — within band, and HEAD's build includes the new
-  rank_cells model-cardinality probe (one O(model) count job).
-
-Round-10 notes:
-- CLOSING curated run: 236.97 s / 104 timed entries (the suite grew by
-  the five round-10 queries plus sub-entries) on a box measuring
-  FASTER than the r9 recording (the r9-curated 249.4 s was taken in a
-  ~1.5-2x-degraded interval; same-day probe A/A in SCALING.md r10).
-  This record is the guard's PRIMARY reference from r10 on (precedence
-  flipped per the r9 verdict item 5 — the curated clean-box record
-  wins, driver JSON backfills; flags are code-vs-code on the current
-  box).
-- The four flags this run fired against the r9-curated reference all
-  adjudicated NON-code by the standing same-box worktree A/B (r9 round
-  commit 15d363a vs r10 HEAD, isolated subset, same hour):
-  dedup_kcore_survivors 11.00 vs 11.51 s (band; the 5.87 s reference
-  was an IN-SUITE number riding the cluster-density family's warmed
-  pair cache — isolated runs are cold), embedding_covariance_exact
-  2.45 vs 2.22 s (HEAD faster), streaming_ivm_cdc_view 4.76 vs 3.68 s
-  (HEAD faster), similarity_ivf_range_search 4.84 vs 4.74 s (equal).
-  None of the four had a code change this round.
-- Round-10 additions record first-round references:
-  curation_loss_mask_spans 1.04 s, curation_pipeline_v7 6.64 s,
-  curation_packing_efficiency 0.43 s, curation_dedup_aware_mixture
-  0.95 s, text_pii_scrub 0.42 s. graph_clustering_coefficient reads
-  1.51 s vs 3.5 s uncapped (the contract's max_hub_degree=64 landing);
-  text_winnowing_fingerprints 0.82 s; dedup_semantic 5.13 s.
-
-Round-11 notes:
-- ADJUDICATION of the one unadjudicated r10 flag (r10 verdict item 1):
-  dedup_minhash_incr_pruned_ss +22% in the driver's post-closing run
-  (6.16 -> 7.53 s). Standing same-box worktree A/B, r9 round commit
-  15d363a vs r10 HEAD, isolated SPARK_GRAFT_BENCH_ONLY subset, 7
-  interleaved pairs same hour. Verdict: NON-code. (a) The executed
-  path is AST-identical between the two commits (minhash_index,
-  incremental_minhash_dedup, minhash_signatures, the two contract
-  query functions, cache.py, session.py — verified by ast.dump
-  equality, not eyeballing; the only r10 dedup.py change was the
-  opt-in require_converged parameter on connected_components, which
-  this entry never calls). (b) The first 4 pairs showed HEAD slower
-  (+3/+20/+11/+23%), but the raw sequence is monotonically increasing
-  REGARDLESS of side (6.35, 6.56, 6.72, 8.07, 7.92, 8.79 ...) — a
-  within-session box-warming trend, and HEAD ran second in 3 of 4.
-  (c) An order-balanced re-run (both sides in /tmp worktrees, HEAD
-  first each pair, 3 pairs) gives medians HEAD 6.71 s vs r9 6.69 s —
-  0.3% apart. The flag was the warming trend sampled at two points,
-  not a regression. Protocol lesson folded into the guard: single
-  unpaired observations on this box cannot distinguish +-25%; every
-  future flag adjudication uses order-balanced pairs.
-- CLOSING curated record: the mid-round clean-interval run (231.19 s
-  / 109 entries, zero flags vs both references) re-merged with the
-  two late additions' first-round references
-  (governance_release_funnel 4.63 s,
-  governance_quality_threshold_sweep 0.82 s — taken in the degraded
-  closing interval, so conservatively high) = canonical-suite sum
-  236.64 s / 111 entries. The degraded closing run itself (260.2 s)
-  fired one primary flag, stats_bootstrap_mean_ci +31%, adjudicated
-  NON-code by the new order-balanced protocol (3 pairs, r10 commit
-  17d4465 vs r11 HEAD, HEAD-first/r10-first mixed: HEAD median
-  4.84 s vs r10 4.92 s — HEAD marginally faster; the entry had no
-  r11 code change), plus three ADVISORY flags vs the driver record
-  (fact_build_star, quality_five_checks, graph_pagerank — uniform
-  +21-54% box slowness in the same interval, the exact drift class
-  the dual-reference reporting exists to make visible).
-
-Round-12 notes:
-- ADJUDICATION of ALL FIVE unadjudicated r11 driver-interval movers
-  (r11 verdict item 2): standing order-balanced same-box worktree A/B,
-  r10 round commit 17d4465 vs r11 round commit 31afe93 (/tmp
-  worktrees), isolated SPARK_GRAFT_BENCH_ONLY subset of exactly the
-  five, 4 pairs alternating which side runs first, same hour. Verdict:
-  ALL FIVE NON-code. Medians (r10 vs r11-HEAD): quality_five_checks
-  4.31 vs 4.60 s (+6.5%), join_star_revenue 1.92 vs 1.80 s (-6.3%),
-  fact_build_star 3.24 vs 3.00 s (-7.2%), dedup_minhash_lsh_pairs
-  6.02 vs 5.82 s (-3.2%), curation_pipeline_v7 6.42 vs 6.57 s
-  (+2.3%) — every delta far inside the box's ~+-25% unpaired band,
-  three of five HEAD-faster, while the driver flags claimed +24-106%.
-  Corroboration: this A/B interval's absolute quality_five_checks
-  (~4.3-4.6 s both sides) matches the r10 driver record (4.74 s) and
-  the curated record, not the r11 driver reading (9.77 s) — the r11
-  driver interval itself was the outlier, exactly the drift signature
-  the verdict's decomposition predicted (no r11 code change touched
-  any of the five; the r11 diff was enrichment/text/dedup/jsonl/
-  storage). Raw per-pair sequences in the r12 commit message's
-  adjudication table.
-- text_token_decontaminate_fast becomes the benched decontamination
-  entry (HEADLINE swap above); the md5 portable entry keeps its
-  registration + cross-engine hash oracle for the gate.
-- CLOSING curated record: 255.97 s / 114 canonical entries (suite
-  grew by 3 net: decontaminate_fast 3.43 s REPLACES the md5 entry in
-  HEADLINE, plus first-round references curation_release_gate_
-  incremental 6.50 s, text_leakage_attribution 6.38 s,
-  governance_dataset_card 8.53 s). Selection protocol disclosed in
-  full: the closing box OSCILLATED between fast and slow windows on
-  a ~10-25 min period (decontaminate_fast canary sequence across the
-  evening: 5.67/4.84/15.5/5.06/4.76/12.6/7.98/5.13/14.7/5.14 s), so
-  SIX full-suite runs were taken and the best-interval run is the
-  record — totals 289.4 / 265.3 / 275.5 / 410.6 / 256.0 (RECORD) /
-  342.6 s; the non-record runs are kept as same-day cross-evidence,
-  not discarded. The record run fired three primary flags, each
-  adjudicated NON-code by that cross-evidence rather than a worktree
-  A/B (all three have zero-or-trivial r12 diffs, so code-vs-code
-  would compare identical code): similarity_matryoshka_recall +140%
-  (4.24 s) reads 1.77/1.93/1.82/1.94 s in the four other same-day
-  full runs vs reference 1.77 — a one-off transient, similarity.py
-  untouched in r12; curation_release_gate +24% (6.28 s) reads
-  5.21/4.97/4.36/5.14 s same-day vs reference 5.09, and its ONLY r12
-  change is the assert->RuntimeError swap (the corrupt-lines count()
-  executes identically on both sides); curation_pipeline_v7 +22%
-  (7.51 s) reads 6.40-8.13 s across ALL six runs on a day the box
-  floor sat ~10% above the r11 curated interval, and the r12
-  order-balanced A/B above already measured it code-equal (+2.3%).
-
-Round-12 OPTIMIZATION-phase notes (see OPTIMIZATION_r12.md for the
-full per-change evidence):
-- Same-night full-suite pair (identical box conditions, minutes
-  apart): pre-optimization commit 6405c9b = 287.86 s, post-batch-1/2
-  tree = 256.17 s — -11.0% code-attributed (the box that night ran
-  every untouched entry ~10-40% ABOVE the curated record, so the
-  curated-vs-curated delta understates the code win).
-- The change set eliminates recomputed lineages (knn mutual join,
-  release-gate scrub chain, v6/v7 corpora, DSIR occurrences, basket
-  frame, bitmap packing, cluster-density pair frame, dataset-card
-  double execution), fuses iterative convergence probes into the
-  checkpoint job via observe() (CC, k-core), lowers CC/pagerank
-  rounds to single union-aggregates, replaces LPA's argmax window
-  with max_by, and truncates Apriori's per-level plan nesting
-  (939,761-char final plan -> 1,300).
-- text_leakage_attribution is WARMTH-SENSITIVE: ~6 s of its cold run
-  is one-time plan/codegen cost, and the fixed ~100-entry generated-
-  class cache means its in-suite reading moves with how many cached
-  plans precede it (measured 6.5 -> 13.0 s from cache evictions
-  alone, zero code change). Batch 3 removed pass 2's re-tokenization
-  (warm 5.4 -> 4.1 s) and returned the in-suite reading to its
-  pre-round level; treat residual movement on this entry as a
-  codegen-cache artifact before suspecting code.
-- CLOSING curated record (optimization phase): 220.08 s / 114
-  canonical entries — a clean fast-window full run on the optimized
-  tree (same suite, same methodology; the run's decontaminate_fast
-  canary read 3.07 s, squarely in the fast band). Other full runs
-  that evening: 256.2 / 266.3 (slow window) — kept as cross-evidence.
-  The record run fired two flags, BOTH adjudicated NON-code by the
-  standing order-balanced same-box worktree A/B (6405c9b vs the
-  optimized tree, 3 alternating pairs, isolated density split):
-  cluster_density_cc_stage medians 9.74 (old code) vs 8.80 s (new
-  code) and dedup_cluster_density 7.59 vs 7.76 s (flat) in the SAME
-  interval where the record run had read 9.07/7.45 — i.e. today's box
-  runs the whole family ~20% above the r12-build fast window that
-  produced the 7.53/6.15 references, and the new code is faster or
-  equal side-by-side.
-- Post-record cross-evidence run: 226.86 s (+3% window), firing three
-  advisory flags against the new record — dedup_minhash_incr_pruned_ss
-  +33%, dedup_semantic +22%, similarity_dbscan_clusters +24% — all on
-  entries with zero optimization-phase code change (the similarity/
-  dedup internals diff is the knn mutual-join persist only, which is
-  not on these paths... dbscan shares connected_components, whose
-  same-box A/B measured the new code FASTER: subset medians 9.09 old
-  vs 8.63 new). Same-evening readings for the three span 4.8-6.4 /
-  4.6-5.8 / 6.5-8.6 s respectively: run-to-run band, not code.
 """
 
 
@@ -309,9 +13,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools import measure  # noqa: E402
 
 HEADLINE = [
     # warehouse path
@@ -477,73 +183,23 @@ def main() -> None:
         [q for q in HEADLINE if q in set(only.split(","))]
         if only else HEADLINE
     )
-    from _event_intelligence_data_warehouse_spark.contract import QUERIES
-    from _event_intelligence_data_warehouse_spark.session import get_spark
-
-    spark = get_spark("eidw-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM, codegen, and parquet footers once per table family so
-    # timings measure the plans, not first-touch costs.
-    for warm in (
-        "agg_orders_by_priority",   # orders/lineitem
-        "daily_event_stats",        # events
-        "dedup_exact",              # documents
-        "similarity_topk_bruteforce",  # embeddings
-    ):
-        QUERIES[warm](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-
     from _event_intelligence_data_warehouse_spark import cache
+    from _event_intelligence_data_warehouse_spark.contract import QUERIES
+
+    spark = measure.session("eidw-bench")
+    measure.warm(spark, sf_dir)
 
     timings: dict[str, float] = {}
     total = 0.0
     for name in suite:
-        if name == "similarity_ivf_topk":
-            # Split build (train quantizer + assign corpus, amortized
-            # across query batches in production) from serve (probe +
-            # re-rank) so the regression guard distinguishes training
-            # cost from per-query cost. The end-to-end sum keeps the
-            # historical entry comparable across rounds.
-            _bench_ivf_split(spark, sf_dir, timings)
-            total += timings[name]
+        if name in _SPLITS:
+            # A split entry adds its phases to timings and returns the
+            # key whose time counts toward the total.
+            total += timings[_SPLITS[name](spark, sf_dir, timings)]
             continue
-        if name == "dedup_semantic":
-            # Same build/apply split as IVF: quantizer training is
-            # amortized across batches in production; the apply phase
-            # (pairs + components + election) is the per-corpus cost.
-            _bench_semantic_split(spark, sf_dir, timings)
-            total += timings[name]
-            continue
-        if name == "similarity_pq_topk":
-            _bench_pq_split(spark, sf_dir, timings)
-            total += timings[name]
-            continue
-        if name == "dedup_cluster_density":
-            _bench_density_split(spark, sf_dir, timings)
-            # the stage builds are real suite work: total carries the
-            # end-to-end sum even though the canonical per-query entry
-            # is the audit-over-prebuilt-stages cost
-            total += timings["cluster_density_e2e"]
-            continue
-        if name == "dedup_minhash_incremental":
-            _bench_incr_dedup_split(spark, sf_dir, timings)
-            total += timings[name]
-            continue
-        if name == "quality_five_checks":
-            # Same split for the most expensive warehouse query: it
-            # legitimately contains the full star build plus 5 checks —
-            # attribute movement to the right phase.
-            _bench_quality_split(spark, sf_dir, timings)
-            total += timings[name]
-            continue
-        fn = QUERIES[name]
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = round(time.time() - t0, 3)
-        timings[name] = dt
-        total += dt
+        total += _time(
+            spark, timings, name, partial(QUERIES[name], spark, sf_dir)
+        )
     # Free operator-owned caches once the suite ends. Releasing BETWEEN
     # queries would isolate timings but break continuity with recorded
     # rounds (shared plan fragments legitimately hit each other's caches
@@ -690,10 +346,18 @@ def _fit_headline(full: dict) -> dict:
     return out
 
 
-def _bench_ivf_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    """Time IVF index build and query serve as separate phases. Build
-    materializes (and persists) the centroids + cell assignment; serve
-    runs probe + re-rank against the prebuilt index."""
+def _time(spark, timings: dict[str, float], key: str, build) -> float:
+    timings[key] = measure.run(spark, key, build)["wall_s"]
+    return timings[key]
+
+
+def _bench_ivf_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
+    """Time IVF index build and query serve as separate phases, so the
+    regression guard tells training cost (amortized across query batches
+    in production) from per-query cost. Build materializes (and
+    persists) the centroids + cell assignment; serve runs probe +
+    re-rank against the prebuilt index. The end-to-end sum keeps the
+    historical entry comparable across rounds."""
     from pyspark.sql import functions as F
 
     from _event_intelligence_data_warehouse_spark import cache
@@ -707,31 +371,33 @@ def _bench_ivf_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    t0 = time.time()
-    centroids, assign = sim.ivf_index(
-        emb, n_cells=_IVF_N_CELLS, max_train=_IVF_MAX_TRAIN
-    )
-    centroids = cache.persist(centroids)
-    assign = cache.persist(assign)
-    assign.write.mode("overwrite").format("noop").save()
-    centroids.write.mode("overwrite").format("noop").save()
-    build = round(time.time() - t0, 3)
-    t0 = time.time()
-    sim.ivf_topk_prebuilt(
-        centroids, assign, emb, emb.filter(F.col("vec_id") < 50),
-        k=5, nprobe=2,
-    ).write.mode("overwrite").format("noop").save()
-    serve = round(time.time() - t0, 3)
-    timings["similarity_ivf_build"] = build
-    timings["similarity_ivf_serve"] = serve
-    timings["similarity_ivf_topk"] = round(build + serve, 3)
+    built = {}
+
+    def build():
+        centroids, assign = sim.ivf_index(
+            emb, n_cells=_IVF_N_CELLS, max_train=_IVF_MAX_TRAIN
+        )
+        built["centroids"] = cache.persist(centroids)
+        built["assign"] = cache.persist(assign)
+        return built["assign"], built["centroids"]
+
+    build_s = _time(spark, timings, "similarity_ivf_build", build)
+    serve = _time(spark, timings, "similarity_ivf_serve", lambda: (
+        sim.ivf_topk_prebuilt(
+            built["centroids"], built["assign"], emb,
+            emb.filter(F.col("vec_id") < 50), k=5, nprobe=2,
+        )
+    ))
+    timings["similarity_ivf_topk"] = round(build_s + serve, 3)
+    return "similarity_ivf_topk"
 
 
-def _bench_semantic_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
-    """Time SemDeDup's quantizer training (build) and dedup (apply)
-    separately; the historical dedup_semantic entry is their sum (it
-    was introduced this round as end-to-end, so the sum IS the
-    comparable number)."""
+def _bench_semantic_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
+    """Time SemDeDup's quantizer training (build, amortized across
+    batches in production) and dedup (apply: pairs + components +
+    election, the per-corpus cost) separately; the historical
+    dedup_semantic entry is their sum (it was introduced as end-to-end,
+    so the sum IS the comparable number)."""
     from pyspark.sql import functions as F
 
     from _event_intelligence_data_warehouse_spark import cache
@@ -744,25 +410,25 @@ def _bench_semantic_split(spark, sf_dir: str, timings: dict[str, float]) -> None
     )
 
     corpus = _sem_corpus(spark, sf_dir)
-    t0 = time.time()
-    _, cells = sim.ivf_cells(corpus)
-    assign = cache.persist(
-        cells.filter(F.col("cell_rank") == 1)
-        .select("vec_id", "cell", "cell_sim")
-    )
-    assign.write.mode("overwrite").format("noop").save()
-    build = round(time.time() - t0, 3)
-    t0 = time.time()
-    sim.semantic_dedup_prebuilt(corpus, assign, _SEM_TAU).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    apply_ = round(time.time() - t0, 3)
-    timings["dedup_semantic_build"] = build
-    timings["dedup_semantic_apply"] = apply_
-    timings["dedup_semantic"] = round(build + apply_, 3)
+    built = {}
+
+    def build():
+        _, cells = sim.ivf_cells(corpus)
+        built["assign"] = cache.persist(
+            cells.filter(F.col("cell_rank") == 1)
+            .select("vec_id", "cell", "cell_sim")
+        )
+        return built["assign"]
+
+    build_s = _time(spark, timings, "dedup_semantic_build", build)
+    apply_ = _time(spark, timings, "dedup_semantic_apply", lambda: (
+        sim.semantic_dedup_prebuilt(corpus, built["assign"], _SEM_TAU)
+    ))
+    timings["dedup_semantic"] = round(build_s + apply_, 3)
+    return "dedup_semantic"
 
 
-def _bench_pq_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
+def _bench_pq_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
     """PQ build (codebook training + corpus encode — amortized across
     query batches in production) vs serve (ADC LUT scan + exact rerank
     of 50 candidates)."""
@@ -778,25 +444,25 @@ def _bench_pq_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    t0 = time.time()
-    cb = sim.pq_codebooks(
-        emb, m=ext._PQ_M, k=ext._PQ_CODES, max_train=ext._PQ_TRAIN
-    )
-    codes = cache.persist(sim.pq_encode(emb, cb))
-    codes.write.mode("overwrite").format("noop").save()
-    build = round(time.time() - t0, 3)
-    t0 = time.time()
-    sim.pq_topk(
-        codes, cb, emb.filter(F.col("vec_id") < 20), k=5,
+    built = {}
+
+    def build():
+        built["cb"] = sim.pq_codebooks(
+            emb, m=ext._PQ_M, k=ext._PQ_CODES, max_train=ext._PQ_TRAIN
+        )
+        built["codes"] = cache.persist(sim.pq_encode(emb, built["cb"]))
+        return built["codes"]
+
+    build_s = _time(spark, timings, "similarity_pq_build", build)
+    serve = _time(spark, timings, "similarity_pq_serve", lambda: sim.pq_topk(
+        built["codes"], built["cb"], emb.filter(F.col("vec_id") < 20), k=5,
         rerank=ext._PQ_RERANK, corpus=emb,
-    ).write.mode("overwrite").format("noop").save()
-    serve = round(time.time() - t0, 3)
-    timings["similarity_pq_build"] = build
-    timings["similarity_pq_serve"] = serve
-    timings["similarity_pq_topk"] = round(build + serve, 3)
+    ))
+    timings["similarity_pq_topk"] = round(build_s + serve, 3)
+    return "similarity_pq_topk"
 
 
-def _bench_incr_dedup_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
+def _bench_incr_dedup_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
     """The headline dedup_minhash_incremental entry runs the CONTRACT
     config, which since r6 AUTO-selects prune_index_read from the
     batch/index size ratio (r5 verdict item 3): this fixture's ~25%
@@ -806,20 +472,14 @@ def _bench_incr_dedup_split(spark, sf_dir: str, timings: dict[str, float]) -> No
     (dedup_minhash_incremental_pruned, its own cross-round entry)."""
     from _event_intelligence_data_warehouse_spark.contract import QUERIES
 
-    t0 = time.time()
-    QUERIES["dedup_minhash_incremental"](spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    timings["dedup_minhash_incremental"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    QUERIES["dedup_minhash_incremental_pruned"](spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    timings["dedup_minhash_incr_pruned_ss"] = round(time.time() - t0, 3)
+    _time(spark, timings, "dedup_minhash_incremental",
+          partial(QUERIES["dedup_minhash_incremental"], spark, sf_dir))
+    _time(spark, timings, "dedup_minhash_incr_pruned_ss",
+          partial(QUERIES["dedup_minhash_incremental_pruned"], spark, sf_dir))
+    return "dedup_minhash_incremental"
 
 
-def _bench_density_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
+def _bench_density_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
     """Cluster-density audit over STAGE-SHARED inputs (round-6 VERDICT
     item 3): in production, ``pairs`` and ``labels`` are the persisted
     outputs of the dedup pipeline stages that ran anyway — the audit
@@ -831,7 +491,8 @@ def _bench_density_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
     the pairs stage usually rides the signature cache warmed by
     dedup_minhash_lsh_pairs earlier in the suite), and
     ``cluster_density_e2e`` preserves the r5/r6-comparable end-to-end
-    sum. All three components still count toward the suite total."""
+    sum. The stage builds are real suite work, so the suite total
+    carries the end-to-end sum."""
     from _event_intelligence_data_warehouse_spark import cache
     from _event_intelligence_data_warehouse_spark.contract import (
         extension_queries as ext,
@@ -841,29 +502,29 @@ def _bench_density_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
     )
 
     docs = ext._docs_near(spark, sf_dir)
-    t0 = time.time()
-    pairs = cache.persist(dd.minhash_dedup(docs, threshold=0.8))
-    pairs.write.mode("overwrite").format("noop").save()
-    timings["cluster_density_pairs_stage"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    labels = cache.persist(
-        dd.connected_components(docs.select("doc_id"), pairs)
+    built = {}
+
+    def pairs_stage():
+        built["pairs"] = cache.persist(dd.minhash_dedup(docs, threshold=0.8))
+        return built["pairs"]
+
+    def cc_stage():
+        built["labels"] = cache.persist(
+            dd.connected_components(docs.select("doc_id"), built["pairs"])
+        )
+        return built["labels"]
+
+    pairs_s = _time(spark, timings, "cluster_density_pairs_stage", pairs_stage)
+    cc_s = _time(spark, timings, "cluster_density_cc_stage", cc_stage)
+    audit_s = _time(
+        spark, timings, "dedup_cluster_density",
+        lambda: dd.graph_cluster_stats(built["pairs"], built["labels"]),
     )
-    labels.write.mode("overwrite").format("noop").save()
-    timings["cluster_density_cc_stage"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dd.graph_cluster_stats(pairs, labels).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    timings["dedup_cluster_density"] = round(time.time() - t0, 3)
-    timings["cluster_density_e2e"] = round(
-        timings["cluster_density_pairs_stage"]
-        + timings["cluster_density_cc_stage"]
-        + timings["dedup_cluster_density"], 3
-    )
+    timings["cluster_density_e2e"] = round(pairs_s + cc_s + audit_s, 3)
+    return "cluster_density_e2e"
 
 
-def _bench_quality_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
+def _bench_quality_split(spark, sf_dir: str, timings: dict[str, float]) -> str:
     """Time the fused production plan (the historical, cross-round
     comparable quality_five_checks entry — checks share the fact build's
     scan in one plan), THEN the star fact build and the five checks as
@@ -878,21 +539,30 @@ def _bench_quality_split(spark, sf_dir: str, timings: dict[str, float]) -> None:
         quality_five_checks,
     )
 
-    t0 = time.time()
-    QUERIES["quality_five_checks"](spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    timings["quality_five_checks"] = round(time.time() - t0, 3)
+    _time(spark, timings, "quality_five_checks",
+          partial(QUERIES["quality_five_checks"], spark, sf_dir))
+    built = {}
 
-    t0 = time.time()
-    fact = cache.persist(quality_fact_frame(spark, sf_dir))
-    fact.write.mode("overwrite").format("noop").save()
-    timings["quality_fact_build"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    quality_five_checks(spark, sf_dir, _prebuilt_fact=fact).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    timings["quality_checks_only"] = round(time.time() - t0, 3)
+    def build():
+        built["fact"] = cache.persist(quality_fact_frame(spark, sf_dir))
+        return built["fact"]
+
+    _time(spark, timings, "quality_fact_build", build)
+    _time(spark, timings, "quality_checks_only", lambda: (
+        quality_five_checks(spark, sf_dir, _prebuilt_fact=built["fact"])
+    ))
+    return "quality_five_checks"
+
+
+# Entries timed in phases; each returns the key it adds to the total.
+_SPLITS = {
+    "similarity_ivf_topk": _bench_ivf_split,
+    "dedup_semantic": _bench_semantic_split,
+    "similarity_pq_topk": _bench_pq_split,
+    "dedup_cluster_density": _bench_density_split,
+    "dedup_minhash_incremental": _bench_incr_dedup_split,
+    "quality_five_checks": _bench_quality_split,
+}
 
 
 # Diff against the latest driver-recorded BENCH_r{N}.json so perf

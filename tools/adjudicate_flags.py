@@ -36,7 +36,7 @@ import sys
 import tempfile
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run_side(workdir: str, queries: list[str], sf_dir: str) -> dict:

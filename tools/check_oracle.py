@@ -13,10 +13,11 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = (

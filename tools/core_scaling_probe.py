@@ -6,9 +6,10 @@ parallel-scaling claims cannot rest there).
 
 Each (query, cores) cell runs in its OWN subprocess (a SparkSession's
 master is fixed at creation; $SPARK_GRAFT_CPUS is honored by
-session.get_spark), timing the query to the noop sink after the
-standard warmup. Order is drift-balanced per query (hi, lo, lo, hi —
-medians per side), all four runs contiguous inside one box interval.
+session.get_spark): ``tools/measure.py`` times the query to the noop
+sink after the standard warmup. Order is drift-balanced per query (hi,
+lo, lo, hi — medians per side), all four runs contiguous inside one box
+interval.
 
 Usage: python tools/core_scaling_probe.py [--hi 32] [--lo 8] query ...
 Appends a markdown table to stdout; paste into SCALING.md.
@@ -24,27 +25,8 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1_DIR = os.path.join(REPO, ".scaled", "sf1")
-
-_RUNNER = """
-import os, sys, time
-sys.path.insert(0, {repo!r})
-from _event_intelligence_data_warehouse_spark import cache
-from _event_intelligence_data_warehouse_spark.contract import QUERIES
-from _event_intelligence_data_warehouse_spark.session import get_spark
-spark = get_spark("core-scaling-probe")
-spark.sparkContext.setLogLevel("ERROR")
-for warm in ("agg_orders_by_priority", "daily_event_stats",
-             "dedup_exact", "similarity_topk_bruteforce"):
-    QUERIES[warm](spark, {sf!r}).write.mode("overwrite").format(
-        "noop").save()
-cache.release_all()
-t0 = time.time()
-QUERIES[{q!r}](spark, {sf!r}).write.mode("overwrite").format(
-    "noop").save()
-print("SECONDS=%.2f" % (time.time() - t0))
-"""
 
 
 def run_one(q: str, cpus: int) -> float:
@@ -52,15 +34,16 @@ def run_one(q: str, cpus: int) -> float:
     env["SPARK_GRAFT_CPUS"] = str(cpus)
     env.pop("SPARK_GRAFT_MASTER", None)
     out = subprocess.run(
-        [sys.executable, "-c",
-         _RUNNER.format(repo=REPO, sf=SF1_DIR, q=q)],
+        [sys.executable, os.path.join(REPO, "tools", "measure.py"),
+         SF1_DIR, q],
         capture_output=True, text=True, env=env,
     )
-    for line in out.stdout.splitlines():
-        if line.startswith("SECONDS="):
-            return float(line.split("=", 1)[1])
+    recs = [json.loads(ln) for ln in out.stdout.splitlines()
+            if ln.startswith("{")]
+    if out.returncode == 0 and recs:
+        return round(recs[0]["wall_s"], 2)
     raise RuntimeError(
-        f"{q}@{cpus}: no timing; stderr tail:\n"
+        f"{q}@{cpus}: {recs or 'no record'}; stderr tail:\n"
         + "\n".join(out.stderr.splitlines()[-5:])
     )
 

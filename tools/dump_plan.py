@@ -7,6 +7,9 @@ the DataFrame the contract query returns (the driver-checked result
 frame). Queries whose construction runs eager work (adaptive counts,
 export writes) pay it here too — the dump reflects exactly what the
 bench times. sf dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
+
+A before/after pair runs each checkout's own tools/dump_plan.py into
+the same out_dir.
 """
 
 import os
@@ -15,27 +18,15 @@ import sys
 if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
     sys.exit(__doc__)
 
-# SPARK_GRAFT_REPO lets the before/after pair come from two checkouts
-# (a clone at the pre-change commit vs the working tree) while both
-# write into the same out_dir.
-sys.path.insert(
-    0,
-    os.environ.get(
-        "SPARK_GRAFT_REPO",
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ),
-)
-
+import measure  # noqa: E402
 from _event_intelligence_data_warehouse_spark import cache  # noqa: E402
 from _event_intelligence_data_warehouse_spark.contract import QUERIES  # noqa: E402
-from _event_intelligence_data_warehouse_spark.session import get_spark  # noqa: E402
 
 out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 os.makedirs(out_dir, exist_ok=True)
 
-spark = get_spark("eidw-plan-dump")
-spark.sparkContext.setLogLevel("ERROR")
+spark = measure.session("eidw-plan-dump")
 for name in names:
     df = QUERIES[name](spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -33,10 +33,10 @@ Construction (copy i in 0..9; copy 0 is sf0.1 verbatim):
   probes see 10x distinct points, not 10-way distance ties.
 
 Idempotent: skips tables whose output already exists. Output dir
-defaults to /root/repo/.scaled/sf1 (gitignored).
+defaults to <repo>/.scaled/sf1 (gitignored).
 
 Usage: python tools/make_scaled_sf.py [--src /root/testdata/sf0.1]
-                                      [--out /root/repo/.scaled/sf1]
+                                      [--out <repo>/.scaled/sf1]
                                       [--copies 10]
 
 ``--copies 3`` builds an intermediate "sf0.3" for three-point scaling
@@ -111,7 +111,10 @@ def _emb_copy(df, i: int):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.scaled/sf1")
+    ap.add_argument("--out", default=os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".scaled", "sf1",
+    ))
     ap.add_argument("--copies", type=int, default=COPIES)
     args = ap.parse_args()
     copies = args.copies

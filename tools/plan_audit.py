@@ -8,15 +8,17 @@ so counts reflect the FINAL adaptive plan — AQE's runtime broadcast
 conversions and coalescing included; a compile-time audit would report
 sort-merge joins that never actually run.
 
-Usage: python tools/plan_audit.py [sf_dir]
+Usage: python tools/plan_audit.py [sf_dir] [query ...]
+(query names = audit only those and print their rows; PLAN_AUDIT.md is
+rewritten only by a full run)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
+import measure
 
 # Arrow-batched Pandas paths are the sanctioned exception (multimodal
 # decode, arbitrary stateful sessions) — flagged separately from
@@ -200,17 +202,19 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from _event_intelligence_data_warehouse_spark import cache
     from _event_intelligence_data_warehouse_spark.contract import QUERIES
-    from _event_intelligence_data_warehouse_spark.session import get_spark
 
-    spark = get_spark("eidw-plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    names = sys.argv[2:] or list(QUERIES)
+    unknown = [q for q in names if q not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = measure.session("eidw-plan-audit")
 
     rows = []
     row_udf_offenders = []
     global_window_offenders = []
-    for name, fn in QUERIES.items():
+    for name in names:
         try:
-            df = fn(spark, sf_dir)
+            df = QUERIES[name](spark, sf_dir)
             df.collect()  # drive to completion so AQE finalizes the plan
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # pragma: no cover
@@ -299,9 +303,13 @@ def main() -> None:
             "from tools/plan_audit.py GLOBAL_WINDOW_OK."
         )
     out.append("")
-    with open(f"{REPO}/PLAN_AUDIT.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLAN_AUDIT.md ({len(rows)} queries)")
+    if sys.argv[2:]:
+        # A subset run must not replace the full audit with its rows.
+        print("\n".join(out))
+    else:
+        with open(os.path.join(measure.REPO, "PLAN_AUDIT.md"), "w") as f:
+            f.write("\n".join(out))
+        print(f"wrote PLAN_AUDIT.md ({len(rows)} queries)")
     if global_window_offenders:
         print("UNSANCTIONED GLOBAL WINDOWS:",
               ", ".join(sorted(global_window_offenders)))

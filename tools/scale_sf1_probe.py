@@ -21,11 +21,11 @@ import os
 import subprocess
 import sys
 import time
+from functools import partial
 
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
+import measure
 
-SF1_DIR = os.path.join(REPO, ".scaled", "sf1")
+SF1_DIR = os.path.join(measure.REPO, ".scaled", "sf1")
 
 # Heavy-family representatives. Criteria: iterative (CC/PageRank/k-core),
 # candidate-generating (LSH/IVF/PQ), corpus-quadratic-risk (Jaccard,
@@ -145,7 +145,9 @@ HIGH_SPREAD = {
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--gate", type=float, default=15.0)
-    ap.add_argument("--out", default=os.path.join(REPO, "SCALING.md"))
+    ap.add_argument(
+        "--out", default=os.path.join(measure.REPO, "SCALING.md")
+    )
     ap.add_argument(
         "--reps", type=int, default=3,
         help="measurements per SF for high-spread/near-gate rows "
@@ -156,27 +158,23 @@ def main() -> None:
 
     if not os.path.exists(os.path.join(SF1_DIR, "lineitem.parquet")):
         subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "make_scaled_sf.py")],
+            [sys.executable,
+             os.path.join(measure.REPO, "tools", "make_scaled_sf.py")],
             check=True,
         )
 
     from _event_intelligence_data_warehouse_spark import cache
     from _event_intelligence_data_warehouse_spark.contract import QUERIES
-    from _event_intelligence_data_warehouse_spark.session import get_spark
 
-    spark = get_spark("sf1-probe")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("sf1-probe")
 
     probe = args.queries or PROBE
     sf_pairs = (("/root/testdata/sf0.1", "sf0.1"), (SF1_DIR, "sf1"))
 
     def _measure(q: str, sf_dir: str, key: str) -> float:
-        t0 = time.time()
         try:
-            QUERIES[q](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            return round(time.time() - t0, 2)
+            rec = measure.run(spark, q, partial(QUERIES[q], spark, sf_dir))
+            return round(rec["wall_s"], 2)
         except Exception as e:
             print(f"ERR {q}@{key}: {type(e).__name__}: {e}",
                   file=sys.stderr)
@@ -189,11 +187,7 @@ def main() -> None:
     # (r10 verdict item 2).
     samples: dict[str, dict[str, list[float]]] = {}
     for sf_dir, key in sf_pairs:
-        for warm in ("agg_orders_by_priority", "daily_event_stats",
-                     "dedup_exact", "similarity_topk_bruteforce"):
-            QUERIES[warm](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
+        measure.warm(spark, sf_dir)
         cache.release_all()
         for q in probe:
             samples.setdefault(q, {}).setdefault(key, []).append(

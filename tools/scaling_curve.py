@@ -19,10 +19,9 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
+import measure
 
 SFS = ["0.001", "0.01", "0.1"]
 
@@ -173,34 +172,26 @@ GATE_RATIO = 15.0
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default=os.path.join(REPO, "SCALING.md"))
+    ap.add_argument(
+        "--out", default=os.path.join(measure.REPO, "SCALING.md")
+    )
     ap.add_argument("--testdata", default="/root/testdata")
     args = ap.parse_args()
 
     from _event_intelligence_data_warehouse_spark import cache
     from _event_intelligence_data_warehouse_spark.contract import QUERIES
-    from _event_intelligence_data_warehouse_spark.session import get_spark
 
-    spark = get_spark("scaling-curve")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("scaling-curve")
 
     names = [q for qs in FAMILIES.values() for q in qs]
     times: dict[str, dict[str, float]] = {q: {} for q in names}
     for sf in SFS:
         sf_dir = os.path.join(args.testdata, f"sf{sf}")
-        # warm footers/codegen per table family at this SF
-        for warm in ("agg_orders_by_priority", "daily_event_stats",
-                     "dedup_exact", "similarity_topk_bruteforce"):
-            QUERIES[warm](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
+        measure.warm(spark, sf_dir)
         cache.release_all()
         for q in names:
-            t0 = time.time()
-            QUERIES[q](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            times[q][sf] = round(time.time() - t0, 2)
+            rec = measure.run(spark, q, partial(QUERIES[q], spark, sf_dir))
+            times[q][sf] = round(rec["wall_s"], 2)
             cache.release_all()
 
     flagged: list[str] = []

@@ -27,12 +27,13 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, f"{REPO}/tools")
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracle import TABLES, fingerprint  # noqa: E402
 
