@@ -47,14 +47,37 @@ def date_attributes(full_date: Column) -> list[Column]:
     ]
 
 
+def _members(name: str) -> tuple[dict[str, Column], Column]:
+    """Dimension ``name``'s member tuple as columns of a staged row, by
+    their names in the dimension, and the filter a staged row passes to
+    have one (NULL dates never load)."""
+    if name == "dim_date":
+        return ({"full_date": F.col("event_date")},
+                F.col("event_date").isNotNull())
+    if name == "dim_category":
+        return ({"category_name": F.col("category"),
+                 "subcategory": F.col("subcategory")}, F.lit(True))
+    if name == "dim_source":
+        return {"source_name": F.col("source")}, F.lit(True)
+    return ({"venue_nk": venue_nk("venue_name", "venue_city"),
+             "venue_name": F.col("venue_name"),
+             "city": F.col("venue_city"),
+             "country": F.col("venue_country"),
+             "latitude": F.col("venue_lat"),
+             "longitude": F.col("venue_lon")}, F.lit(True))
+
+
+def member_tuples(name: str, stg: DataFrame) -> DataFrame:
+    """The batch's member tuples of dimension ``name``, one per staged
+    row that has one."""
+    cols, where = _members(name)
+    return stg.filter(where).select(*[c.alias(n) for n, c in cols.items()])
+
+
 def update_dim_date(existing: DataFrame, stg: DataFrame) -> DataFrame:
     """Insert-if-absent of the batch's distinct dates
     (transform_events.sql:81-97)."""
-    dates = (
-        stg.filter(F.col("event_date").isNotNull())
-        .select(F.col("event_date").alias("full_date"))
-        .distinct()
-    )
+    dates = member_tuples("dim_date", stg).distinct()
     new = insert_if_absent(existing.select("full_date"), dates, ["full_date"])
     new = new.select(F.col("full_date"), *date_attributes(F.col("full_date")))
     new = assign_surrogate_keys(
@@ -68,12 +91,7 @@ def update_dim_category(
 ) -> DataFrame:
     """UNIQUE(category_name, subcategory) insert-if-absent
     (transform_events.sql:118-124)."""
-    cats = (
-        stg.select(
-            F.col("category").alias("category_name"), F.col("subcategory")
-        )
-        .distinct()
-    )
+    cats = member_tuples("dim_category", stg).distinct()
     new = insert_if_absent(existing, cats, ["category_name", "subcategory"])
     new = (
         new.withColumn("segment", F.lit(None).cast("string"))
@@ -91,7 +109,7 @@ def update_dim_category(
 def update_dim_source(existing: DataFrame, stg: DataFrame, now: Column) -> DataFrame:
     """UNIQUE(source_name) insert-if-absent with type mapping
     (transform_events.sql:127-138)."""
-    srcs = stg.select(F.col("source").alias("source_name")).distinct()
+    srcs = member_tuples("dim_source", stg).distinct()
     new = insert_if_absent(existing, srcs, ["source_name"])
     new = (
         new.withColumn("source_type", source_type_expr("source_name"))
@@ -110,16 +128,8 @@ def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFr
     """Real SCD2 on venue (U5): close + version on attribute change.
     Incoming = one row per venue_nk, deterministic tie-break (the
     reference's DISTINCT ON is order-undefined — transform_events.sql:106)."""
-    incoming = (
-        stg.select(
-            venue_nk("venue_name", "venue_city").alias("venue_nk"),
-            F.col("venue_name"),
-            F.col("venue_city").alias("city"),
-            F.col("venue_country").alias("country"),
-            F.col("venue_lat").alias("latitude"),
-            F.col("venue_lon").alias("longitude"),
-        )
-        .withColumn("_pos", F.struct("venue_name", "city"))
+    incoming = member_tuples("dim_venue", stg).withColumn(
+        "_pos", F.struct("venue_name", "city")
     )
     incoming = dedup_keys(
         incoming, ["venue_nk"], [F.asc_nulls_last("_pos")]
@@ -134,3 +144,67 @@ def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFr
         order_by=["venue_nk"],
         defaults={"created_at": now},
     )
+
+
+def _member_key(name: str, cols: dict[str, Column], types: dict) -> Column:
+    """The JSON text of the dimension name and the member's columns, cast
+    to the image's types, matched the way ``update_dim_*`` matches them:
+    the SCD2 attributes of a venue null-safely, every other column by
+    plain equality. JSON leaves NULL fields out, so the attributes
+    compare null-safely; a NULL in any other column makes the whole key
+    NULL, which matches nothing. The name rides inside the key, not as a
+    join column of its own, so the optimizer cannot split the one
+    anti-join into one broadcast per dimension."""
+    attrs = VENUE_ATTRS if name == "dim_venue" else []
+    present = F.lit(True)
+    for c in cols:
+        if c not in attrs:
+            present = present & cols[c].isNotNull()
+    return F.when(present, F.to_json(F.struct(
+        F.lit(name).alias("dim"),
+        *[col.cast(types[c]).alias(c) for c, col in cols.items()],
+    )))
+
+
+def with_new_members(
+    stg: DataFrame, gold: dict[str, DataFrame], own: dict[str, Column]
+) -> DataFrame:
+    """One scan of the batch ``stg``: per staged row, a row of its ``own``
+    columns, and a row naming ``dim`` for each of its member tuples that
+    the current image of that dimension in ``gold`` does not hold. Each
+    row leaves the other columns NULL, so one aggregate over the result
+    answers both (``collect_set("dim")`` names the dimensions the batch
+    adds something to).
+
+    The member tuples are anti-joined against one union of the images,
+    each taken with the filter of its ``update_dim_*`` function and
+    compared the way that function compares it: plain equality on the
+    key (so a NULL key, which ``insert_if_absent`` never matches, counts
+    as new) and, for venues, the five SCD2 attributes null-safely against
+    the ``is_current`` rows. Venue tuples are taken before the per-key
+    dedup ``update_dim_venue`` applies, so the probe may report a venue
+    change the update then finds none of, never the reverse. A dimension
+    it does not name would come out of its ``update_dim_*`` unchanged."""
+    types = dict(stg.select(*[c.alias(n) for n, c in own.items()]).dtypes)
+    null = F.lit(None).cast("string")
+    rows = [F.struct(*[c.alias(n) for n, c in own.items()],
+                     null.alias("dim"), null.alias("key"))]
+    images = None
+    for name, image in gold.items():
+        if name == "dim_venue":
+            image = image.filter(F.col("is_current"))
+        cols, where = _members(name)
+        image_types = dict(image.dtypes)
+        rows.append(F.struct(
+            *[F.lit(None).cast(t).alias(n) for n, t in types.items()],
+            F.when(where, F.lit(name)).alias("dim"),
+            F.when(where, _member_key(name, cols, image_types)).alias("key"),
+        ))
+        held = image.select(_member_key(
+            name, {c: F.col(c) for c in cols}, image_types
+        ).alias("key"))
+        images = held if images is None else images.unionByName(held)
+    out = stg.select(F.explode(F.array(*rows)).alias("r")).select("r.*")
+    if images is not None:
+        out = out.join(images, "key", "left_anti")
+    return out.drop("key")

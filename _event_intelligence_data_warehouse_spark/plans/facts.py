@@ -96,37 +96,34 @@ def upsert_facts(
     existing: DataFrame,
     incoming: DataFrame,
     *,
-    sk_source: DataFrame | None = None,
+    sk_source: DataFrame | int | None = None,
     bulk: bool | None = None,
 ) -> DataFrame:
     """Merge semantics of load_facts.sql:92-98: on event_nk match refresh
     the mutable attrs and loaded_at, preserving event_sk and the original
     ingested_at; new keys get deterministic surrogate keys.
 
-    ``sk_source`` supplies the frame whose max(event_sk) seeds new keys —
-    pass the FULL table when ``existing`` is a partition-pruned subset
-    (partitioned upsert), so continuation stays globally unique.
-    ``bulk`` picks the surrogate-key regime (see
+    One full outer join: ``event_sk`` is preserved like ``ingested_at``,
+    so every existing row keeps its key, including one whose event_nk is
+    NULL, and the rows left without a key are the inserts.
+    ``sk_source`` seeds the new keys: the FULL table when ``existing``
+    is a partition-pruned subset (partitioned upsert), so continuation
+    stays globally unique, or its max(event_sk) when the caller knows
+    it. ``bulk`` picks the surrogate-key regime (see
     ``assign_surrogate_keys``); None lets it probe the new-row count."""
-    inc = incoming.drop("_ingest_id")
-
-    matched_or_existing = merge_upsert(
-        existing.drop("event_sk"),
-        inc,
+    merged = merge_upsert(
+        existing,
+        incoming.drop("_ingest_id"),
         ["event_nk"],
-        preserve=["ingested_at"],
+        preserve=["ingested_at", "event_sk"],
     )
-    # Re-attach surrogate keys: existing keys keep theirs, new keys extend.
-    with_sk = matched_or_existing.join(
-        existing.select("event_nk", "event_sk"), "event_nk", "left"
-    )
-    new_rows = with_sk.filter(F.col("event_sk").isNull()).drop("event_sk")
-    old_rows = with_sk.filter(F.col("event_sk").isNotNull())
+    old_rows = merged.filter(F.col("event_sk").isNotNull())
     new_rows = assign_surrogate_keys(
         sk_source if sk_source is not None else existing,
-        new_rows, "event_sk", ["event_nk"], bulk=bulk,
+        merged.filter(F.col("event_sk").isNull()).drop("event_sk"),
+        "event_sk", ["event_nk"], bulk=bulk,
     )
-    cols = [c for c in existing.columns]
+    cols = existing.columns
     return old_rows.select(cols).unionByName(new_rows.select(cols))
 
 
@@ -137,17 +134,33 @@ FACT_BUCKETS = 16
 FACT_PART_COL = "p_bucket"
 
 
-def fact_bucket(nk_col: str = "event_nk", n: int = FACT_BUCKETS) -> Column:
+def fact_bucket(nk: Column | str = "event_nk", n: int = FACT_BUCKETS) -> Column:
     """Immutable partition bucket for a fact row: xxhash64 of the natural
     key. Re-ingesting a key always lands in its original bucket, so an
     upsert touches exactly the buckets of its incoming keys."""
-    return F.pmod(F.xxhash64(F.col(nk_col)), F.lit(n)).cast("int")
+    nk = F.col(nk) if isinstance(nk, str) else nk
+    return F.pmod(F.xxhash64(nk), F.lit(n)).cast("int")
+
+
+def _sk_base(wh, table: str, full: DataFrame) -> DataFrame | int:
+    """The surrogate-key base of ``table``: its max(event_sk) from the
+    manifest's column bounds when they are exact, else ``full`` for an
+    aggregate over the column. Bounds are not exact when a file lacks
+    them, or while deletion vectors hide rows the bounds still cover
+    (``stats_minmax`` returns None in both cases); legacy mode has no
+    bounds."""
+    if wh.manifest:
+        bounds = wh.stats_minmax(table, "event_sk")
+        if bounds is not None:
+            return int(bounds[1])
+    return full
 
 
 def upsert_facts_partitioned(
     wh,
     incoming: DataFrame,
     *,
+    buckets: list[int],
     table: str = "fact_events",
     n_buckets: int = FACT_BUCKETS,
     bulk: bool | None = None,
@@ -155,24 +168,22 @@ def upsert_facts_partitioned(
     """Partition-pruned fact upsert: the 100 TB path.
 
     The fact table lives hash-bucketed on ``p_bucket(event_nk)``. An
-    incremental batch (1) tags its rows with their buckets, (2) reads ONLY
-    those buckets of the existing table (partition pruning on the scan),
-    (3) merges, and (4) writes back with dynamic partition overwrite —
-    untouched buckets' files are never read or rewritten, so batch cost
-    is proportional to the increment. The surrogate-key base comes from a
-    column-pruned max over the full table (a footer-cheap scan of one
-    column). ``bulk`` is passed to :func:`upsert_facts`: a caller that
-    knows an upper bound on the batch's new keys saves the surrogate-key
-    size probe. Returns the affected bucket ids (for
-    observability/tests)."""
+    incremental batch (1) names its ``buckets`` (the caller folds
+    ``collect_set(fact_bucket(...))`` into an aggregate it already runs
+    over the batch), (2) reads ONLY those buckets of the existing table
+    (partition pruning on the scan), (3) merges, and (4) writes back
+    with dynamic partition overwrite — untouched buckets' files are
+    never read or rewritten, so batch cost tracks the touched buckets.
+    The surrogate-key base is the max(event_sk) bound in the manifest,
+    which costs no job; legacy mode, and a manifest whose bounds are not
+    exact, fall back to a max aggregate that scans the event_sk column
+    of every live file. ``bulk`` is passed to :func:`upsert_facts`: a
+    caller that knows an upper bound on the batch's new keys saves the
+    surrogate-key size probe. Returns the affected bucket ids, sorted
+    (for observability/tests)."""
     from _event_intelligence_data_warehouse_spark import schemas
 
-    affected = sorted(
-        r[0]
-        for r in incoming.select(
-            fact_bucket(n=n_buckets).alias(FACT_PART_COL)
-        ).distinct().collect()
-    )
+    affected = sorted(buckets)
     migrating = False
     if wh.exists(table):
         full = wh.read(table)
@@ -187,10 +198,10 @@ def upsert_facts_partitioned(
             existing_aff = full.filter(
                 F.col(FACT_PART_COL).isin(affected)
             ).drop(FACT_PART_COL)
-        sk_src = full
+        sk_src = _sk_base(wh, table, full)
     else:
         existing_aff = wh.read(table, schemas.FACT_EVENTS)
-        sk_src = existing_aff
+        sk_src = 0
     merged = upsert_facts(
         existing_aff, incoming, sk_source=sk_src, bulk=bulk
     ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _event_intelligence_data_warehouse_spark import schemas
+from _event_intelligence_data_warehouse_spark.functions.keys import event_nk
 from _event_intelligence_data_warehouse_spark.operators.upsert import (
     SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
 )
@@ -35,6 +36,15 @@ from _event_intelligence_data_warehouse_spark.sources import bronze
 from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
 WATERMARK = "fact_load.ingested_at"
+
+# Dimension name -> its update, called as (existing, stg, now). Called
+# through the module so per-function wrappers see the calls.
+DIM_UPDATES = {
+    "dim_date": lambda ex, stg, now: dims_mod.update_dim_date(ex, stg),
+    "dim_category": lambda ex, stg, now: dims_mod.update_dim_category(ex, stg, now),
+    "dim_source": lambda ex, stg, now: dims_mod.update_dim_source(ex, stg, now),
+    "dim_venue": lambda ex, stg, now: dims_mod.update_dim_venue(ex, stg, now),
+}
 
 GOLD = {
     "dim_date": schemas.DIM_DATE,
@@ -96,29 +106,37 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
 
 def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     now = F.current_timestamp()
-    # One pass over the cached batch: the watermark and the batch size.
-    # New fact keys never outnumber staged rows, so the size also picks
-    # the surrogate-key regime without a probe job on the join result.
-    max_ts, staged = stg.agg(F.max("ingested_at"), F.count("*")).first()
+    dims = {name: wh.read(name, GOLD[name]) for name in DIM_UPDATES}
+    present = {name: dims[name] for name in dims if wh.exists(name)}
+    # One pass over the cached batch: the watermark, the batch size, the
+    # fact buckets its keys fall in and the dimensions it adds members
+    # to (a table that does not exist yet is always written, even if
+    # empty). New fact keys never outnumber staged rows, so the size
+    # also picks the surrogate-key regime without a probe job on the
+    # join result.
+    rows = dims_mod.with_new_members(stg, present, {
+        "ingested_at": F.col("ingested_at"),
+        "_bucket": facts_mod.fact_bucket(event_nk("source", "raw_event_id")),
+    })
+    max_ts, staged, buckets, added = rows.agg(
+        F.max("ingested_at"),
+        F.count("_bucket"),  # a staged row's own row has a bucket
+        F.collect_set("_bucket"),
+        F.collect_set("dim"),
+    ).first()
 
-    gold = {name: wh.read(name, schema) for name, schema in GOLD.items()}
-
-    new_dim_date = dims_mod.update_dim_date(gold["dim_date"], stg)
-    new_dim_cat = dims_mod.update_dim_category(gold["dim_category"], stg, now)
-    new_dim_src = dims_mod.update_dim_source(gold["dim_source"], stg, now)
-    new_dim_venue = dims_mod.update_dim_venue(gold["dim_venue"], stg, now)
-
-    wh.overwrite("dim_date", new_dim_date)
-    wh.overwrite("dim_category", new_dim_cat)
-    wh.overwrite("dim_source", new_dim_src)
-    wh.overwrite("dim_venue", new_dim_venue)
+    # Only those dimensions are rebuilt and rewritten; the fact build
+    # reads them back and reuses the unchanged images.
+    for name in sorted(set(added) | (dims.keys() - present.keys())):
+        wh.overwrite(name, DIM_UPDATES[name](dims[name], stg, now))
+        dims[name] = wh.read(name)
 
     fact_rows = facts_mod.build_fact_rows(
         stg,
-        wh.read("dim_date"),
-        wh.read("dim_venue"),
-        wh.read("dim_category"),
-        wh.read("dim_source"),
+        dims["dim_date"],
+        dims["dim_venue"],
+        dims["dim_category"],
+        dims["dim_source"],
         loaded_at=now,
     ).select([f.name for f in schemas.FACT_EVENTS.fields if f.name != "event_sk"]
              + ["_ingest_id"])
@@ -126,7 +144,8 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     # batch's keys are read and rewritten (storage.overwrite_partitions) —
     # at 100 TB the merge cost tracks the increment, not the table.
     facts_mod.upsert_facts_partitioned(
-        wh, fact_rows, bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
+        wh, fact_rows, buckets=buckets,
+        bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
     )
 
     if max_ts is not None:

@@ -1618,12 +1618,16 @@ class Warehouse:
     def stats_minmax(self, table: str, col: str) -> tuple | None:
         """(min, max) of ``col`` answered from the manifest when EVERY
         live file carries bounds for it (a single bounds-less file
-        could hide the true extremum -> None, never a guess)."""
+        could hide the true extremum -> None, never a guess). Deletion
+        vectors also give None: the bounds still cover the rows they
+        hide, so the live extremum may lie inside them."""
         if not self.manifest:
             raise ValueError(
                 "stats_minmax requires Warehouse(manifest=True)"
             )
         m = self._adopt_if_legacy(table)
+        if m.get("dv_files"):
+            return None
         stats = m.get("stats", {})
         lo = hi = None
         for rel in m["files"]:

@@ -200,10 +200,14 @@ def stream_facts_from_bronze(
             # not the raw batch size; the persist means the count and
             # the upsert share one computation of the build. ``n`` also
             # bounds the batch's new keys, so it picks the surrogate-key
-            # regime without the upsert's own size probe.
-            n = fact_rows.count()
+            # regime without the upsert's own size probe, and the same
+            # pass names the fact buckets the upsert rewrites.
+            n, buckets = fact_rows.agg(
+                F.count("*"), F.collect_set(facts_mod.fact_bucket())
+            ).first()
             facts_mod.upsert_facts_partitioned(
-                wh, fact_rows, bulk=n > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
+                wh, fact_rows, buckets=buckets,
+                bulk=n > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
             )
             cache.release_all()
         except Exception as exc:

@@ -24,7 +24,7 @@ from _event_intelligence_data_warehouse_spark.storage import (
     ConcurrentWriteError,
     Warehouse,
 )
-from test_partitioned_upsert import _fact_batch, _rows
+from test_partitioned_upsert import _fact_batch, _rows, _upsert
 
 
 def _mwh(spark, tmp_path, name="mwh"):
@@ -42,8 +42,8 @@ def test_manifest_partitioned_upsert_matches_full_rewrite(spark, tmp_path):
     base = _fact_batch(spark, range(40))
     upd = _fact_batch(spark, range(30, 50), status="cancelled",
                       ts="2026-02-01 00:00:00")
-    facts_mod.upsert_facts_partitioned(wh, base)
-    facts_mod.upsert_facts_partitioned(wh, upd)
+    _upsert(wh, base)
+    _upsert(wh, upd)
 
     empty = spark.createDataFrame([], schemas.FACT_EVENTS)
     want = _rows(facts_mod.upsert_facts(
@@ -58,11 +58,11 @@ def test_manifest_untouched_partition_entries_are_stable(spark, tmp_path):
     """A single-key upsert replaces only its bucket's manifest entries;
     every other partition keeps the exact same (immutable) files."""
     wh = _mwh(spark, tmp_path)
-    facts_mod.upsert_facts_partitioned(wh, _fact_batch(spark, range(60)))
+    _upsert(wh, _fact_batch(spark, range(60)))
     before = _live_files(wh, "fact_events")
     pcol = facts_mod.FACT_PART_COL
 
-    touched = facts_mod.upsert_facts_partitioned(
+    touched = _upsert(
         wh, _fact_batch(spark, [0], status="cancelled")
     )
     after = _live_files(wh, "fact_events")
@@ -85,7 +85,7 @@ def test_manifest_migrates_legacy_flat_fact_table(spark, tmp_path):
     # simulate a pre-manifest, pre-bucket deployment: flat parquet files
     legacy.write.mode("overwrite").parquet(wh.path("fact_events"))
 
-    facts_mod.upsert_facts_partitioned(
+    _upsert(
         wh, _fact_batch(spark, range(20, 35), status="cancelled")
     )
     out = wh.read("fact_events")
@@ -283,10 +283,10 @@ def test_time_travel_partitioned_upsert_versions(spark, tmp_path):
     """Partition-pruned upserts commit versions too: an earlier version
     reproduces pre-upsert fact state exactly."""
     wh = _mwh(spark, tmp_path)
-    facts_mod.upsert_facts_partitioned(wh, _fact_batch(spark, range(20)))
+    _upsert(wh, _fact_batch(spark, range(20)))
     v1 = wh._current_version("fact_events")
     want_v1 = _rows(wh.read("fact_events"))
-    facts_mod.upsert_facts_partitioned(
+    _upsert(
         wh, _fact_batch(spark, range(10, 30), status="cancelled")
     )
     assert wh.read("fact_events").count() == 30

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from _event_intelligence_data_warehouse_spark import storage
 from _event_intelligence_data_warehouse_spark.plans import facts, pipeline
 from _event_intelligence_data_warehouse_spark.sources import bronze
+from _event_intelligence_data_warehouse_spark.sources.events_adapter import (
+    events_as_raw,
+)
 from _event_intelligence_data_warehouse_spark.sources.synthetic import (
     generate_sample_events,
 )
@@ -190,6 +193,51 @@ def test_noop_tick_job_count(spark, tmp_path):
     assert _jobs(spark) - j0 == 13
     assert res["load"] == {"staged": 0}
     assert res["summary"]["fact_events"] == 60
+
+
+def _stream_events(spark, lo, hi):
+    """Driver-shaped events whose dimension members repeat every 30 ids:
+    5 dates, 3 categories, 10 venues, one source."""
+    return events_as_raw(spark.range(lo, hi).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.lit(1704110400) + (F.col("id") % 5) * 86400)
+        .alias("ts"),
+        (F.col("id") % 10).alias("user_id"),
+        F.element_at(F.array(F.lit("view"), F.lit("click"), F.lit("buy")),
+                     (F.col("id") % 3 + 1).cast("int")).alias("event_type"),
+        (F.col("id") + 10).cast("double").alias("value"),
+        F.lit('{"k": 1}').alias("props"),
+    ))
+
+
+def test_load_tick_job_count(spark, tmp_path):
+    """Structural gate: a load tick whose batch adds no dimension member
+    (20 new events on a 60-event manifest warehouse) submits exactly 5
+    jobs to land the batch and 30 to run the pipeline: 1 for the
+    ``isEmpty`` probe, 4 for the one aggregate over the staged batch
+    (watermark, size, touched fact buckets and the dimension probe), 13
+    for the fact upsert's write and 12 for the quality step. No dimension
+    is rewritten. The upsert is one full outer join, with its
+    surrogate-key base from the manifest. Before, the same tick submitted
+    11 and 77: two counts while landing, four dimension overwrites, a
+    three-join upsert, a bucket collect and a max(event_sk) aggregate."""
+    whdir = str(tmp_path / "wh")
+    wh = Warehouse(spark, whdir, manifest=True)
+    args = pipeline.parse_args(["--skip-ingest", "--manifest"])
+    bronze.land_batch(wh, _stream_events(spark, 0, 60), source="stream")
+    pipeline.run_pipeline(spark, whdir, args)
+    versions = {t: wh._current_version(t)
+                for t in ("dim_date", "dim_venue", "dim_category",
+                          "dim_source")}
+    j0 = _jobs(spark)
+    bronze.land_batch(wh, _stream_events(spark, 60, 80), source="stream")
+    j1 = _jobs(spark)
+    res = pipeline.run_pipeline(spark, whdir, args)
+    j2 = _jobs(spark)
+    assert res["load"] == {"staged": 20}
+    assert res["summary"]["fact_events"] == 80
+    assert {t: wh._current_version(t) for t in versions} == versions
+    assert (j1 - j0, j2 - j1) == (5, 30)
 
 
 def test_summary_counts_from_manifest_match_count(spark, tmp_path):

@@ -33,6 +33,13 @@ def _fact_batch(spark, ids, *, status="onsale", ts="2026-01-01 00:00:00"):
     return spark.createDataFrame(rows, schema)
 
 
+def _upsert(wh, batch):
+    """``upsert_facts_partitioned`` with the batch's buckets computed the
+    way a caller folds them into its own aggregate."""
+    buckets = batch.agg(F.collect_set(facts_mod.fact_bucket())).first()[0]
+    return facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets)
+
+
 def _snapshot(table_dir: str) -> dict[str, tuple[str, ...]]:
     """partition dir -> sorted data file names (parquet part files are
     uniquely named per write, so identical names == not rewritten)."""
@@ -57,8 +64,8 @@ def test_partitioned_upsert_matches_full_rewrite(spark, tmp_path):
     upd = _fact_batch(spark, range(30, 50), status="cancelled",
                       ts="2026-02-01 00:00:00")
 
-    facts_mod.upsert_facts_partitioned(wh_p, base)
-    facts_mod.upsert_facts_partitioned(wh_p, upd)
+    _upsert(wh_p, base)
+    _upsert(wh_p, upd)
 
     empty = spark.createDataFrame([], schemas.FACT_EVENTS)
     full1 = facts_mod.upsert_facts(empty, base)
@@ -74,11 +81,11 @@ def test_partitioned_upsert_matches_full_rewrite(spark, tmp_path):
 
 def test_untouched_buckets_are_not_rewritten(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    facts_mod.upsert_facts_partitioned(wh, _fact_batch(spark, range(60)))
+    _upsert(wh, _fact_batch(spark, range(60)))
     before = _snapshot(wh.path("fact_events"))
     assert len(before) > 4, "test needs several populated buckets"
 
-    touched = facts_mod.upsert_facts_partitioned(
+    touched = _upsert(
         wh, _fact_batch(spark, [0], status="cancelled")
     )
     after = _snapshot(wh.path("fact_events"))
@@ -108,7 +115,7 @@ def test_legacy_flat_fact_table_migrates_on_first_upsert(spark, tmp_path):
     wh.overwrite("fact_events", legacy)  # old flat layout
     assert "p_bucket" not in wh.read("fact_events").columns
 
-    facts_mod.upsert_facts_partitioned(
+    _upsert(
         wh, _fact_batch(spark, range(20, 35), status="cancelled")
     )
     out = wh.read("fact_events")
