@@ -851,9 +851,7 @@ def storage_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from _event_intelligence_data_warehouse_spark.contract import staging_dir
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
-    wh = Warehouse(
-        spark, staging_dir("storage_dv_roundtrip", sf_dir), manifest=True
-    )
+    wh = Warehouse(spark, staging_dir("storage_dv_roundtrip", sf_dir))
     orders = load(spark, sf_dir, "orders")
     wh.overwrite("ord", orders.repartition(4))
     r1 = wh.delete_where(
@@ -1842,11 +1840,7 @@ def storage_partition_evolution_roundtrip(
         Warehouse, evolve_partitioning,
     )
 
-    wh = Warehouse(
-        spark,
-        staging_dir("storage_partition_evolution", sf_dir),
-        manifest=True,
-    )
+    wh = Warehouse(spark, staging_dir("storage_partition_evolution", sf_dir))
     orders = load(spark, sf_dir, "orders")
     wh.overwrite("ord", orders.repartition(4), partition_col="o_orderstatus")
     m = evolve_partitioning(wh, "ord", "o_orderpriority")
@@ -1903,11 +1897,7 @@ def storage_schema_evolution_roundtrip(
     from _event_intelligence_data_warehouse_spark.contract import staging_dir
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
-    wh = Warehouse(
-        spark,
-        staging_dir("storage_schema_evolution", sf_dir),
-        manifest=True,
-    )
+    wh = Warehouse(spark, staging_dir("storage_schema_evolution", sf_dir))
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1972,9 +1962,7 @@ def storage_zorder_scan_roundtrip(
     from _event_intelligence_data_warehouse_spark.contract import staging_dir
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
-    wh = Warehouse(
-        spark, staging_dir("storage_zorder_scan", sf_dir), manifest=True
-    )
+    wh = Warehouse(spark, staging_dir("storage_zorder_scan", sf_dir))
     orders = load(spark, sf_dir, "orders")
     wh.append("ord", orders.repartition(8))
     wh.cluster_by("ord", ["o_custkey", "o_totalprice"], target_files=8)
@@ -2934,8 +2922,7 @@ def storage_compaction_roundtrip(
     # must NOT erase pinned history — keep every pre-compaction version
     # readable for the time-travel check below.
     wh = Warehouse(
-        spark, staging_dir("storage_compaction", sf_dir), manifest=True,
-        retain_versions=8,
+        spark, staging_dir("storage_compaction", sf_dir), retain_versions=8
     )
     orders = load(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -5541,10 +5528,7 @@ def governance_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # manifest write would otherwise re-plan.
     card = card.localCheckpoint()
 
-    wh = Warehouse(
-        spark, staging_dir("governance_dataset_card", sf_dir),
-        manifest=True,
-    )
+    wh = Warehouse(spark, staging_dir("governance_dataset_card", sf_dir))
     with wh.commit_metadata(kind="dataset_card", sf_dir=sf_dir):
         wh.overwrite("dataset_card", card)
     reread = wh.read("dataset_card")

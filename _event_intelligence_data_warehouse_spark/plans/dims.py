@@ -127,9 +127,12 @@ VENUE_ATTRS = ["venue_name", "city", "country", "latitude", "longitude"]
 def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFrame:
     """Real SCD2 on venue (U5): close + version on attribute change.
     Incoming = one row per venue_nk, deterministic tie-break (the
-    reference's DISTINCT ON is order-undefined — transform_events.sql:106)."""
+    reference's DISTINCT ON is order-undefined — transform_events.sql:106).
+    The tie-break orders by every SCD2 attribute: the key is derived from
+    name and city, so a batch can carry one venue with several
+    coordinates, and the winner must not depend on partitioning."""
     incoming = member_tuples("dim_venue", stg).withColumn(
-        "_pos", F.struct("venue_name", "city")
+        "_pos", F.struct(*VENUE_ATTRS)
     )
     incoming = dedup_keys(
         incoming, ["venue_nk"], [F.asc_nulls_last("_pos")]

@@ -147,13 +147,9 @@ def _sk_base(wh, table: str, full: DataFrame) -> DataFrame | int:
     manifest's column bounds when they are exact, else ``full`` for an
     aggregate over the column. Bounds are not exact when a file lacks
     them, or while deletion vectors hide rows the bounds still cover
-    (``stats_minmax`` returns None in both cases); legacy mode has no
-    bounds."""
-    if wh.manifest:
-        bounds = wh.stats_minmax(table, "event_sk")
-        if bounds is not None:
-            return int(bounds[1])
-    return full
+    (``stats_minmax`` returns None in both cases)."""
+    bounds = wh.stats_minmax(table, "event_sk")
+    return full if bounds is None else int(bounds[1])
 
 
 def upsert_facts_partitioned(
@@ -175,29 +171,20 @@ def upsert_facts_partitioned(
     with dynamic partition overwrite — untouched buckets' files are
     never read or rewritten, so batch cost tracks the touched buckets.
     The surrogate-key base is the max(event_sk) bound in the manifest,
-    which costs no job; legacy mode, and a manifest whose bounds are not
-    exact, fall back to a max aggregate that scans the event_sk column
-    of every live file. ``bulk`` is passed to :func:`upsert_facts`: a
+    which costs no job; a manifest whose bounds are not exact falls back
+    to a max aggregate that scans the event_sk column of every live
+    file. ``bulk`` is passed to :func:`upsert_facts`: a
     caller that knows an upper bound on the batch's new keys saves the
     surrogate-key size probe. Returns the affected bucket ids, sorted
     (for observability/tests)."""
     from _event_intelligence_data_warehouse_spark import schemas
 
     affected = sorted(buckets)
-    migrating = False
     if wh.exists(table):
         full = wh.read(table)
-        if FACT_PART_COL not in full.columns:
-            # One-time migration from the pre-bucketed flat layout: no
-            # partition column on disk means no pruning is possible this
-            # batch — merge against the full image and write it back
-            # partitioned; every later batch prunes.
-            migrating = True
-            existing_aff = full
-        else:
-            existing_aff = full.filter(
-                F.col(FACT_PART_COL).isin(affected)
-            ).drop(FACT_PART_COL)
+        existing_aff = full.filter(
+            F.col(FACT_PART_COL).isin(affected)
+        ).drop(FACT_PART_COL)
         sk_src = _sk_base(wh, table, full)
     else:
         existing_aff = wh.read(table, schemas.FACT_EVENTS)
@@ -205,14 +192,5 @@ def upsert_facts_partitioned(
     merged = upsert_facts(
         existing_aff, incoming, sk_source=sk_src, bulk=bulk
     ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))
-    if migrating:
-        # Dynamic overwrite would leave the legacy flat files at the
-        # table root beside the new partition dirs (double-counted on
-        # read), and an in-place static overwrite would truncate its own
-        # input scan — so replace the full image with a partitioned
-        # write: staged-dir + swap in legacy mode, snapshot + manifest
-        # publish in manifest mode (atomic either way).
-        wh.overwrite(table, merged, FACT_PART_COL)
-    else:
-        wh.overwrite_partitions(table, merged, FACT_PART_COL)
+    wh.overwrite_partitions(table, merged, FACT_PART_COL)
     return affected

@@ -180,11 +180,10 @@ def step_kpis(wh: Warehouse, spark: SparkSession) -> dict[str, DataFrame]:
 
 
 def summary(wh: Warehouse) -> dict[str, int]:
-    """The 7 invariant post-run counts (run_pipeline.py:65-87). In
-    manifest mode they are served from the manifest's per-file row
-    counts, with no Spark job; a table whose count the stats cannot
-    answer exactly (deletion vectors, files without row stats) falls
-    back to ``count()``, as does legacy mode."""
+    """The 7 invariant post-run counts (run_pipeline.py:65-87), served
+    from the manifests' per-file row counts with no Spark job; a table
+    whose count the stats cannot answer exactly (deletion vectors, files
+    without row stats) falls back to ``count()``."""
     out = {}
     for t in [
         "raw_events",
@@ -195,7 +194,7 @@ def summary(wh: Warehouse) -> dict[str, int]:
         "fact_events",
         "quality_log",
     ]:
-        n = wh.stats_count(t) if wh.manifest else None
+        n = wh.stats_count(t)
         if n is None:
             try:
                 n = wh.read(t).count()
@@ -207,8 +206,7 @@ def summary(wh: Warehouse) -> dict[str, int]:
 
 def run_pipeline(spark: SparkSession, warehouse_dir: str, args=None) -> dict:
     args = args or parse_args([])
-    wh = Warehouse(spark, warehouse_dir,
-                   manifest=getattr(args, "manifest", False))
+    wh = Warehouse(spark, warehouse_dir)
     run_id = str(uuid.uuid4())
     result: dict = {"run_id": run_id}
     if not args.skip_ingest:
@@ -231,10 +229,10 @@ def parse_args(argv):
     p.add_argument("--skip-ingest", action="store_true")
     p.add_argument("--api-key", default=None)
     p.add_argument("--warehouse-dir", default="./warehouse_data")
+    # Accepted and ignored: manifest commits are the only table format,
+    # and scripts written when this flag chose it still pass it.
     p.add_argument("--manifest", action="store_true",
-                   help="run the warehouse in manifest-commit mode "
-                        "(object-store-safe atomic publishes, time "
-                        "travel, data skipping)")
+                   help=argparse.SUPPRESS)
     return p.parse_args(argv)
 
 

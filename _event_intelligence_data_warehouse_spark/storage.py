@@ -1,31 +1,29 @@
-"""Parquet table storage with atomic overwrite-swap and watermark metadata.
+"""Parquet table storage: manifest commits and watermark metadata.
 
 The reference mutates Postgres tables in place (``ON CONFLICT DO UPDATE``,
-``UPDATE ... SET is_processed``). Parquet is immutable, so mutation becomes
-*rewrite + atomic swap*: write the new table image to ``<table>.__tmp__``,
-then ``rename`` over the live directory. On a real deployment this slots
-behind Delta/Iceberg ``MERGE``; the interface here is format-agnostic.
+``UPDATE ... SET is_processed``). Parquet is immutable, so every mutation
+becomes a commit: data files are only ever ADDED under immutable snapshot
+directories (``<table>/data/s<id>/``), and what constitutes the table is a
+versioned manifest (``<table>/_manifests/v%08d.json``, an explicit
+live-file list) published by atomically replacing ONE small pointer file
+(``_manifests/CURRENT``). A single-key replace is atomic on POSIX
+(``os.replace``) and on object stores (single-object PUT), so readers
+resolve CURRENT -> manifest -> files and observe either the whole old
+image or the whole new one — never a partition mix, regardless of where
+a writer crashed. This is the commit shape of Delta Lake and Iceberg
+(snapshot isolation via a metadata pointer), scaled down to a JSON file.
+Multi-partition operations (dynamic-overwrite-style upsert, compaction)
+are atomic for free: the new manifest swaps in replaced partitions'
+files and keeps untouched partitions' entries, in one publish.
 
 Incremental state (the reference's ``is_processed`` flag) is replaced by a
 high-watermark on ``ingested_at`` persisted in ``_meta/watermarks.json`` —
 a pure predicate that turns into parquet min/max + partition pruning at
 scale instead of a full-table rewrite per batch (SURVEY.md §2.5 U7).
 
-**Manifest mode** (``Warehouse(spark, root, manifest=True)``) is the
-object-store-safe commit protocol the rename-swap cannot provide: data
-files are only ever ADDED under immutable snapshot directories
-(``<table>/data/s<id>/``), and what constitutes the table is a versioned
-manifest (``<table>/_manifests/v%08d.json``, an explicit live-file list)
-published by atomically replacing ONE small pointer file
-(``_manifests/CURRENT``). A single-key replace is atomic on POSIX
-(``os.replace``) and on object stores (single-object PUT), so readers
-resolve CURRENT -> manifest -> files and observe either the whole old
-image or the whole new one — never a partition mix, regardless of where
-a writer crashed. This is the same commit shape as Iceberg/Delta
-(snapshot isolation via metadata pointer), scaled down to a JSON file.
-Multi-partition operations (dynamic-overwrite-style upsert, compaction)
-become atomic for free: the new manifest swaps in replaced partitions'
-files and keeps untouched partitions' entries, in one publish.
+A table directory written before manifests existed (plain parquet files,
+possibly ``<col>=<value>/`` partitioned) is upgraded once, on first
+access: :meth:`Warehouse._adopt_if_legacy` rewrites it into one snapshot.
 """
 
 from __future__ import annotations
@@ -150,13 +148,19 @@ class Warehouse:
     """A directory of named parquet tables + tiny JSON metadata."""
 
     def __init__(self, spark: SparkSession, root: str, *,
-                 manifest: bool = False, retain_versions: int = 1,
+                 manifest: bool = True, retain_versions: int = 1,
                  bloom_cols: dict[str, list[str]] | None = None,
                  bloom_bits: int = 8192,
                  constraints: dict | None = None):
+        # ``manifest`` has one accepted value; the keyword stays so that
+        # callers written when it chose between two formats still work.
+        if not manifest:
+            raise ValueError(
+                "Warehouse(manifest=False): the rename-swap table format "
+                "was removed; every table commits through its manifest"
+            )
         self.spark = spark
         self.root = root
-        self.manifest = manifest
         # Warehouse-level time-travel retention: vacuum() and the
         # internal maintenance rewrites (compact, cluster_by) keep this
         # many newest committed versions readable — so routine
@@ -186,51 +190,40 @@ class Warehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        if self.manifest and self._current_version(table) > 0:
-            return bool(self._manifest(table)["files"])
-        p = self.path(table)
-        if not os.path.isdir(p):
-            return False
-        for entry in os.listdir(p):
-            if entry.endswith(".parquet") or entry == "_SUCCESS":
-                return True
-            # Partitioned layout: dynamic partition overwrite leaves no
-            # root _SUCCESS marker; data lives under <col>=<value>/ dirs.
-            sub = os.path.join(p, entry)
-            if "=" in entry and os.path.isdir(sub) and any(
-                f.endswith(".parquet") for f in os.listdir(sub)
-            ):
-                return True
-        return False
+        return bool(self._adopt_if_legacy(table)["files"])
 
     # -- read --------------------------------------------------------------
     def read(
         self, table: str, schema: T.StructType | None = None, *,
         version: int | None = None,
     ) -> DataFrame:
-        """Read the table's CURRENT image, or (manifest mode) a committed
-        historical ``version`` — time travel: every commit publishes an
-        immutable manifest, so any still-vacuum-retained snapshot is
-        readable by resolving its manifest instead of the pointer. The
+        """Read the table's CURRENT image, or a committed historical
+        ``version`` — time travel: every commit publishes an immutable
+        manifest, so any still-vacuum-retained snapshot is readable by
+        resolving its manifest instead of the pointer. The
         reproducible-training-data primitive: pin a dataset to the exact
         file set a run trained on, diff versions, audit what changed.
 
-        A manifest-mode read runs no schema-inference job: each snapshot
-        group's schema comes from its first file's parquet footer, read
-        in-process. Legacy-adopted root files and files without
-        Spark's footer schema fall back to inference, as does legacy
-        (non-manifest) mode."""
-        if self.manifest:
-            return self._m_read(table, schema, version=version)
+        A read runs no schema-inference job: each snapshot group's schema
+        comes from its first file's parquet footer, read in-process.
+        Files without Spark's footer schema fall back to inference."""
         if version is not None:
-            raise ValueError(
-                "time-travel reads require Warehouse(manifest=True)"
-            )
-        if self.exists(table):
-            return self.spark.read.parquet(self.path(table))
-        if schema is None:
-            raise FileNotFoundError(f"table {table!r} missing and no schema given")
-        return self.spark.createDataFrame([], schema)
+            if version not in self._committed_chain(table):
+                raise FileNotFoundError(
+                    f"table {table!r} version {version} is not on the "
+                    "committed chain (orphan from a crashed writer, "
+                    "never published, or expired by vacuum)"
+                )
+            m = self._manifest(table, version)
+        else:
+            m = self._adopt_if_legacy(table)
+        if not m["files"]:
+            if schema is None:
+                raise FileNotFoundError(
+                    f"table {table!r} missing and no schema given"
+                )
+            return self.spark.createDataFrame([], schema)
+        return self._read_files_dv(table, m, m["files"])
 
     # -- write -------------------------------------------------------------
     def check_constraints(self, table: str, df: DataFrame) -> None:
@@ -258,50 +251,34 @@ class Warehouse:
 
     def append(self, table: str, df: DataFrame) -> None:
         self.check_constraints(table, df)
-        if self.manifest:
-            m = self._adopt_if_legacy(table)
-            pcol = m.get("partition_col")
-            new = self._write_snapshot(
-                table, df, pcol if pcol and pcol in df.columns else None
-            )
-            stats = {**m.get("stats", {}), **self._collect_minmax(table, new)}
-            dvs, dvm = self._carry_dvs(m, m["files"] + new)
-            self._publish(table, m["files"] + new, pcol, "append",
-                          stats=stats, expect_version=m["version"],
-                          dvs=dvs, dv_meta=dvm)
-            return
-        df.write.mode("append").parquet(self.path(table))
+        m = self._adopt_if_legacy(table)
+        pcol = m.get("partition_col")
+        new = self._write_snapshot(
+            table, df, pcol if pcol and pcol in df.columns else None
+        )
+        stats = {**m.get("stats", {}), **self._collect_minmax(table, new)}
+        dvs, dvm = self._carry_dvs(m, m["files"] + new)
+        self._publish(table, m["files"] + new, pcol, "append",
+                      stats=stats, expect_version=m["version"],
+                      dvs=dvs, dv_meta=dvm)
 
     def overwrite(
         self, table: str, df: DataFrame, partition_col: str | None = None
     ) -> None:
         """Full-image replace (optionally written partitioned so readers
-        keep pruning). Legacy mode: stage to a temp dir, swap directories
-        — two renames on one filesystem; a crash leaves either the old or
-        the new image plus a leftover temp dir. Manifest mode: write a
-        fresh snapshot and publish a manifest listing only it — atomic on
-        object stores too (single pointer-file replace)."""
+        keep pruning): write a fresh snapshot and publish a manifest
+        listing only it. The input may read the table itself, since the
+        files it scans stay in place until vacuum."""
         self.check_constraints(table, df)
-        if self.manifest:
-            files = self._write_snapshot(table, df, partition_col)
-            # schema_ops=[] resets the evolution log: an overwrite is a
-            # full-image replace that materializes its own schema, and
-            # replaying carried ops against a fresh frame that
-            # legitimately reuses a previously dropped/renamed-away
-            # column name would hide or duplicate columns.
-            self._publish(table, files, partition_col, "overwrite",
-                          stats=self._collect_minmax(table, files),
-                          schema_ops=[])
-            return
-        live = self.path(table)
-        tmp = live + ".__tmp__" + uuid.uuid4().hex[:8]
-        # Writing from the live dir to tmp first makes self-referential
-        # rewrites (read table -> transform -> overwrite table) safe.
-        w = df.write.mode("overwrite")
-        if partition_col is not None:
-            w = w.partitionBy(partition_col)
-        w.parquet(tmp)
-        self._swap(live, tmp)
+        files = self._write_snapshot(table, df, partition_col)
+        # schema_ops=[] resets the evolution log: an overwrite is a
+        # full-image replace that materializes its own schema, and
+        # replaying carried ops against a fresh frame that legitimately
+        # reuses a previously dropped/renamed-away column name would hide
+        # or duplicate columns.
+        self._publish(table, files, partition_col, "overwrite",
+                      stats=self._collect_minmax(table, files),
+                      schema_ops=[])
 
     def overwrite_partitions(
         self, table: str, df: DataFrame, partition_col: str
@@ -314,48 +291,39 @@ class Warehouse:
         rewrite cost is proportional to the increment, not the table
         (contrast ``overwrite``, which rewrites the full image).
 
-        Legacy mode is not atomic across partitions (a crash can leave a
-        partition mix). Manifest mode IS: the new partitions' files land
-        in a fresh snapshot dir, and one manifest publish atomically swaps
+        The swap is atomic across partitions: the new partitions' files
+        land in a fresh snapshot dir, and one manifest publish replaces
         the replaced partitions' entries while keeping every untouched
         partition's — readers resolve the pointer and never observe a mix.
         """
         self.check_constraints(table, df)
-        if self.manifest:
-            m = self._adopt_if_legacy(table)
-            bad = [
-                f for f in m["files"]
-                if self._partition_of(f, partition_col) is None
-            ]
-            if bad:
-                raise ValueError(
-                    f"table {table!r} has files outside the "
-                    f"{partition_col}= layout (e.g. {bad[0]!r}); "
-                    "migrate with overwrite(df, partition_col) first"
-                )
-            new = self._write_snapshot(table, df, partition_col)
-            touched = {self._partition_of(f, partition_col) for f in new}
-            kept = [
-                f for f in m["files"]
-                if self._partition_of(f, partition_col) not in touched
-            ]
-            old_stats = m.get("stats", {})
-            stats = {
-                **{f: old_stats[f] for f in kept if f in old_stats},
-                **self._collect_minmax(table, new),
-            }
-            dvs, dvm = self._carry_dvs(m, kept + new)
-            self._publish(table, kept + new, partition_col,
-                          "overwrite_partitions", stats=stats,
-                          expect_version=m["version"],
-                          dvs=dvs, dv_meta=dvm)
-            return
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(self.path(table))
-        )
+        m = self._adopt_if_legacy(table)
+        bad = [
+            f for f in m["files"]
+            if self._partition_of(f, partition_col) is None
+        ]
+        if bad:
+            raise ValueError(
+                f"table {table!r} has files outside the "
+                f"{partition_col}= layout (e.g. {bad[0]!r}); "
+                "migrate with overwrite(df, partition_col) first"
+            )
+        new = self._write_snapshot(table, df, partition_col)
+        touched = {self._partition_of(f, partition_col) for f in new}
+        kept = [
+            f for f in m["files"]
+            if self._partition_of(f, partition_col) not in touched
+        ]
+        old_stats = m.get("stats", {})
+        stats = {
+            **{f: old_stats[f] for f in kept if f in old_stats},
+            **self._collect_minmax(table, new),
+        }
+        dvs, dvm = self._carry_dvs(m, kept + new)
+        self._publish(table, kept + new, partition_col,
+                      "overwrite_partitions", stats=stats,
+                      expect_version=m["version"],
+                      dvs=dvs, dv_meta=dvm)
 
     # -- manifest commit protocol ------------------------------------------
     # Layout: <table>/data/s<id>/... immutable snapshot dirs (only ever
@@ -390,27 +358,58 @@ class Warehouse:
             ) from None
 
     def _adopt_if_legacy(self, table: str) -> dict:
-        """Current manifest; if none exists but the directory holds a
-        legacy (pre-manifest) parquet layout, synthesize and publish v1
-        from its file listing so manifest ops compose with old tables."""
+        """The current manifest, after a one-time upgrade of files in the
+        pre-manifest layout: plain parquet files at the table root or
+        under ``<col>=<value>/`` dirs. A table written before manifests
+        existed has only such files and no manifest; a table adopted by an
+        earlier release has a manifest that lists them. This is the only
+        code that reads that layout. The files are read with mergeSchema
+        (they come from many writes), rewritten into one snapshot that
+        takes their place in a new version, and vacuum then deletes them.
+        Afterwards every live file sits in a ``data/s<id>/`` dir."""
         m = self._manifest(table)
-        if m["version"] > 0:
-            return m
         base = self.path(table)
-        files: list[str] = []
-        pcol = None
-        for root, dirs, fs in os.walk(base):
-            dirs[:] = [d for d in dirs if d != "_manifests"]
-            for f in fs:
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, f), base)
-                    files.append(rel)
-                    head = rel.split(os.sep)[0]
-                    if "=" in head:
-                        pcol = head.split("=", 1)[0]
-        if not files:
+        if m["version"] > 0:
+            old = [
+                f for f in m["files"]
+                if "data" not in os.path.normpath(f).split(os.sep)
+            ]
+        else:
+            old = []
+            for root, dirs, fs in os.walk(base):
+                if root == base:
+                    # a crashed first commit's snapshot is not table data
+                    dirs[:] = [
+                        d for d in dirs if d not in ("_manifests", "data")
+                    ]
+                old += [
+                    os.path.relpath(os.path.join(root, f), base)
+                    for f in fs if f.endswith(".parquet")
+                ]
+        if not old:
             return m
-        return self._publish(table, files, pcol, "adopt_legacy")
+        pcol = m.get("partition_col") or next(
+            (h.split("=", 1)[0] for h in (f.split(os.sep)[0] for f in old)
+             if "=" in h), None,
+        )
+        df = (
+            self.spark.read.option("basePath", base)
+            .option("mergeSchema", "true")
+            .parquet(*sorted(os.path.join(base, f) for f in old))
+        )
+        new = self._write_snapshot(table, df, pcol)
+        kept = [f for f in m["files"] if f not in set(old)]
+        old_stats = m.get("stats", {})
+        stats = {
+            **{f: old_stats[f] for f in kept if f in old_stats},
+            **self._collect_minmax(table, new),
+        }
+        dvs, dvm = self._carry_dvs(m, kept + new)
+        m = self._publish(table, kept + new, pcol, "adopt_legacy",
+                          stats=stats, expect_version=m["version"],
+                          dvs=dvs, dv_meta=dvm)
+        self.vacuum(table)
+        return m
 
     def _publish(
         self, table: str, files: list[str], partition_col: str | None,
@@ -760,12 +759,6 @@ class Warehouse:
         """(surviving file list, total live files) for ``filters`` —
         each ``(col, op, value)`` with op in {==, <, <=, >, >=} — using
         manifest min/max bounds plus partition-path values."""
-        if not self.manifest:
-            # Never side-effect a legacy warehouse (_adopt_if_legacy
-            # would publish a manifest the caller didn't opt into).
-            raise ValueError(
-                "pruned_files requires Warehouse(manifest=True)"
-            )
         m = (
             self._manifest(table, version) if version is not None
             else self._adopt_if_legacy(table)
@@ -814,8 +807,6 @@ class Warehouse:
         satisfy ``filters`` are never handed to Spark; the same filters
         are then applied as DataFrame predicates, so results are exactly
         ``read(table).filter(...)`` — only cheaper."""
-        if not self.manifest:
-            raise ValueError("scan() pruning requires Warehouse(manifest=True)")
         if version is not None and version not in self._committed_chain(table):
             raise FileNotFoundError(
                 f"table {table!r} version {version} is not on the "
@@ -874,43 +865,17 @@ class Warehouse:
                 return comp[len(partition_col) + 1:]
         return None
 
-    def _m_read(
-        self, table: str, schema: T.StructType | None = None, *,
-        version: int | None = None,
-    ) -> DataFrame:
-        if version is not None:
-            if version not in self._committed_chain(table):
-                raise FileNotFoundError(
-                    f"table {table!r} version {version} is not on the "
-                    "committed chain (orphan from a crashed writer, "
-                    "never published, or expired by vacuum)"
-                )
-            m = self._manifest(table, version)
-        else:
-            m = self._adopt_if_legacy(table)
-        if not m["files"]:
-            if schema is None:
-                raise FileNotFoundError(
-                    f"table {table!r} missing and no schema given"
-                )
-            return self.spark.createDataFrame([], schema)
-        return self._read_files_dv(table, m, m["files"])
-
     # Deletion-vector row identity: (file key, parquet row index). The
     # key is the path suffix below the LAST /data/ component — stable
     # across warehouse moves and shallow clones (a borrowed file keeps
     # its source snapshot-dir name), and snapshot dirs are uuid-named so
-    # suffixes never collide. Legacy-adopted root files have no /data/
-    # component and are not DV-addressable (delete_where(mode="dv")
-    # rejects them with the migration fix).
+    # suffixes never collide.
     _DV_KEY = "__dv_key"
     _DV_POS = "__dv_pos"
 
     @staticmethod
-    def _dv_key_of_rel(rel: str) -> str | None:
+    def _dv_key_of_rel(rel: str) -> str:
         posix = "/" + os.path.normpath(rel).replace(os.sep, "/")
-        if "/data/" not in posix:
-            return None
         return posix.rsplit("/data/", 1)[1]
 
     def _carry_dvs(
@@ -927,11 +892,7 @@ class Warehouse:
         if not dvs:
             return [], {}
         meta = m.get("dv_meta") or {}
-        live = {
-            k for k in (
-                self._dv_key_of_rel(f) for f in published_files
-            ) if k is not None
-        }
+        live = {self._dv_key_of_rel(f) for f in published_files}
         kept = [
             rel for rel in dvs
             if meta.get(rel) is None or set(meta[rel]) & live
@@ -951,8 +912,6 @@ class Warehouse:
         base = self.path(table)
         dvs = m.get("dv_files") or []
         ops = m.get("schema_ops")
-        if not files:
-            return self._read_file_list(base, files, schema_ops=ops)
         if not dvs:
             return self._read_file_list(base, files, schema_ops=ops)
         df = self._read_file_list(base, files, rowpos=True, schema_ops=ops)
@@ -998,53 +957,34 @@ class Warehouse:
         self, base: str, files: list[str], *, rowpos: bool = False,
         schema_ops: list | None = None,
     ) -> DataFrame:
-        # Group by snapshot root so partition values recover from the
-        # <col>=<val>/ path components under each basePath; compaction
-        # collapses the table to one group, bounding the union width.
+        # Group by snapshot dir (the component after the last data/) so
+        # partition values recover from the <col>=<val>/ path components
+        # under each basePath; compaction collapses the table to one
+        # group, bounding the union width.
         groups: dict[str, list[str]] = {}
-        snapshots: set[str] = set()  # roots that are one data/s* dir
         for rel in files:
             # Normalize first: a shallow clone's entries reach into the
             # source table ("../src/data/s*/..."), and basePath must be
             # an ancestor of the resolved file or Spark rejects it.
             full = os.path.normpath(os.path.join(base, rel))
-            nparts = os.path.relpath(full, base).split(os.sep)
-            if nparts[0] == "data" and len(nparts) >= 2:
-                root = os.path.join(base, *nparts[:2])
-                snapshots.add(root)
-            elif ".." in nparts:
-                # borrowed file: group by ITS snapshot root (or its
-                # table dir) so partition recovery still works
-                fparts = full.split(os.sep)
-                if "data" in fparts:
-                    di = len(fparts) - 1 - fparts[::-1].index("data")
-                    root = os.sep.join(fparts[: di + 2])
-                    snapshots.add(root)
-                else:
-                    root = os.path.dirname(full)
-            else:
-                root = base
-            groups.setdefault(root, []).append(full)
+            parts = full.split(os.sep)
+            di = len(parts) - 1 - parts[::-1].index("data")
+            groups.setdefault(os.sep.join(parts[: di + 2]), []).append(full)
         # No schema-inference job: files inside one data/s* snapshot dir
         # come from a single Spark job and share a schema, so the first
         # file's footer (read here, in-process) is the schema Spark
         # would infer, and it is passed to the reader; partition columns
-        # are still discovered from the paths. Two cases keep inference:
-        # the legacy-adopted base-root group (files from many historical
-        # writes, merged with mergeSchema) and footers without Spark's
-        # schema key (files Spark did not write). Cross-SNAPSHOT
-        # evolution is handled by the allowMissingColumns union below.
+        # are still discovered from the paths. Footers without Spark's
+        # schema key (files Spark did not write) keep inference.
+        # Cross-SNAPSHOT evolution is handled by the allowMissingColumns
+        # union below.
         dfs = []
         for root, fs in sorted(groups.items()):
             fs = sorted(fs)
             reader = self.spark.read.option("basePath", root)
-            schema = footer_spark_schema(fs[0]) if root in snapshots else None
+            schema = footer_spark_schema(fs[0])
             if schema is not None:
                 reader = reader.schema(schema)
-            else:
-                reader = reader.option(
-                    "mergeSchema", "true" if root == base else "false"
-                )
             dfs.append(reader.parquet(*fs))
         if rowpos:
             # row identity for deletion vectors, resolved per group
@@ -1068,9 +1008,8 @@ class Warehouse:
         out = dfs[0]
         # Schema evolution across snapshots: an append that added a
         # column leaves older snapshots without it — surface those rows
-        # with NULLs (mergeSchema handles files WITHIN a snapshot group,
-        # allowMissingColumns across groups), the additive-evolution
-        # semantics of every table format.
+        # with NULLs, the additive-evolution semantics of every table
+        # format.
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
@@ -1079,8 +1018,8 @@ class Warehouse:
         """Version numbers on the committed lineage, newest first: walk
         ``parent`` links from CURRENT. Orphan manifests (crashed writers
         that never replaced the pointer) occupy numbers but are on no
-        one's parent link, so they never appear. Legacy manifests
-        predating the ``parent`` field fall back to the next-lower
+        one's parent link, so they never appear. Manifests written
+        before the ``parent`` field existed fall back to the next-lower
         manifest file on disk (those layouts were written strictly
         sequentially)."""
         return [v for v, _m in self._chain_manifests(table)]
@@ -1150,7 +1089,7 @@ class Warehouse:
         self, table: str, cols: list[str], *,
         bits: int = 8, target_files: int | None = None,
     ) -> dict:
-        """Z-order clustering rewrite (manifest mode): reorder the table
+        """Z-order clustering rewrite: reorder the table
         along the interleaved-bit curve of ``cols`` so each rewritten
         file covers a narrow range in EVERY clustered column — the
         rewrite that turns the manifest's min/max bounds into effective
@@ -1164,8 +1103,6 @@ class Warehouse:
         z-value. Commits as one new version with fresh per-file bounds,
         then vacuums the replaced files. Returns {files_before,
         files_after, cols}."""
-        if not self.manifest:
-            raise ValueError("cluster_by requires Warehouse(manifest=True)")
         if not cols or bits * len(cols) > 63:
             raise ValueError(
                 f"bits * len(cols) must fit a 64-bit z-value "
@@ -1266,7 +1203,9 @@ class Warehouse:
         no retired manifest ever referenced) are only collected once
         older than ``grace_seconds``, so vacuum can run alongside live
         writers; files that WERE referenced by a now-expired manifest
-        are definitively replaced and deleted regardless of age.
+        are definitively replaced and deleted regardless of age, as are
+        unreferenced files outside ``data/`` (writers only write under
+        it, so those are left from a pre-manifest layout).
         Returns the number of data files removed."""
         import time
 
@@ -1326,33 +1265,15 @@ class Warehouse:
                 rel = os.path.normpath(os.path.relpath(p, base))
                 if rel in live or rel in inflight_refs:
                     continue
-                if rel not in retired_refs and not _old(p):
+                in_data = rel.split(os.sep)[0] == "data"
+                if in_data and rel not in retired_refs and not _old(p):
                     continue  # may belong to an in-flight snapshot write
                 os.remove(p)
                 removed += 1
-        data_dir = os.path.join(base, "data")
-        if os.path.isdir(data_dir):
-            for root, dirs, fs in os.walk(data_dir, topdown=False):
-                if not os.listdir(root):
-                    os.rmdir(root)
+        for root, dirs, fs in os.walk(base, topdown=False):
+            if root != base and not os.listdir(root):
+                os.rmdir(root)
         return removed
-
-    @staticmethod
-    def _swap(live: str, staged: str) -> None:
-        """Two-rename promotion of a fully-written dir over the live one;
-        a crash leaves either image intact plus a cleanable leftover."""
-        old = live + ".__old__" + uuid.uuid4().hex[:8]
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(staged, live)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-
-    def replace_with(self, table: str, staged: str) -> None:
-        """Promote a staged table directory over the live one. For
-        rewrites whose input is the live table itself, where an in-place
-        overwrite would truncate its own scan."""
-        self._swap(self.path(table), self.path(staged))
 
     # -- watermarks --------------------------------------------------------
     @property
@@ -1381,30 +1302,20 @@ class Warehouse:
 
     # -- compaction --------------------------------------------------------
     def file_stats(self, table: str) -> tuple[int, int]:
-        """(n_part_files, total_bytes) for a table — the LIVE image: in
-        manifest mode only CURRENT-referenced files count (stale
-        snapshots awaiting vacuum don't), else the directory walk."""
-        if self.manifest and self._current_version(table) > 0:
-            base = self.path(table)
-            files = self._manifest(table)["files"]
-            return len(files), sum(
-                os.path.getsize(os.path.join(base, f)) for f in files
-            )
-        n = 0
-        total = 0
-        for root, dirs, files in os.walk(self.path(table)):
-            dirs[:] = [d for d in dirs if d != "_manifests"]
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += 1
-                    total += os.path.getsize(os.path.join(root, f))
-        return n, total
+        """(n_part_files, total_bytes) for a table — the LIVE image: only
+        CURRENT-referenced files count (stale snapshots awaiting vacuum
+        don't)."""
+        base = self.path(table)
+        files = self._adopt_if_legacy(table)["files"]
+        return len(files), sum(
+            os.path.getsize(os.path.join(base, f)) for f in files
+        )
 
     def compact(
         self, table: str, target_file_bytes: int = 128 * 1024 * 1024
     ) -> dict:
         """Small-file compaction for an UNPARTITIONED table: rewrite its
-        part files into ~target-size files and atomically swap. The
+        part files into ~target-size files and publish them. The
         chronic cost of incremental appends — every micro-batch leaves a
         file, and at 100 TB a scan then pays per-file footer reads and
         task-scheduling overhead linear in file count, not data. The
@@ -1414,18 +1325,12 @@ class Warehouse:
         files_before, total = self.file_stats(table)
         n_out = max(1, -(-total // max(1, target_file_bytes)))
         df = self.read(table)
-        if self.manifest:
-            base_v = self._current_version(table)
-            files = self._write_snapshot(table, df.coalesce(n_out))
-            self._publish(table, files, None, "compact",
-                          stats=self._collect_minmax(table, files),
-                          expect_version=base_v)
-            self.vacuum(table)
-        else:
-            live = self.path(table)
-            tmp = live + ".__tmp__" + uuid.uuid4().hex[:8]
-            df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-            self._swap(live, tmp)
+        base_v = self._current_version(table)
+        files = self._write_snapshot(table, df.coalesce(n_out))
+        self._publish(table, files, None, "compact",
+                      stats=self._collect_minmax(table, files),
+                      expect_version=base_v)
+        self.vacuum(table)
         files_after, _ = self.file_stats(table)
         return {
             "files_before": files_before,
@@ -1436,7 +1341,7 @@ class Warehouse:
     def compact_partitions_where(
         self, table: str, partition_col: str, *, min_files: int = 2,
     ) -> dict:
-        """PARTIAL compaction (manifest mode): rewrite only partitions
+        """PARTIAL compaction: rewrite only partitions
         holding >= ``min_files`` live files into one file each; every
         other partition's files carry into the new version verbatim —
         zero bytes moved for them. The trickle-append maintenance op at
@@ -1448,10 +1353,6 @@ class Warehouse:
 
         Returns {partitions_rewritten, files_before, files_after,
         carried, version} (version None when nothing is fragmented)."""
-        if not self.manifest:
-            raise ValueError(
-                "compact_partitions_where requires Warehouse(manifest=True)"
-            )
         m = self._adopt_if_legacy(table)
         pcol = m.get("partition_col")
         if pcol != partition_col:
@@ -1508,31 +1409,16 @@ class Warehouse:
         files into one file per partition (each partition's data
         repartitions to its own single task — the partition column is
         the shuffle key, so partition boundaries are preserved exactly
-        and readers keep pruning).
-
-        Crash safety: legacy mode stages the compacted image to a temp
-        dir and promotes it with the same two-rename swap every other
-        full rewrite uses — an intact fallback image exists at every
-        instant (an in-place dynamic overwrite of the table's own scan
-        would not have one). Manifest mode publishes the compacted
-        snapshot as one new version, then vacuums the replaced files."""
+        and readers keep pruning). The compacted snapshot is published
+        as one new version, then the replaced files are vacuumed."""
         files_before, total = self.file_stats(table)
-        df = self.read(table)
-        compacted = df.repartition(F.col(partition_col))
-        if self.manifest:
-            base_v = self._current_version(table)
-            files = self._write_snapshot(table, compacted, partition_col)
-            self._publish(table, files, partition_col, "compact_partitions",
-                          stats=self._collect_minmax(table, files),
-                          expect_version=base_v)
-            self.vacuum(table)
-        else:
-            live = self.path(table)
-            tmp = live + ".__tmp__" + uuid.uuid4().hex[:8]
-            compacted.write.mode("overwrite").partitionBy(
-                partition_col
-            ).parquet(tmp)
-            self._swap(live, tmp)
+        compacted = self.read(table).repartition(F.col(partition_col))
+        base_v = self._current_version(table)
+        files = self._write_snapshot(table, compacted, partition_col)
+        self._publish(table, files, partition_col, "compact_partitions",
+                      stats=self._collect_minmax(table, files),
+                      expect_version=base_v)
+        self.vacuum(table)
         files_after, _ = self.file_stats(table)
         return {
             "files_before": files_before,
@@ -1555,8 +1441,6 @@ class Warehouse:
         every pruned file is fully outside — the Delta/Iceberg
         stats-only fast path; anything partial returns None rather
         than an estimate."""
-        if not self.manifest:
-            raise ValueError("stats_count requires Warehouse(manifest=True)")
         m = self._adopt_if_legacy(table)
         if m.get("dv_files"):
             # merge-on-read deletes: per-file row counts no longer
@@ -1621,10 +1505,6 @@ class Warehouse:
         could hide the true extremum -> None, never a guess). Deletion
         vectors also give None: the bounds still cover the rows they
         hide, so the live extremum may lie inside them."""
-        if not self.manifest:
-            raise ValueError(
-                "stats_minmax requires Warehouse(manifest=True)"
-            )
         m = self._adopt_if_legacy(table)
         if m.get("dv_files"):
             return None
@@ -1666,7 +1546,7 @@ class Warehouse:
     def delete_where(
         self, table: str, filters: list[tuple], *, mode: str = "rewrite",
     ) -> dict:
-        """Row-level DELETE (manifest mode): rows matching ALL
+        """Row-level DELETE: rows matching ALL
         ``(col, op, value)`` filters are removed; rows where the
         predicate is NULL (NULL column value, or a file predating the
         column) are KEPT — SQL DELETE's three-valued logic.
@@ -1691,8 +1571,6 @@ class Warehouse:
         Returns {version, candidates, carried, rows_deleted,
         files_rewritten}; ``version`` is None for the no-op case (no
         candidate files, or — dv mode — no newly matched rows)."""
-        if not self.manifest:
-            raise ValueError("delete_where requires Warehouse(manifest=True)")
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"unknown delete mode {mode!r}")
         m = self._adopt_if_legacy(table)
@@ -1704,14 +1582,6 @@ class Warehouse:
                     "files_rewritten": 0}
         pcol = m.get("partition_col")
         if mode == "dv":
-            bad = [f for f in cands if self._dv_key_of_rel(f) is None]
-            if bad:
-                raise ValueError(
-                    f"table {table!r} has legacy-adopted files outside "
-                    f"a data/ snapshot (e.g. {bad[0]!r}) — not "
-                    "DV-addressable; run compact()/overwrite() to "
-                    "migrate, or use mode='rewrite'"
-                )
             # existing DVs applied first, so re-deleting an already
             # deleted row is a no-op rather than a recount. The
             # schema-op replay applies here too: a filter on a renamed/
@@ -1792,7 +1662,7 @@ class Warehouse:
     def update_where(
         self, table: str, filters: list[tuple], assignments: dict,
     ) -> dict:
-        """Copy-on-write row-level UPDATE (manifest mode): rows matching
+        """Copy-on-write row-level UPDATE: rows matching
         ALL filters get each ``assignments[col]`` (a Column expression
         over the pre-update row, or a SQL-string expression) applied;
         NULL-predicate rows are untouched, mirroring SQL UPDATE.
@@ -1804,8 +1674,6 @@ class Warehouse:
         Returns {version, candidates, carried, rows_updated,
         files_rewritten}; ``version`` is None when pruning proves no
         file can match."""
-        if not self.manifest:
-            raise ValueError("update_where requires Warehouse(manifest=True)")
         m = self._adopt_if_legacy(table)
         pcol = m.get("partition_col")
         if pcol and pcol in assignments:
@@ -1874,10 +1742,10 @@ class Warehouse:
         self, table: str, source: DataFrame, keys: list[str], *,
         when_matched: str = "update", insert_not_matched: bool = True,
     ) -> dict:
-        """Delta-style MERGE with stats-based file pruning (manifest
-        mode): target rows whose key matches a source row are replaced
-        by the source row (``when_matched='update'``, whole-row upsert)
-        or removed (``'delete'``); unmatched source rows are inserted
+        """Delta-style MERGE with stats-based file pruning: target rows
+        whose key matches a source row are replaced by the source row
+        (``when_matched='update'``, whole-row upsert) or removed
+        (``'delete'``); unmatched source rows are inserted
         (``insert_not_matched``). The source must be unique per key
         tuple — MERGE's own precondition (checked; duplicate source
         keys raise rather than silently double-applying).
@@ -1895,12 +1763,10 @@ class Warehouse:
         Returns {version, candidates, carried, rows_matched,
         rows_inserted, files_rewritten}. ``rows_matched`` counts
         matched TARGET rows (replaced or removed — more than the
-        matched source-key count if pre-manifest appends left duplicate
-        key tuples in the target); ``rows_inserted`` is computed
+        matched source-key count if earlier appends left duplicate key
+        tuples in the target); ``rows_inserted`` is computed
         directly (source rows with no candidate target key), never
         derived by subtraction from rows_matched."""
-        if not self.manifest:
-            raise ValueError("merge_into requires Warehouse(manifest=True)")
         if when_matched not in ("update", "delete"):
             raise ValueError(
                 f"when_matched must be 'update' or 'delete', got "
@@ -1926,7 +1792,7 @@ class Warehouse:
         # allowMissingColumns union — fail loud instead.
         if when_matched == "update" and self.exists(table):
             missing = [
-                c for c in self._m_read(table).columns
+                c for c in self.read(table).columns
                 if c not in source.columns
             ]
             if missing:
@@ -2007,7 +1873,7 @@ class Warehouse:
     def clone(
         self, src: str, dst: str, *, version: int | None = None,
     ) -> dict:
-        """Zero-copy SHALLOW clone (manifest mode): publish ``dst``
+        """Zero-copy SHALLOW clone: publish ``dst``
         whose manifest references ``src``'s live (or time-traveled
         ``version``) files in place — no data moves, so branching a
         100 TB table for an experiment costs one metadata write.
@@ -2021,8 +1887,6 @@ class Warehouse:
         (``overwrite(dst, read(dst))``) before vacuuming the source.
         ``vacuum(dst)`` is always safe: it only walks the clone's own
         directory, where borrowed files don't live."""
-        if not self.manifest:
-            raise ValueError("clone requires Warehouse(manifest=True)")
         if self.exists(dst):
             raise ValueError(f"clone target {dst!r} already exists")
         m = (
@@ -2062,8 +1926,6 @@ class Warehouse:
         rewrites, nothing is lost: the bad commits stay in history and
         time travel still reaches them until vacuum retention expires
         them). The undo button a bad pipeline run needs."""
-        if not self.manifest:
-            raise ValueError("restore requires Warehouse(manifest=True)")
         if version not in self._committed_chain(table):
             raise FileNotFoundError(
                 f"table {table!r} version {version} is not on the "
@@ -2098,7 +1960,7 @@ class Warehouse:
         drop: list[str] | None = None,
         widen: dict[str, str] | None = None,
     ) -> dict:
-        """Metadata-only schema evolution (manifest mode) — no data file
+        """Metadata-only schema evolution — no data file
         is read or rewritten, matching Iceberg/Delta column mapping:
 
         - ``rename={'old': 'new'}``: reads surface the new name for
@@ -2122,11 +1984,6 @@ class Warehouse:
 
         Returns the new manifest dict.
         """
-        if not self.manifest:
-            raise ValueError(
-                "evolve_schema requires manifest mode (the op log is a "
-                "manifest property)"
-            )
         m = self._adopt_if_legacy(table)
         if not m["files"]:
             raise FileNotFoundError(f"table {table!r} has no data")
@@ -2240,10 +2097,6 @@ class Warehouse:
         the skew/small-file triage view for a partitioned 100 TB
         table. Unpartitioned tables return one row with
         partition=None."""
-        if not self.manifest:
-            raise ValueError(
-                "partition_profile requires Warehouse(manifest=True)"
-            )
         m = self._adopt_if_legacy(table)
         stats = m.get("stats", {})
         pcol = m.get("partition_col")
@@ -2273,14 +2126,12 @@ class Warehouse:
         )
 
     def fsck(self, table: str) -> dict:
-        """Integrity report for a manifest-mode table: manifest entries
+        """Integrity report for a table: manifest entries
         whose data files are MISSING on disk (a reader would fail —
         e.g. a source table vacuumed out from under a shallow clone)
         and on-disk parquet files referenced by NO retained manifest
         (space leaks a vacuum would reclaim). Read-only; pairs with
         ``vacuum`` the way fsck pairs with gc."""
-        if not self.manifest:
-            raise ValueError("fsck requires Warehouse(manifest=True)")
         base = self.path(table)
         referenced: set[str] = set()
         for v in self._versions_on_disk(table):
@@ -2322,7 +2173,7 @@ class Warehouse:
 def evolve_partitioning(
     wh: "Warehouse", table: str, partition_col: str | None
 ) -> dict:
-    """Atomic partition-layout evolution (manifest mode): rewrite the
+    """Atomic partition-layout evolution: rewrite the
     table's CURRENT image (deletion vectors applied) under a new
     partition column — or unpartitioned with ``None`` — and publish one
     manifest. Readers resolve either the old layout or the new one,
@@ -2340,11 +2191,6 @@ def evolve_partitioning(
 
     Returns the new manifest dict.
     """
-    if not wh.manifest:
-        raise ValueError(
-            "evolve_partitioning requires manifest mode (atomic layout "
-            "swap is a manifest-pointer property)"
-        )
     df = wh.read(table)
     if partition_col is not None and partition_col not in df.columns:
         raise ValueError(

@@ -10,6 +10,7 @@ exits.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -160,7 +161,13 @@ def stream_facts_from_bronze(
     cost is bounded by the partition-pruned bucket rewrite. Dimensions
     are read fresh per batch — maintained by the (slower-cadence) batch
     pipeline, the standard split between dim maintenance and fact
-    streaming."""
+    streaming.
+
+    The stream watches the bronze table's snapshot dirs
+    (``raw_events/data/*``), where every append lands. Known limit: it
+    sees a snapshot once its files are written, not once its manifest is
+    published, so the files of an append whose publish failed are
+    loaded too."""
     from _event_intelligence_data_warehouse_spark import schemas
     from _event_intelligence_data_warehouse_spark.operators.upsert import (
         SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
@@ -174,7 +181,7 @@ def stream_facts_from_bronze(
     stream = (
         spark.readStream.schema(schemas.RAW_EVENTS)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(wh.path(bronze.RAW_TABLE))
+        .parquet(os.path.join(wh.path(bronze.RAW_TABLE), "data", "*"))
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -16,7 +16,7 @@ from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
 @pytest.fixture()
 def mwh(spark, tmp_path):
-    return Warehouse(spark, str(tmp_path / "mwh"), manifest=True,
+    return Warehouse(spark, str(tmp_path / "mwh"),
                      retain_versions=10)
 
 
@@ -158,16 +158,6 @@ def test_vacuum_and_fsck_keep_dv_files(spark, mwh):
     assert not any("data/" in u for u in rep["unreferenced"])
     mwh.vacuum("t", retain_versions=1, grace_seconds=0)
     assert _ks(mwh) == sorted(k for k in range(100) if k % 10 != 4)
-
-
-def test_dv_requires_snapshot_files(spark, tmp_path):
-    # legacy-adopted root files are not DV-addressable: clear error
-    wh = Warehouse(spark, str(tmp_path / "lg"))
-    df = spark.range(0, 10).select(F.col("id").alias("k"))
-    wh.overwrite("t", df)
-    mwh2 = Warehouse(spark, str(tmp_path / "lg"), manifest=True)
-    with pytest.raises(ValueError, match="not.*DV-addressable|DV-addressable"):
-        mwh2.delete_where("t", [("k", "==", 1)], mode="dv")
 
 
 def test_restore_carries_vectors(spark, mwh):

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -165,7 +164,7 @@ def test_sk_base_from_manifest_matches_aggregate(spark, tmp_path):
     """The surrogate-key base comes from the manifest's event_sk bounds
     and equals the max aggregate; with deletion vectors the bounds still
     cover deleted rows, so the aggregate is used."""
-    wh = Warehouse(spark, str(tmp_path / "wh"), manifest=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     batch = _facts(spark, [(None, f"csv_{i}", "onsale", 1) for i in range(6)],
                    with_sk=False)
     buckets = batch.agg(F.collect_set(facts_mod.fact_bucket())).first()[0]
@@ -174,8 +173,6 @@ def test_sk_base_from_manifest_matches_aggregate(spark, tmp_path):
     assert facts_mod._sk_base(wh, "fact_events", full) == 6
     wh.delete_where("fact_events", [("event_sk", "==", 6)], mode="dv")
     assert facts_mod._sk_base(wh, "fact_events", full) is full
-    legacy = Warehouse(spark, str(tmp_path / "legacy"))
-    assert facts_mod._sk_base(legacy, "fact_events", full) is full
 
 
 # -- multi-batch pipeline --------------------------------------------------
@@ -221,21 +218,20 @@ def _images(wh):
     return out
 
 
-def _run_ticks(spark, root, manifest, batches):
-    wh = Warehouse(spark, root, manifest=manifest)
-    args = ["--skip-ingest"] + (["--manifest"] if manifest else [])
+def _run_ticks(spark, root, batches):
+    wh = Warehouse(spark, root)
     images = []
     for k, batch in enumerate(batches):
         bronze.land_batch(wh, batch, source="stream",
                           ingested_at=dt.datetime(2025, 1, 1 + k))
-        pipeline.run_pipeline(spark, root, pipeline.parse_args(args))
+        pipeline.run_pipeline(spark, root,
+                              pipeline.parse_args(["--skip-ingest"]))
         images.append(_images(wh))
     return images
 
 
-@pytest.mark.parametrize("manifest", [True, False], ids=["manifest", "legacy"])
 def test_skipped_dimensions_match_unconditional_updates(
-    spark, tmp_path, monkeypatch, manifest
+    spark, tmp_path, monkeypatch
 ):
     """Each tick's images equal those of a run whose probe names every
     existing dimension, and the steady tick calls no ``update_dim_*``."""
@@ -258,7 +254,7 @@ def test_skipped_dimensions_match_unconditional_updates(
         return real_run(*a, **kw)
 
     monkeypatch.setattr(pipeline, "run_pipeline", run)
-    got = _run_ticks(spark, str(tmp_path / "probe"), manifest, batches)
+    got = _run_ticks(spark, str(tmp_path / "probe"), batches)
     assert [sorted(c) for c in calls] == [
         ["update_dim_category", "update_dim_date", "update_dim_source",
          "update_dim_venue"],
@@ -275,7 +271,7 @@ def test_skipped_dimensions_match_unconditional_updates(
                                                allowMissingColumns=True)
 
     monkeypatch.setattr(dims_mod, "with_new_members", every_dim)
-    want = _run_ticks(spark, str(tmp_path / "always"), manifest, batches)
+    want = _run_ticks(spark, str(tmp_path / "always"), batches)
     for tick, (g, w) in enumerate(zip(got, want)):
         for name in g:
             assert g[name] == w[name], (tick, name)
@@ -284,3 +280,36 @@ def test_skipped_dimensions_match_unconditional_updates(
     venue3 = [r for r in last["dim_venue"] if r.venue_name == "Venue 3"]
     assert sorted(r.is_current for r in venue3) == [False, True]
     assert {r.category_name for r in last["dim_category"]} == {*TYPES, "refund"}
+
+
+# -- venue tie-break -------------------------------------------------------
+
+def test_venue_tie_break_does_not_depend_on_partitioning(spark, tmp_path):
+    """One batch carries each venue with several coordinates; however the
+    staged batch is partitioned, ``update_dim_venue`` picks the same
+    attributes for every venue."""
+    from _event_intelligence_data_warehouse_spark.plans.staging import (
+        stage_events,
+    )
+    from _event_intelligence_data_warehouse_spark.sources.synthetic import (
+        generate_sample_events,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    bronze.land_batch(wh, generate_sample_events(spark, 200), source="csv")
+    stg = stage_events(wh.read(bronze.RAW_TABLE),
+                       only_unprocessed=False).cache()
+    coords = (dims_mod.member_tuples("dim_venue", stg)
+              .groupBy("venue_nk")
+              .agg(F.countDistinct("latitude", "longitude").alias("n")))
+    assert coords.filter(F.col("n") > 1).count() > 0, (
+        "the batch must hold a venue with several coordinates")
+    empty = spark.createDataFrame([], schemas.DIM_VENUE)
+    now = F.lit(dt.datetime(2025, 1, 1))
+    images = set()
+    for parts in (1, 2, 3, 5, 7, 11, 16):
+        image = dims_mod.update_dim_venue(empty, stg.repartition(parts), now)
+        images.add(tuple(_rows(image.select(
+            "venue_nk", *dims_mod.VENUE_ATTRS))))
+    stg.unpersist()
+    assert len(images) == 1

@@ -28,7 +28,7 @@ from test_partitioned_upsert import _fact_batch, _rows, _upsert
 
 
 def _mwh(spark, tmp_path, name="mwh"):
-    return Warehouse(spark, str(tmp_path / name), manifest=True)
+    return Warehouse(spark, str(tmp_path / name))
 
 
 def _live_files(wh, table):
@@ -78,25 +78,6 @@ def test_manifest_untouched_partition_entries_are_stable(spark, tmp_path):
     ), "the touched partition kept stale files"
 
 
-def test_manifest_migrates_legacy_flat_fact_table(spark, tmp_path):
-    wh = _mwh(spark, tmp_path)
-    empty = spark.createDataFrame([], schemas.FACT_EVENTS)
-    legacy = facts_mod.upsert_facts(empty, _fact_batch(spark, range(25)))
-    # simulate a pre-manifest, pre-bucket deployment: flat parquet files
-    legacy.write.mode("overwrite").parquet(wh.path("fact_events"))
-
-    _upsert(
-        wh, _fact_batch(spark, range(20, 35), status="cancelled")
-    )
-    out = wh.read("fact_events")
-    assert facts_mod.FACT_PART_COL in out.columns
-    assert out.count() == 35
-    assert (
-        out.filter(F.col("event_nk") == "csv_MOCK_00020").first()
-        ["event_status"] == "cancelled"
-    )
-
-
 # -- crash injection ------------------------------------------------------
 
 def test_crash_before_pointer_publish_preserves_old_image(
@@ -128,7 +109,7 @@ def test_crash_before_pointer_publish_preserves_old_image(
     monkeypatch.setattr(os, "replace", real_replace)
 
     # a fresh reader (new Warehouse: no cached state) sees the old image
-    rd = Warehouse(spark, wh.root, manifest=True)
+    rd = Warehouse(spark, wh.root)
     got = sorted((r.id, r.p, r.tag) for r in rd.read("t").collect())
     assert got == want_old, "reader observed a torn/partial commit"
     assert all(r.tag == "old" for r in rd.read("t").collect())
@@ -166,7 +147,7 @@ def test_crash_mid_snapshot_write_preserves_old_image(spark, tmp_path):
         "overwrite"
     ).partitionBy("p").parquet(orphan)
 
-    rd = Warehouse(spark, wh.root, manifest=True)
+    rd = Warehouse(spark, wh.root)
     assert sorted(tuple(r) for r in rd.read("t").collect()) == want
     rd.vacuum("t", grace_seconds=0)
     assert not os.path.exists(orphan) or not any(
@@ -293,13 +274,6 @@ def test_time_travel_partitioned_upsert_versions(spark, tmp_path):
     assert _rows(wh.read("fact_events", version=v1)) == want_v1
 
 
-def test_time_travel_requires_manifest_mode(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "legacy"))
-    wh.overwrite("t", spark.range(3).toDF("id"))
-    with pytest.raises(ValueError, match="manifest"):
-        wh.read("t", version=1)
-
-
 # -- file-level min/max stats + data skipping -----------------------------
 
 def test_scan_prunes_files_by_minmax_bounds(spark, tmp_path):
@@ -360,12 +334,14 @@ def test_scan_prunes_by_partition_path_value(spark, tmp_path):
 
 
 def test_scan_without_stats_never_prunes_or_drops_rows(spark, tmp_path):
-    """A legacy-adopted table has no recorded bounds: scan must keep
-    every file and still return the exact filtered rows."""
+    """Files without recorded bounds (a manifest published without
+    stats): scan must keep every file and still return the exact
+    filtered rows."""
     wh = _mwh(spark, tmp_path)
-    spark.range(0, 50).toDF("id").coalesce(2).write.mode("overwrite").parquet(
-        wh.path("t")
-    )
+    wh.append("t", spark.range(0, 50).toDF("id").coalesce(2))
+    m = wh._manifest("t")
+    wh._publish("t", m["files"], None, "drop_stats",
+                expect_version=m["version"])
     keep, total = wh.pruned_files("t", [("id", "<", 10)])
     assert len(keep) == total, "files without bounds must never be pruned"
     assert sorted(r.id for r in wh.scan("t", [("id", "<", 10)]).collect()) \
@@ -565,7 +541,7 @@ def test_cluster_by_guards_partitioned_and_nonnumeric(spark, tmp_path):
 def test_warehouse_retention_setting_survives_maintenance(spark, tmp_path):
     """Warehouse(retain_versions=K): routine compaction keeps K versions
     readable instead of silently erasing pinned history."""
-    wh = Warehouse(spark, str(tmp_path / "r"), manifest=True,
+    wh = Warehouse(spark, str(tmp_path / "r"),
                    retain_versions=3)
     wh.overwrite("t", spark.range(0, 5).toDF("id"))    # v1
     wh.overwrite("t", spark.range(5, 10).toDF("id"))   # v2
@@ -826,7 +802,7 @@ def test_merge_into_empty_source_is_noop(spark, tmp_path):
 
 def _bloom_wh(spark, tmp_path):
     wh = Warehouse(
-        spark, str(tmp_path / "bwh"), manifest=True,
+        spark, str(tmp_path / "bwh"),
         bloom_cols={"t": ["uid"]},
     )
     # four single-file snapshots of hash-distributed string uids: every
@@ -887,7 +863,7 @@ def test_bloom_absent_without_optin_and_nulls_safe(spark, tmp_path):
 
     # NULL values in a bloom'd column never poison the filter
     wh2 = Warehouse(
-        spark, str(tmp_path / "b2"), manifest=True,
+        spark, str(tmp_path / "b2"),
         bloom_cols={"t": ["uid"]},
     )
     wh2.append("t", spark.createDataFrame(
@@ -913,7 +889,7 @@ def test_constraints_reject_bad_batch_before_any_write(spark, tmp_path):
         val.value_range("score_range", "score", 0.0, 1.0),
     ]
     wh = Warehouse(
-        spark, str(tmp_path / "cwh"), manifest=True,
+        spark, str(tmp_path / "cwh"),
         constraints={"t": rules},
     )
     good = spark.createDataFrame(
@@ -974,7 +950,7 @@ def test_clone_time_travel_and_existing_target_guard(spark, tmp_path):
     wh.overwrite("t", spark.range(10).toDF("id"))
     v1 = wh._current_version("t")
     wh.overwrite("t", spark.range(50).toDF("id"))
-    wh2 = Warehouse(spark, wh.root, manifest=True, retain_versions=5)
+    wh2 = Warehouse(spark, wh.root, retain_versions=5)
     res = wh2.clone("t", "t_v1", version=v1)
     assert wh2.read("t_v1").count() == 10
     assert res["source_version"] == v1
@@ -1045,7 +1021,7 @@ def test_crash_before_dml_publish_preserves_old_image(
         wh.delete_where("t", [("id", ">=", 120), ("id", "<", 180)])
     monkeypatch.setattr(os, "replace", real_replace)
 
-    rd = Warehouse(spark, wh.root, manifest=True)
+    rd = Warehouse(spark, wh.root)
     assert rd.read("t").count() == 400, "torn DML visible to readers"
     rd.vacuum("t", grace_seconds=0)
     assert rd.read("t").count() == 400
@@ -1069,7 +1045,7 @@ def test_concurrent_dml_writers_detected(spark, tmp_path, monkeypatch):
             # still being written — after its candidate read, before
             # its publish
             state["armed"] = False
-            other = Warehouse(spark, wh.root, manifest=True)
+            other = Warehouse(spark, wh.root)
             other.update_where(
                 "t", [("id", "==", 0)], {"val": F.lit("other")}
             )
@@ -1080,7 +1056,7 @@ def test_concurrent_dml_writers_detected(spark, tmp_path, monkeypatch):
         wh.delete_where("t", [("id", ">=", 0), ("id", "<", 10)])
     monkeypatch.setattr(Warehouse, "_write_snapshot", real)
 
-    rd = Warehouse(spark, wh.root, manifest=True)
+    rd = Warehouse(spark, wh.root)
     rows = {r.id: r.val for r in rd.read("t").collect()}
     assert len(rows) == 400, "loser's delete must not have applied"
     assert rows[0] == "other", "winner's update lost"
@@ -1108,14 +1084,15 @@ def test_stats_only_count_and_minmax(spark, tmp_path):
     assert wh.stats_count("t") == 300
     assert wh.stats_count("t") == wh.read("t").count()
 
-    # a legacy-adopted table has no row counts -> None, not a guess
-    legacy = Warehouse(spark, str(tmp_path / "lg"), manifest=True)
+    # a pre-manifest table: its adoption rewrite records row counts
+    # (None, never a guess, would mean they are missing)
+    legacy = Warehouse(spark, str(tmp_path / "lg"))
     spark.range(10).toDF("id").write.parquet(legacy.path("t"))
     assert legacy.stats_count("t") in (None, 10)  # adopt collects stats
 
 
 def test_restore_is_a_new_commit_preserving_history(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "rwh"), manifest=True,
+    wh = Warehouse(spark, str(tmp_path / "rwh"),
                    retain_versions=10)
     wh.overwrite("t", spark.range(10).toDF("id"))
     good_v = wh._current_version("t")
@@ -1202,7 +1179,7 @@ def test_update_where_enforces_declared_constraints(spark, tmp_path):
     )
 
     wh = Warehouse(
-        spark, str(tmp_path / "uwh"), manifest=True,
+        spark, str(tmp_path / "uwh"),
         constraints={"t": [val.value_range("score_range", "score", 0.0, 1.0)]},
     )
     wh.append("t", spark.createDataFrame(
@@ -1229,7 +1206,7 @@ def test_overwrite_partitions_enforces_declared_constraints(
     )
 
     wh = Warehouse(
-        spark, str(tmp_path / "owh"), manifest=True,
+        spark, str(tmp_path / "owh"),
         constraints={"t": [val.not_null("id_not_null", "id")]},
     )
     good = spark.createDataFrame(
@@ -1326,7 +1303,7 @@ def test_compact_partitions_where_rewrites_only_fragmented(spark, tmp_path):
     """Partitions under the file threshold carry their files VERBATIM
     (same relative paths, zero bytes moved); fragmented ones collapse
     to a single file; content and time travel survive."""
-    wh = Warehouse(spark, str(tmp_path / "pcw"), manifest=True,
+    wh = Warehouse(spark, str(tmp_path / "pcw"),
                    retain_versions=10)  # keep history for time travel
     base = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "id long, bucket int"
@@ -1373,7 +1350,7 @@ def test_evolve_partitioning_atomic_layout_swap(spark, tmp_path):
         Warehouse, evolve_partitioning,
     )
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), manifest=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame(
         [(i, f"s{i % 3}", f"r{i % 2}", i * 10) for i in range(60)],
         "id long, seg string, region string, v long",
@@ -1409,7 +1386,7 @@ def test_evolve_partitioning_rejects_unknown_column(spark, tmp_path):
         Warehouse, evolve_partitioning,
     )
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), manifest=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.overwrite("t", spark.createDataFrame([(1,)], "id long"))
     with pytest.raises(ValueError, match="not in table columns"):
         evolve_partitioning(wh, "t", "nope")
@@ -1515,7 +1492,7 @@ def test_evolve_schema_rename_rekeys_bounds_and_drops_bloom(spark, tmp_path):
     """Rename re-keys min/max bounds to the new logical name (pruning
     power retained — the values are unchanged) but drops the bloom,
     whose bit positions are seeded by the column name."""
-    wh = Warehouse(spark, str(tmp_path / "bwh"), manifest=True,
+    wh = Warehouse(spark, str(tmp_path / "bwh"),
                    bloom_cols={"t": ["v"]})
     wh.append("t", _ev_df(spark, [(1, 10, "a"), (2, 20, "b")]).coalesce(1))
     entry = next(iter(wh._manifest("t")["stats"].values()))

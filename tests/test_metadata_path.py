@@ -32,7 +32,7 @@ def _cached_rdd_ids(spark) -> set[int]:
 
 
 def _mwh(spark, tmp_path, name="mwh"):
-    return Warehouse(spark, str(tmp_path / name), manifest=True)
+    return Warehouse(spark, str(tmp_path / name))
 
 
 def _frame(spark, lo, hi):
@@ -82,7 +82,7 @@ def test_footer_schema_read_matches_inference_on_pipeline_tables(
         argv + ["--sample-rows", "120"]))
     pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
         argv + ["--sample-rows", "200"]))
-    wh = Warehouse(spark, whdir, manifest=True)
+    wh = Warehouse(spark, whdir)
     tables = sorted(
         t for t in os.listdir(whdir)
         if os.path.isdir(os.path.join(whdir, t, "_manifests"))
@@ -130,15 +130,17 @@ def test_footer_schema_read_with_deletion_vectors(spark, tmp_path,
 
 def test_footer_schema_read_of_legacy_adopted_table(spark, tmp_path,
                                                     monkeypatch):
-    """The adopted root group keeps mergeSchema inference (its files come
-    from many writes); later snapshot groups read their footers."""
+    """Adoption reads a pre-manifest table's files with mergeSchema
+    (they come from many writes) and rewrites them into one snapshot;
+    that snapshot and later ones read their footers."""
     root = str(tmp_path / "legacy")
-    legacy = Warehouse(spark, root)
-    # neither write's schema contains the other's: no single footer
-    # holds the merged schema
-    legacy.append("t", _frame(spark, 0, 10).withColumn("a", F.lit(1)))
-    legacy.append("t", _frame(spark, 10, 20).withColumn("b", F.lit(2)))
-    wh = Warehouse(spark, root, manifest=True)
+    # two plain parquet appends, the pre-manifest layout; neither write's
+    # schema contains the other's: no single footer holds the merged
+    # schema
+    for df in (_frame(spark, 0, 10).withColumn("a", F.lit(1)),
+               _frame(spark, 10, 20).withColumn("b", F.lit(2))):
+        df.write.mode("append").parquet(os.path.join(root, "t"))
+    wh = Warehouse(spark, root)
     assert {"a", "b"} <= set(wh.read("t").columns)
     wh.append("t", _frame(spark, 20, 25).withColumn("a", F.lit(3))
               .withColumn("b", F.lit(4)))
@@ -222,7 +224,7 @@ def test_load_tick_job_count(spark, tmp_path):
     11 and 77: two counts while landing, four dimension overwrites, a
     three-join upsert, a bucket collect and a max(event_sk) aggregate."""
     whdir = str(tmp_path / "wh")
-    wh = Warehouse(spark, whdir, manifest=True)
+    wh = Warehouse(spark, whdir)
     args = pipeline.parse_args(["--skip-ingest", "--manifest"])
     bronze.land_batch(wh, _stream_events(spark, 0, 60), source="stream")
     pipeline.run_pipeline(spark, whdir, args)
@@ -247,7 +249,7 @@ def test_summary_counts_from_manifest_match_count(spark, tmp_path):
     pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
         ["--source", "csv", "--generate-sample", "--sample-rows", "40",
          "--manifest"]))
-    wh = Warehouse(spark, whdir, manifest=True)
+    wh = Warehouse(spark, whdir)
     wh.delete_where("raw_events", [("raw_event_id", "==", "MOCK_00003")],
                     mode="dv")
     got = pipeline.summary(wh)

@@ -40,17 +40,15 @@ def _upsert(wh, batch):
     return facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets)
 
 
-def _snapshot(table_dir: str) -> dict[str, tuple[str, ...]]:
-    """partition dir -> sorted data file names (parquet part files are
-    uniquely named per write, so identical names == not rewritten)."""
-    out = {}
-    for entry in sorted(os.listdir(table_dir)):
-        sub = os.path.join(table_dir, entry)
-        if os.path.isdir(sub) and "=" in entry:
-            out[entry] = tuple(sorted(
-                f for f in os.listdir(sub) if f.endswith(".parquet")
-            ))
-    return out
+def _snapshot(wh, table: str) -> dict[str, tuple[str, ...]]:
+    """partition dir -> sorted live data files, from the manifest (each
+    write lands in a fresh snapshot dir, so identical paths == not
+    rewritten)."""
+    out: dict[str, list[str]] = {}
+    for f in wh._manifest(table)["files"]:
+        part = next(c for c in f.split(os.sep) if "=" in c)
+        out.setdefault(part, []).append(f)
+    return {p: tuple(sorted(fs)) for p, fs in out.items()}
 
 
 def _rows(df):
@@ -82,13 +80,13 @@ def test_partitioned_upsert_matches_full_rewrite(spark, tmp_path):
 def test_untouched_buckets_are_not_rewritten(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     _upsert(wh, _fact_batch(spark, range(60)))
-    before = _snapshot(wh.path("fact_events"))
+    before = _snapshot(wh, "fact_events")
     assert len(before) > 4, "test needs several populated buckets"
 
     touched = _upsert(
         wh, _fact_batch(spark, [0], status="cancelled")
     )
-    after = _snapshot(wh.path("fact_events"))
+    after = _snapshot(wh, "fact_events")
 
     touched_dirs = {f"{facts_mod.FACT_PART_COL}={b}" for b in touched}
     assert len(touched_dirs) == 1, "a single key must touch a single bucket"
@@ -105,33 +103,6 @@ def test_untouched_buckets_are_not_rewritten(spark, tmp_path):
     assert row["event_status"] == "cancelled"
 
 
-def test_legacy_flat_fact_table_migrates_on_first_upsert(spark, tmp_path):
-    """A warehouse whose fact table predates the bucketed layout (flat
-    parquet, no p_bucket) must migrate transparently on the next upsert:
-    full merge once, partitioned layout + correct rows after."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    empty = spark.createDataFrame([], schemas.FACT_EVENTS)
-    legacy = facts_mod.upsert_facts(empty, _fact_batch(spark, range(25)))
-    wh.overwrite("fact_events", legacy)  # old flat layout
-    assert "p_bucket" not in wh.read("fact_events").columns
-
-    _upsert(
-        wh, _fact_batch(spark, range(20, 35), status="cancelled")
-    )
-    out = wh.read("fact_events")
-    assert facts_mod.FACT_PART_COL in out.columns, "layout did not migrate"
-    assert out.count() == 35
-    assert _snapshot(wh.path("fact_events")), "no partition dirs after migration"
-    assert (
-        out.filter(F.col("event_nk") == "csv_MOCK_00020").first()[
-            "event_status"
-        ]
-        == "cancelled"
-    )
-    sks = [r[0] for r in out.select("event_sk").collect()]
-    assert len(sks) == len(set(sks)) == 35
-
-
 def test_pipeline_fact_table_is_bucket_partitioned(spark, tmp_path):
     whdir = str(tmp_path / "wh")
     args = pipeline.parse_args(
@@ -139,7 +110,7 @@ def test_pipeline_fact_table_is_bucket_partitioned(spark, tmp_path):
          "--sample-rows", "80"]
     )
     pipeline.run_pipeline(spark, whdir, args)
-    parts = _snapshot(os.path.join(whdir, "fact_events"))
+    parts = _snapshot(Warehouse(spark, whdir), "fact_events")
     assert parts and all(
         p.startswith(f"{facts_mod.FACT_PART_COL}=") for p in parts
     )
@@ -173,12 +144,9 @@ def test_compact_partitions_one_file_per_partition(spark, tmp_path):
         "id", (F.col("id") % 3).alias("p")
     )
     # several appends -> multiple files per partition
-    for i in range(4):
-        (
-            df.filter(F.col("id") % 4 == i)
-            .write.mode("append").partitionBy("p")
-            .parquet(wh.path("t"))
-        )
+    wh.overwrite("t", df.filter(F.col("id") % 4 == 0), "p")
+    for i in range(1, 4):
+        wh.append("t", df.filter(F.col("id") % 4 == i))
     before = sorted((r.id, r.p) for r in wh.read("t").collect())
     n_before, _ = wh.file_stats("t")
     assert n_before > 3
@@ -188,6 +156,5 @@ def test_compact_partitions_one_file_per_partition(spark, tmp_path):
     assert n_after == 3, "expected exactly one file per partition"
     after = sorted((r.id, r.p) for r in wh.read("t").collect())
     assert after == before
-    import os
-    parts = [d for d in os.listdir(wh.path("t")) if d.startswith("p=")]
+    parts = set(_snapshot(wh, "t"))
     assert sorted(parts) == ["p=0", "p=1", "p=2"], "partition layout lost"

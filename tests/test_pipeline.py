@@ -159,7 +159,7 @@ def test_pipeline_end_to_end_in_manifest_mode(spark, tmp_path):
     r1 = pipeline.run_pipeline(spark, whdir, args)
     assert r1["summary"]["fact_events"] == 80
 
-    wh = Warehouse(spark, whdir, manifest=True)
+    wh = Warehouse(spark, whdir)
     hist = wh.history("fact_events")
     assert hist and hist[0]["version"] >= 1
 

@@ -476,9 +476,7 @@ def test_delete_where_matches_filter_semantics(
     table content and range predicate, including NULL columns."""
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
-    wh = Warehouse(
-        spark, str(tmp_path_factory.mktemp("dmlprop")), manifest=True
-    )
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("dmlprop")))
     df = spark.createDataFrame(rows, "id long, g string, score double")
     # several snapshots so pruning has file boundaries to work with
     wh.append("t", df.filter(F.col("id") < 200))
@@ -515,9 +513,7 @@ def test_merge_into_matches_upsert_semantics(
     """merge_into == anti-join survivors + source, for any base/source."""
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
-    wh = Warehouse(
-        spark, str(tmp_path_factory.mktemp("mergeprop")), manifest=True
-    )
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("mergeprop")))
     bdf = spark.createDataFrame(base, "id long, g string, score double")
     sdf = spark.createDataFrame(src, "id long, g string, score double")
     wh.append("t", bdf)

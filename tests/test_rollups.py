@@ -33,15 +33,13 @@ def _daily_rows(wh):
     )
 
 
-def _part_files(table_dir):
+def _part_files(wh, table):
+    """partition dir -> sorted live file paths, from the manifest."""
     out = {}
-    for entry in sorted(os.listdir(table_dir)):
-        sub = os.path.join(table_dir, entry)
-        if os.path.isdir(sub) and "=" in entry:
-            out[entry] = tuple(sorted(
-                f for f in os.listdir(sub) if f.endswith(".parquet")
-            ))
-    return out
+    for f in wh._manifest(table)["files"]:
+        part = next(c for c in f.split(os.sep) if "=" in c)
+        out.setdefault(part, []).append(f)
+    return {p: tuple(sorted(fs)) for p, fs in out.items()}
 
 
 def test_incremental_refresh_equals_full_rebuild(spark, tmp_path):
@@ -70,13 +68,13 @@ def test_refresh_rewrites_only_touched_day_partitions(spark, tmp_path):
     base = [(d, 9, "view", 5) for d in (1, 2, 3, 10, 20)]
     wh = Warehouse(spark, str(tmp_path / "wh"))
     rollups.build_cascade(wh, _events(spark, base))
-    before = _part_files(wh.path(rollups.HOURLY))
+    before = _part_files(wh, rollups.HOURLY)
     assert len(before) == 5
 
     rollups.refresh_incremental(
         wh, _events(spark, [(2, 10, "click", 1)])
     )
-    after = _part_files(wh.path(rollups.HOURLY))
+    after = _part_files(wh, rollups.HOURLY)
     for part, files in before.items():
         if part == "d=2026-03-02":
             assert after[part] != files, "touched day was not rewritten"

@@ -143,7 +143,7 @@ def test_dataset_card_artifact_sections(spark):
         f"eidw_staging_{os.getpid()}",
         f"governance_dataset_card_{os.path.basename(SF_DIR.rstrip('/'))}",
     )
-    wh = Warehouse(spark, base, manifest=True)
+    wh = Warehouse(spark, base)
     stored = wh.read("dataset_card").collect()
     key = lambda r: (r.section, r.k1, r.k2, r.metric, r.value)  # noqa: E731
     assert sorted(map(key, stored)) == sorted(map(key, rows))

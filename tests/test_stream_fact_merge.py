@@ -195,7 +195,7 @@ def test_stream_merge_into_exactly_once_and_replay_safe(spark, tmp_path):
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
     from _event_intelligence_data_warehouse_spark.streaming import jobs
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), manifest=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     schema = "id long, ver long, val string"
@@ -251,7 +251,7 @@ def test_stream_merge_newer_col_blocks_stale_replay(spark, tmp_path):
     from _event_intelligence_data_warehouse_spark.storage import Warehouse
     from _event_intelligence_data_warehouse_spark.streaming import jobs
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), manifest=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     schema = "id long, ver long, val string"
     wh.overwrite("gold", spark.createDataFrame([(1, 2, "a2")], schema))
 
