@@ -16,6 +16,14 @@ Multi-partition operations (dynamic-overwrite-style upsert, compaction)
 are atomic for free: the new manifest swaps in replaced partitions'
 files and keeps untouched partitions' entries, in one publish.
 
+Every write that replaces files (append, overwrite, partition overwrite,
+copy-on-write DML, MERGE, compaction, clustering, layout evolution,
+legacy adoption) commits through one method, :meth:`Warehouse._commit`:
+kept files plus new files, the kept files' stats and deletion vectors,
+published against the version the write's input was read from. Only the
+metadata-only commits (deletion-vector deletes, clone, restore, schema
+evolution) publish a manifest themselves.
+
 Incremental state (the reference's ``is_processed`` flag) is replaced by a
 high-watermark on ``ingested_at`` persisted in ``_meta/watermarks.json`` —
 a pure predicate that turns into parquet min/max + partition pruning at
@@ -207,23 +215,24 @@ class Warehouse:
         A read runs no schema-inference job: each snapshot group's schema
         comes from its first file's parquet footer, read in-process.
         Files without Spark's footer schema fall back to inference."""
-        if version is not None:
-            if version not in self._committed_chain(table):
-                raise FileNotFoundError(
-                    f"table {table!r} version {version} is not on the "
-                    "committed chain (orphan from a crashed writer, "
-                    "never published, or expired by vacuum)"
-                )
-            m = self._manifest(table, version)
-        else:
-            m = self._adopt_if_legacy(table)
-        if not m["files"]:
-            if schema is None:
-                raise FileNotFoundError(
-                    f"table {table!r} missing and no schema given"
-                )
+        m = self._snapshot(table, version)
+        if not m["files"] and schema is not None:
             return self.spark.createDataFrame([], schema)
         return self._read_files_dv(table, m, m["files"])
+
+    def _snapshot(self, table: str, version: int | None = None) -> dict:
+        """The manifest a read resolves: CURRENT (after any legacy
+        upgrade), or the committed ``version`` — which must be on the
+        committed chain, never an orphan or a vacuumed version."""
+        if version is None:
+            return self._adopt_if_legacy(table)
+        if version not in self._committed_chain(table):
+            raise FileNotFoundError(
+                f"table {table!r} version {version} is not on the "
+                "committed chain (orphan from a crashed writer, "
+                "never published, or expired by vacuum)"
+            )
+        return self._manifest(table, version)
 
     # -- write -------------------------------------------------------------
     def check_constraints(self, table: str, df: DataFrame) -> None:
@@ -256,11 +265,7 @@ class Warehouse:
         new = self._write_snapshot(
             table, df, pcol if pcol and pcol in df.columns else None
         )
-        stats = {**m.get("stats", {}), **self._collect_minmax(table, new)}
-        dvs, dvm = self._carry_dvs(m, m["files"] + new)
-        self._publish(table, m["files"] + new, pcol, "append",
-                      stats=stats, expect_version=m["version"],
-                      dvs=dvs, dv_meta=dvm)
+        self._commit(table, m, m["files"], new, pcol, "append")
 
     def overwrite(
         self, table: str, df: DataFrame, partition_col: str | None = None
@@ -268,7 +273,8 @@ class Warehouse:
         """Full-image replace (optionally written partitioned so readers
         keep pruning): write a fresh snapshot and publish a manifest
         listing only it. The input may read the table itself, since the
-        files it scans stay in place until vacuum."""
+        files it scans stay in place until vacuum. Derived from no
+        version, so the publish is last-writer-wins."""
         self.check_constraints(table, df)
         files = self._write_snapshot(table, df, partition_col)
         # schema_ops=[] resets the evolution log: an overwrite is a
@@ -276,9 +282,8 @@ class Warehouse:
         # replaying carried ops against a fresh frame that legitimately
         # reuses a previously dropped/renamed-away column name would hide
         # or duplicate columns.
-        self._publish(table, files, partition_col, "overwrite",
-                      stats=self._collect_minmax(table, files),
-                      schema_ops=[])
+        self._commit(table, None, [], files, partition_col, "overwrite",
+                     schema_ops=[])
 
     def overwrite_partitions(
         self, table: str, df: DataFrame, partition_col: str
@@ -314,16 +319,8 @@ class Warehouse:
             f for f in m["files"]
             if self._partition_of(f, partition_col) not in touched
         ]
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in kept if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        dvs, dvm = self._carry_dvs(m, kept + new)
-        self._publish(table, kept + new, partition_col,
-                      "overwrite_partitions", stats=stats,
-                      expect_version=m["version"],
-                      dvs=dvs, dv_meta=dvm)
+        self._commit(table, m, kept, new, partition_col,
+                     "overwrite_partitions")
 
     # -- manifest commit protocol ------------------------------------------
     # Layout: <table>/data/s<id>/... immutable snapshot dirs (only ever
@@ -399,17 +396,43 @@ class Warehouse:
         )
         new = self._write_snapshot(table, df, pcol)
         kept = [f for f in m["files"] if f not in set(old)]
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in kept if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        dvs, dvm = self._carry_dvs(m, kept + new)
-        m = self._publish(table, kept + new, pcol, "adopt_legacy",
-                          stats=stats, expect_version=m["version"],
-                          dvs=dvs, dv_meta=dvm)
+        m = self._commit(table, m, kept, new, pcol, "adopt_legacy")
         self.vacuum(table)
         return m
+
+    def _commit(
+        self, table: str, m: dict | None, kept: list[str], new: list[str],
+        partition_col: str | None, operation: str, **publish_kw,
+    ) -> dict:
+        """The commit of every write that replaces files: publish
+        ``kept`` (live files of ``m``, carried verbatim) plus ``new``
+        (files the write just put in a snapshot) as the next version.
+        Kept files keep their stats and new files get theirs from their
+        footers. A deletion vector carries only while a kept file it
+        covers stays live (vectors from manifests that predate coverage
+        records carry while anything is kept), so a rewrite of every
+        file materializes and clears them all.
+
+        ``m`` is the manifest the write's input was read from, and the
+        publish is checked against its version: a writer that committed
+        after that read raises ConcurrentWriteError instead of having
+        its files dropped. ``m=None`` means the write derives from no
+        version (a full overwrite) and publishes last-writer-wins."""
+        m = m or {"version": None}
+        old = m.get("stats", {})
+        meta = m.get("dv_meta") or {}
+        live = {self._dv_key_of_rel(f) for f in kept}
+        dvs = [
+            r for r in m.get("dv_files") or []
+            if live and (meta.get(r) is None or set(meta[r]) & live)
+        ]
+        return self._publish(
+            table, kept + new, partition_col, operation,
+            stats={**{f: old[f] for f in kept if f in old},
+                   **self._collect_minmax(table, new)},
+            expect_version=m["version"], dvs=dvs,
+            dv_meta={r: meta[r] for r in dvs if r in meta}, **publish_kw,
+        )
 
     def _publish(
         self, table: str, files: list[str], partition_col: str | None,
@@ -807,20 +830,12 @@ class Warehouse:
         satisfy ``filters`` are never handed to Spark; the same filters
         are then applied as DataFrame predicates, so results are exactly
         ``read(table).filter(...)`` — only cheaper."""
-        if version is not None and version not in self._committed_chain(table):
-            raise FileNotFoundError(
-                f"table {table!r} version {version} is not on the "
-                "committed chain"
-            )
         # Resolve ONE manifest snapshot and prune/read from it: pruning
         # against the pointer and then re-resolving for DV application
         # could mix a pre-commit file list with a post-commit (e.g.
         # vector-cleared) manifest under a concurrent writer, silently
         # resurrecting DV-deleted rows.
-        m = (
-            self._manifest(table, version) if version is not None
-            else self._adopt_if_legacy(table)
-        )
+        m = self._snapshot(table, version)
         keep, _total = self.pruned_files(
             table, filters, version=m["version"]
         )
@@ -838,25 +853,10 @@ class Warehouse:
                 )
         else:
             df = self._read_files_dv(table, m, keep)
-        for col, op, value in filters:
-            if col not in df.columns:
-                # Schema evolution corner: pruning kept only files that
-                # predate the filter column (they have no bounds, so
-                # they can never be pruned on it). read().filter() sees
-                # those rows with a NULL column and drops them — mirror
-                # that instead of raising UNRESOLVED_COLUMN.
-                probe = value[0] if op == "in" and len(value) else value
-                df = df.withColumn(
-                    col, F.lit(None).cast(_lit_sql_type(probe))
-                )
-            c = F.col(col)
-            df = df.filter(
-                c.isin(*value) if op == "in" else {
-                    "==": c == value, "<": c < value, "<=": c <= value,
-                    ">": c > value, ">=": c >= value,
-                }[op]
-            )
-        return df
+        # a NULL predicate (NULL value, or a file predating the filter
+        # column) drops the row, as read().filter() would
+        df, pred = self._filters_pred(df, filters)
+        return df.filter(pred)
 
     @staticmethod
     def _partition_of(rel: str, partition_col: str) -> str | None:
@@ -878,27 +878,6 @@ class Warehouse:
         posix = "/" + os.path.normpath(rel).replace(os.sep, "/")
         return posix.rsplit("/data/", 1)[1]
 
-    def _carry_dvs(
-        self, m: dict, published_files: list[str]
-    ) -> tuple[list[str], dict]:
-        """(dv_files, dv_meta) to carry into a publish whose live file
-        list is ``published_files``: a vector file is dropped once NONE
-        of the data-file keys it covers remains live (a rewrite
-        materialized them all), so DV read/stats overhead clears as
-        rewrites catch up instead of persisting until a full compact.
-        Vectors without recorded coverage (older manifests) carry
-        conservatively."""
-        dvs = m.get("dv_files") or []
-        if not dvs:
-            return [], {}
-        meta = m.get("dv_meta") or {}
-        live = {self._dv_key_of_rel(f) for f in published_files}
-        kept = [
-            rel for rel in dvs
-            if meta.get(rel) is None or set(meta[rel]) & live
-        ]
-        return kept, {r: meta[r] for r in kept if r in meta}
-
     def _read_files_dv(
         self, table: str, m: dict, files: list[str]
     ) -> DataFrame:
@@ -909,6 +888,10 @@ class Warehouse:
         the subset contribute no anti-join hits (their keys simply don't
         occur), so candidate-subset reads (DML, partial compaction)
         apply cleanly."""
+        if not files:
+            raise FileNotFoundError(
+                f"table {table!r} missing and no schema given"
+            )
         base = self.path(table)
         dvs = m.get("dv_files") or []
         ops = m.get("schema_ops")
@@ -1109,17 +1092,17 @@ class Warehouse:
                 f"(got {bits} * {len(cols)}); lower bits or cluster "
                 "fewer columns"
             )
-        pcol = self._adopt_if_legacy(table).get("partition_col")
+        m = self._adopt_if_legacy(table)
+        pcol = m.get("partition_col")
         if pcol is not None:
             raise ValueError(
                 f"table {table!r} is partitioned on {pcol!r}; cluster_by "
                 "supports unpartitioned layouts — use "
-                "compact_partitions() for per-partition file hygiene, or "
-                "migrate with overwrite(df) first"
+                "compact_partitions_where() for per-partition file "
+                "hygiene, or migrate with overwrite(df) first"
             )
-        df = self.read(table)
-        files_before, total = self.file_stats(table)
-        n_out = target_files or max(1, files_before)
+        df = self._read_files_dv(table, m, m["files"])
+        n_out = target_files or max(1, len(m["files"]))
         stats = df.agg(*[
             f(c).alias(f"{n}_{c}")
             for c in cols for n, f in (("mn", F.min), ("mx", F.max))
@@ -1153,16 +1136,12 @@ class Warehouse:
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-        base_v = self._current_version(table)
         files = self._write_snapshot(table, clustered)
-        self._publish(table, files, None, "cluster_by",
-                      stats=self._collect_minmax(table, files),
-                      expect_version=base_v)
+        self._commit(table, m, [], files, None, "cluster_by")
         self.vacuum(table)
-        files_after, _ = self.file_stats(table)
         return {
-            "files_before": files_before,
-            "files_after": files_after,
+            "files_before": len(m["files"]),
+            "files_after": len(files),
             "cols": list(cols),
         }
 
@@ -1322,34 +1301,31 @@ class Warehouse:
         rewrite is a coalesce (no shuffle: tasks just concatenate
         inputs) into ceil(bytes/target) files. Returns
         {files_before, files_after, bytes} for the run log."""
+        m = self._adopt_if_legacy(table)
         files_before, total = self.file_stats(table)
         n_out = max(1, -(-total // max(1, target_file_bytes)))
-        df = self.read(table)
-        base_v = self._current_version(table)
+        df = self._read_files_dv(table, m, m["files"])
         files = self._write_snapshot(table, df.coalesce(n_out))
-        self._publish(table, files, None, "compact",
-                      stats=self._collect_minmax(table, files),
-                      expect_version=base_v)
+        self._commit(table, m, [], files, None, "compact")
         self.vacuum(table)
-        files_after, _ = self.file_stats(table)
         return {
             "files_before": files_before,
-            "files_after": files_after,
+            "files_after": len(files),
             "bytes": total,
         }
 
     def compact_partitions_where(
         self, table: str, partition_col: str, *, min_files: int = 2,
     ) -> dict:
-        """PARTIAL compaction: rewrite only partitions
+        """Compaction for a PARTITIONED table: rewrite the partitions
         holding >= ``min_files`` live files into one file each; every
         other partition's files carry into the new version verbatim —
         zero bytes moved for them. The trickle-append maintenance op at
         100 TB: a streaming workload fragments a handful of HOT
-        partitions while thousands of cold ones stay pristine;
-        ``compact_partitions`` rewrites the whole table, this rewrites
-        just the fragmented slice, and the single pointer publish keeps
-        the rewrite atomic and time-travelable.
+        partitions while thousands of cold ones stay pristine, and this
+        rewrites just the fragmented slice (``min_files=1`` rewrites
+        every partition); the single pointer publish keeps the rewrite
+        atomic and time-travelable.
 
         Returns {partitions_rewritten, files_before, files_after,
         carried, version} (version None when nothing is fragmented)."""
@@ -1386,45 +1362,13 @@ class Warehouse:
             table, cdf.repartition(F.col(pcol)), pcol
         )
         carried = [f for f in m["files"] if f not in set(frag)]
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in carried if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        dvs, dvm = self._carry_dvs(m, carried + new)
-        man = self._publish(table, carried + new, pcol,
-                            "compact_partitions_where", stats=stats,
-                            expect_version=m["version"],
-                            dvs=dvs, dv_meta=dvm)
+        man = self._commit(table, m, carried, new, pcol,
+                           "compact_partitions_where")
         self.vacuum(table)
         return {"partitions_rewritten": n_parts,
                 "files_before": len(m["files"]),
                 "files_after": len(carried) + len(new),
                 "carried": len(carried), "version": man["version"]}
-
-    def compact_partitions(
-        self, table: str, partition_col: str
-    ) -> dict:
-        """Compaction for a PARTITIONED table: rewrite every partition's
-        files into one file per partition (each partition's data
-        repartitions to its own single task — the partition column is
-        the shuffle key, so partition boundaries are preserved exactly
-        and readers keep pruning). The compacted snapshot is published
-        as one new version, then the replaced files are vacuumed."""
-        files_before, total = self.file_stats(table)
-        compacted = self.read(table).repartition(F.col(partition_col))
-        base_v = self._current_version(table)
-        files = self._write_snapshot(table, compacted, partition_col)
-        self._publish(table, files, partition_col, "compact_partitions",
-                      stats=self._collect_minmax(table, files),
-                      expect_version=base_v)
-        self.vacuum(table)
-        files_after, _ = self.file_stats(table)
-        return {
-            "files_before": files_before,
-            "files_after": files_after,
-            "bytes": total,
-        }
 
     def stats_count(
         self, table: str, filters: list[tuple] | None = None,
@@ -1523,13 +1467,15 @@ class Warehouse:
     def _filters_pred(df: DataFrame, filters: list[tuple]):
         """(df with any missing filter columns added as NULL, AND-ed
         predicate Column). NULL comparisons yield NULL, so the caller
-        decides the three-valued-logic policy (DML keeps NULL rows)."""
+        decides the three-valued-logic policy (scan drops NULL rows,
+        DML keeps them)."""
         pred = F.lit(True)
         for col, op, value in filters:
             if col not in df.columns:
                 # Schema evolution: files predating the column see NULL
-                # — comparisons are NULL there, so such rows are never
-                # "matched" by DML (same policy as scan()).
+                # (pruning cannot skip them: they have no bounds on it),
+                # so comparisons are NULL there instead of raising
+                # UNRESOLVED_COLUMN.
                 probe = value[0] if op == "in" and len(value) else value
                 df = df.withColumn(
                     col, F.lit(None).cast(_lit_sql_type(probe))
@@ -1641,19 +1587,13 @@ class Warehouse:
             table, keep_df,
             pcol if pcol and pcol in keep_df.columns else None,
         )
+        man = self._commit(table, m, carried, new, pcol, "delete_where")
+        # kept rows from the footer row counts the commit just recorded
+        rows = [man["stats"].get(f, {}).get(self._ROWS_KEY) for f in new]
         kept_rows = (
-            self._read_file_list(self.path(table), new).count()
-            if new else 0
+            sum(rows) if None not in rows
+            else self._read_file_list(self.path(table), new).count()
         )
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in carried if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        dvs, dvm = self._carry_dvs(m, carried + new)
-        man = self._publish(table, carried + new, pcol, "delete_where",
-                            stats=stats, expect_version=m["version"],
-                            dvs=dvs, dv_meta=dvm)
         return {"version": man["version"], "candidates": len(cands),
                 "carried": len(carried),
                 "rows_deleted": n_cand - kept_rows,
@@ -1725,15 +1665,7 @@ class Warehouse:
         new = self._write_snapshot(
             table, out, pcol if pcol and pcol in out.columns else None
         )
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in carried if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        _dvs, _dvm = self._carry_dvs(m, carried + new)
-        man = self._publish(table, carried + new, pcol, "update_where",
-                            dvs=_dvs, dv_meta=_dvm,
-                            stats=stats, expect_version=m["version"])
+        man = self._commit(table, m, carried, new, pcol, "update_where")
         return {"version": man["version"], "candidates": len(cands),
                 "carried": len(carried), "rows_updated": n_updated,
                 "files_rewritten": len(new)}
@@ -1857,15 +1789,7 @@ class Warehouse:
         new = self._write_snapshot(
             table, out, pcol if pcol and pcol in out.columns else None
         )
-        old_stats = m.get("stats", {})
-        stats = {
-            **{f: old_stats[f] for f in carried if f in old_stats},
-            **self._collect_minmax(table, new),
-        }
-        dvs, dvm = self._carry_dvs(m, carried + new)
-        man = self._publish(table, carried + new, pcol, "merge_into",
-                            stats=stats, expect_version=m["version"],
-                            dvs=dvs, dv_meta=dvm)
+        man = self._commit(table, m, carried, new, pcol, "merge_into")
         return {"version": man["version"], "candidates": len(cands),
                 "carried": len(carried), "rows_matched": n_matched,
                 "rows_inserted": n_inserted, "files_rewritten": len(new)}
@@ -1889,15 +1813,7 @@ class Warehouse:
         directory, where borrowed files don't live."""
         if self.exists(dst):
             raise ValueError(f"clone target {dst!r} already exists")
-        m = (
-            self._manifest(src, version) if version is not None
-            else self._adopt_if_legacy(src)
-        )
-        if version is not None and version not in self._committed_chain(src):
-            raise FileNotFoundError(
-                f"table {src!r} version {version} is not on the "
-                "committed chain"
-            )
+        m = self._snapshot(src, version)
         rel_src = os.path.relpath(self.path(src), self.path(dst))
         files = [os.path.join(rel_src, f) for f in m["files"]]
         stats = {
@@ -1926,13 +1842,8 @@ class Warehouse:
         rewrites, nothing is lost: the bad commits stay in history and
         time travel still reaches them until vacuum retention expires
         them). The undo button a bad pipeline run needs."""
-        if version not in self._committed_chain(table):
-            raise FileNotFoundError(
-                f"table {table!r} version {version} is not on the "
-                "committed chain"
-            )
         cur = self._current_version(table)
-        m = self._manifest(table, version)
+        m = self._snapshot(table, version)
         man = self._publish(
             table, m["files"], m.get("partition_col"),
             f"restore:v{version}", stats=m.get("stats", {}),
@@ -2185,17 +2096,22 @@ def evolve_partitioning(
     Unlike engines that only re-route NEW data to the new spec, this
     rewrites the current snapshot (one full pass) so pruning on the new
     column applies to the whole table immediately — the right trade
-    when the evolution motive IS scan pruning. Concurrent-writer safety
-    rides the manifest version check inside the rewrite's read; the
-    publish is last-writer-wins like any full overwrite.
+    when the evolution motive IS scan pruning. The publish is checked
+    against the version the rewrite read, so a writer that commits in
+    between raises ConcurrentWriteError instead of being dropped. Like
+    a full overwrite, the rewrite materializes the evolved schema and
+    resets the schema-evolution log.
 
     Returns the new manifest dict.
     """
-    df = wh.read(table)
+    m = wh._adopt_if_legacy(table)
+    df = wh._read_files_dv(table, m, m["files"])
     if partition_col is not None and partition_col not in df.columns:
         raise ValueError(
             f"partition column {partition_col!r} not in table columns "
             f"{df.columns}"
         )
-    wh.overwrite(table, df, partition_col=partition_col)
-    return wh._manifest(table)
+    wh.check_constraints(table, df)
+    files = wh._write_snapshot(table, df, partition_col)
+    return wh._commit(table, m, [], files, partition_col,
+                      "evolve_partitioning", schema_ops=[])

@@ -364,7 +364,7 @@ def test_scan_bounds_survive_partition_upsert_and_compaction(spark, tmp_path):
     got = sorted(r.id for r in wh.scan("t", [("id", ">=", 60)]).collect())
     assert got == list(range(60, 80))
 
-    wh.compact_partitions("t", "p")
+    wh.compact_partitions_where("t", "p", min_files=1)
     m2 = wh._manifest("t")
     assert set(m2["stats"]) == set(m2["files"])
     got2 = sorted(r.id for r in wh.scan("t", [("id", ">=", 60)]).collect())
@@ -402,14 +402,16 @@ def test_manifest_compact_partitions(spark, tmp_path):
         )
     # each dynamic overwrite replaced all 3 partitions, so only the last
     # round is live; rebuild with appends to get multi-file partitions
+    # (the first write sets the p= layout, which appends then follow)
     wh2 = _mwh(spark, tmp_path, "mwh2")
-    for i in range(4):
+    wh2.overwrite("t", df.filter(F.col("id") % 4 == 0), "p")
+    for i in range(1, 4):
         wh2.append("t", df.filter(F.col("id") % 4 == i))
     before = sorted((r.id, r.p) for r in wh2.read("t").collect())
     n_before, _ = wh2.file_stats("t")
     assert n_before > 3
 
-    wh2.compact_partitions("t", "p")
+    wh2.compact_partitions_where("t", "p", min_files=1)
     n_after, _ = wh2.file_stats("t")
     assert n_after == 3, "expected one file per partition"
     assert sorted((r.id, r.p) for r in wh2.read("t").collect()) == before

@@ -151,7 +151,7 @@ def test_compact_partitions_one_file_per_partition(spark, tmp_path):
     n_before, _ = wh.file_stats("t")
     assert n_before > 3
 
-    wh.compact_partitions("t", "p")
+    wh.compact_partitions_where("t", "p", min_files=1)
     n_after, _ = wh.file_stats("t")
     assert n_after == 3, "expected exactly one file per partition"
     after = sorted((r.id, r.p) for r in wh.read("t").collect())
