@@ -6,10 +6,11 @@ load facts -> quality -> KPI views -> summary, with the same flags
 (--source, --csv-path, --generate-sample, --skip-ingest). Differences by
 design:
 
-- Incrementality is a persisted high-watermark on ``ingested_at`` instead
-  of a mutable ``is_processed`` flag (SURVEY.md §2.5 U7 rebuild decision):
-  a pure predicate that becomes parquet min/max or partition pruning at
-  scale, with no bronze rewrite per batch.
+- Incrementality is a persisted watermark instead of a mutable
+  ``is_processed`` flag (SURVEY.md §2.5 U7 rebuild decision): the bronze
+  version the last load read through. The next load reads only the files
+  appended after it, with no bronze rewrite per batch, and never misses
+  a row that a slower lander stamped earlier but committed later.
 - Each SQL script step is a DataFrame program; one fact-load path with the
   canonical key (SURVEY.md §0.2).
 """
@@ -35,6 +36,9 @@ from _event_intelligence_data_warehouse_spark.plans.staging import stage_events
 from _event_intelligence_data_warehouse_spark.sources import bronze
 from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
+# Holds the bronze version the last fact load read through. The name is
+# from when it held an ingested_at timestamp; a warehouse that still
+# holds one resumes from it once.
 WATERMARK = "fact_load.ingested_at"
 
 # Dimension name -> its update, called as (existing, stg, now). Called
@@ -80,46 +84,50 @@ def step_ingest(wh: Warehouse, args, spark: SparkSession) -> dict:
     raise ValueError(f"unknown source {args.source!r}")
 
 
-def unprocessed_raw(wh: Warehouse) -> DataFrame:
-    """Bronze rows past the fact-load watermark — the incremental filter
-    (transform_events.sql:75 re-expressed)."""
-    raw = wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS)
+def unprocessed_raw(wh: Warehouse) -> tuple[DataFrame | None, int]:
+    """Bronze rows committed after the fact-load watermark, and the bronze
+    version they were read through — the incremental filter
+    (transform_events.sql:75 re-expressed). None when there are none."""
     wm = wh.get_watermark(WATERMARK)
-    if wm is not None:
+    raw, version = wh.appended_since(
+        bronze.RAW_TABLE, wm if isinstance(wm, int) else 0
+    )
+    if isinstance(wm, str) and raw is not None:
+        # an ingested_at watermark from before version watermarks:
+        # resumed once with its own predicate
         raw = raw.filter(F.col("ingested_at") > F.lit(wm).cast("timestamp"))
-    return raw
+    return raw, version
 
 
 def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
     """Staging cleanse + dim maintenance + fact upsert, then advance the
     watermark to exactly the batch that was loaded (fixes the reference's
     broken mark-processed — SURVEY.md §0.3)."""
-    raw = unprocessed_raw(wh)
-    if raw.isEmpty():
+    raw, version = unprocessed_raw(wh)
+    if raw is None:
         return {"staged": 0}
     stg = stage_events(raw, only_unprocessed=False).cache()
     try:
-        return _load_staged(wh, stg)
+        out = _load_staged(wh, stg)
     finally:
         stg.unpersist()
+    wh.set_watermark(WATERMARK, version)
+    return out
 
 
 def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     now = F.current_timestamp()
     dims = {name: wh.read(name, GOLD[name]) for name in DIM_UPDATES}
     present = {name: dims[name] for name in dims if wh.exists(name)}
-    # One pass over the cached batch: the watermark, the batch size, the
-    # fact buckets its keys fall in and the dimensions it adds members
-    # to (a table that does not exist yet is always written, even if
-    # empty). New fact keys never outnumber staged rows, so the size
-    # also picks the surrogate-key regime without a probe job on the
-    # join result.
+    # One pass over the cached batch: the batch size, the fact buckets
+    # its keys fall in and the dimensions it adds members to (a table
+    # that does not exist yet is always written, even if empty). New
+    # fact keys never outnumber staged rows, so the size also picks the
+    # surrogate-key regime without a probe job on the join result.
     rows = dims_mod.with_new_members(stg, present, {
-        "ingested_at": F.col("ingested_at"),
         "_bucket": facts_mod.fact_bucket(event_nk("source", "raw_event_id")),
     })
-    max_ts, staged, buckets, added = rows.agg(
-        F.max("ingested_at"),
+    staged, buckets, added = rows.agg(
         F.count("_bucket"),  # a staged row's own row has a bucket
         F.collect_set("_bucket"),
         F.collect_set("dim"),
@@ -147,9 +155,6 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
         wh, fact_rows, buckets=buckets,
         bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
     )
-
-    if max_ts is not None:
-        wh.set_watermark(WATERMARK, max_ts.isoformat(sep=" "))
     return {"staged": staged}
 
 

@@ -16,18 +16,21 @@ Multi-partition operations (dynamic-overwrite-style upsert, compaction)
 are atomic for free: the new manifest swaps in replaced partitions'
 files and keeps untouched partitions' entries, in one publish.
 
-Every write that replaces files (append, overwrite, partition overwrite,
-copy-on-write DML, MERGE, compaction, clustering, layout evolution,
-legacy adoption) commits through one method, :meth:`Warehouse._commit`:
-kept files plus new files, the kept files' stats and deletion vectors,
-published against the version the write's input was read from. Only the
-metadata-only commits (deletion-vector deletes, clone, restore, schema
-evolution) publish a manifest themselves.
+Every write commits through one method, :meth:`Warehouse._commit`: kept
+files plus new files, the kept files' stats and deletion vectors, plus
+any vectors the write adds, published against the version the write's
+input was read from. Copy-on-write is :meth:`Warehouse._rewrite`: write a
+frame as a new snapshot and commit it in place of the files it replaces.
+Append, copy-on-write DML, MERGE, compaction, clustering, layout
+evolution and legacy adoption all go through it; a deletion-vector delete
+commits its vectors through ``_commit`` with no data file written. Only
+clone, restore and schema evolution, which reuse another version's
+metadata, publish a manifest themselves.
 
-Incremental state (the reference's ``is_processed`` flag) is replaced by a
-high-watermark on ``ingested_at`` persisted in ``_meta/watermarks.json`` —
-a pure predicate that turns into parquet min/max + partition pruning at
-scale instead of a full-table rewrite per batch (SURVEY.md §2.5 U7).
+Incremental state (the reference's ``is_processed`` flag) is a watermark
+persisted in ``_meta/watermarks.json``: the fact load records the bronze
+version it read through, and :meth:`Warehouse.appended_since` hands the
+next load only the files appended after it (SURVEY.md §2.5 U7).
 
 A table directory written before manifests existed (plain parquet files,
 possibly ``<col>=<value>/`` partitioned) is upgraded once, on first
@@ -261,11 +264,7 @@ class Warehouse:
     def append(self, table: str, df: DataFrame) -> None:
         self.check_constraints(table, df)
         m = self._adopt_if_legacy(table)
-        pcol = m.get("partition_col")
-        new = self._write_snapshot(
-            table, df, pcol if pcol and pcol in df.columns else None
-        )
-        self._commit(table, m, m["files"], new, pcol, "append")
+        self._rewrite(table, m, [], df, m.get("partition_col"), "append")
 
     def overwrite(
         self, table: str, df: DataFrame, partition_col: str | None = None
@@ -394,24 +393,45 @@ class Warehouse:
             .option("mergeSchema", "true")
             .parquet(*sorted(os.path.join(base, f) for f in old))
         )
-        new = self._write_snapshot(table, df, pcol)
-        kept = [f for f in m["files"] if f not in set(old)]
-        m = self._commit(table, m, kept, new, pcol, "adopt_legacy")
+        # the rewrite records the whole op log as applied, so apply it
+        df = self._apply_schema_ops(df, m.get("schema_ops"))
+        m, _new = self._rewrite(table, m, old, df, pcol, "adopt_legacy")
         self.vacuum(table)
         return m
 
+    def _rewrite(
+        self, table: str, m: dict, files: list[str], df: DataFrame,
+        partition_col: str | None, operation: str, **publish_kw,
+    ) -> tuple[dict, list[str]]:
+        """Copy-on-write: write ``df`` as a new snapshot in the
+        ``partition_col`` layout (unpartitioned when ``df`` lacks that
+        column) and commit it in place of ``files``, carrying every other
+        file of ``m``. Returns the new manifest and the new files."""
+        new = self._write_snapshot(
+            table, df, partition_col if partition_col in df.columns else None
+        )
+        gone = set(files)
+        kept = [f for f in m["files"] if f not in gone]
+        man = self._commit(table, m, kept, new, partition_col, operation,
+                           **publish_kw)
+        return man, new
+
     def _commit(
         self, table: str, m: dict | None, kept: list[str], new: list[str],
-        partition_col: str | None, operation: str, **publish_kw,
+        partition_col: str | None, operation: str, *,
+        new_dvs: dict[str, list[str]] | None = None, **publish_kw,
     ) -> dict:
-        """The commit of every write that replaces files: publish
-        ``kept`` (live files of ``m``, carried verbatim) plus ``new``
-        (files the write just put in a snapshot) as the next version.
-        Kept files keep their stats and new files get theirs from their
-        footers. A deletion vector carries only while a kept file it
-        covers stays live (vectors from manifests that predate coverage
-        records carry while anything is kept), so a rewrite of every
-        file materializes and clears them all.
+        """The commit of every write that adds data or vector files:
+        publish ``kept`` (live files of ``m``, carried verbatim) plus
+        ``new`` (files the write just put in a snapshot) as the next
+        version. Kept files keep their stats and new files get theirs
+        from their footers, along with the length of the schema-op log
+        they were written under. A deletion vector carries only while a
+        kept file it covers stays live (vectors from manifests that
+        predate coverage records carry while anything is kept), so a
+        rewrite of every file materializes and clears them all.
+        ``new_dvs`` maps the vector files the write adds to the
+        data-file keys each covers.
 
         ``m`` is the manifest the write's input was read from, and the
         publish is checked against its version: a writer that committed
@@ -426,12 +446,17 @@ class Warehouse:
             r for r in m.get("dv_files") or []
             if live and (meta.get(r) is None or set(meta[r]) & live)
         ]
+        stats = self._collect_minmax(table, new)
+        ops = publish_kw.get("schema_ops", m.get("schema_ops")) or []
+        for st in stats.values():
+            st[self._OPS_KEY] = len(ops)
         return self._publish(
             table, kept + new, partition_col, operation,
-            stats={**{f: old[f] for f in kept if f in old},
-                   **self._collect_minmax(table, new)},
-            expect_version=m["version"], dvs=dvs,
-            dv_meta={r: meta[r] for r in dvs if r in meta}, **publish_kw,
+            stats={**{f: old[f] for f in kept if f in old}, **stats},
+            expect_version=m["version"], dvs=dvs + list(new_dvs or {}),
+            dv_meta={**{r: meta[r] for r in dvs if r in meta},
+                     **(new_dvs or {})},
+            **publish_kw,
         )
 
     def _publish(
@@ -480,9 +505,9 @@ class Warehouse:
 
         # Schema-evolution ops are a TABLE property: carry the current
         # chain's ops into every successor unless the caller overrides
-        # (evolve_schema appends; drop+recreate resets). Ops are
-        # presence-guarded at read, so carrying them across rewrites
-        # that already materialized the evolved schema is a no-op.
+        # (evolve_schema appends; drop+recreate resets). Files record
+        # how many ops they were written under, so a read replays onto
+        # a rewrite's files only the ops that came after it.
         if schema_ops is None and base_v > 0:
             try:
                 schema_ops = self._manifest(table, base_v).get("schema_ops")
@@ -683,6 +708,10 @@ class Warehouse:
 
     _ROWS_KEY = "__rows__"
 
+    # Reserved stats key for how many schema-log ops a file was written
+    # under: a read replays only the later ones onto it.
+    _OPS_KEY = "__ops__"
+
     # Reserved stats key for per-file per-column null counts (never a
     # real filter column name, so bounds lookups skip it).
     _NULLS_KEY = "__nulls__"
@@ -879,7 +908,7 @@ class Warehouse:
         return posix.rsplit("/data/", 1)[1]
 
     def _read_files_dv(
-        self, table: str, m: dict, files: list[str]
+        self, table: str, m: dict, files: list[str], *, rowpos: bool = False,
     ) -> DataFrame:
         """Read a subset of ``m``'s files with ``m``'s deletion vectors
         applied — THE read path for any manifest carrying dv_files: a
@@ -887,36 +916,37 @@ class Warehouse:
         is a scan of the tiny DV tables, not of the data. Files outside
         the subset contribute no anti-join hits (their keys simply don't
         occur), so candidate-subset reads (DML, partial compaction)
-        apply cleanly."""
+        apply cleanly. ``rowpos`` keeps each row's (file key, row index)
+        columns, the positions a new vector records."""
         if not files:
             raise FileNotFoundError(
                 f"table {table!r} missing and no schema given"
             )
         base = self.path(table)
         dvs = m.get("dv_files") or []
-        ops = m.get("schema_ops")
+        df = self._read_file_list(
+            base, files, rowpos=rowpos or bool(dvs),
+            schema_ops=m.get("schema_ops"), stats=m.get("stats"),
+        )
         if not dvs:
-            return self._read_file_list(base, files, schema_ops=ops)
-        df = self._read_file_list(base, files, rowpos=True, schema_ops=ops)
+            return df
         dv = self._read_file_list(base, dvs)
         cond = (F.col(self._DV_KEY) == dv["file_key"]) & (
             F.col(self._DV_POS) == dv["row_index"]
         )
-        return df.join(dv, cond, "left_anti").drop(
-            self._DV_KEY, self._DV_POS
-        )
+        df = df.join(dv, cond, "left_anti")
+        return df if rowpos else df.drop(self._DV_KEY, self._DV_POS)
 
     @staticmethod
     def _apply_schema_ops(df: DataFrame, ops: list | None) -> DataFrame:
-        """Replay the manifest's ordered schema-evolution log onto one
-        file-group's frame. Every step is presence-guarded, so the same
-        log is correct for files written before AND after each
-        evolution: a pre-rename file gets renamed, a post-rename file
-        matches nothing; a pre-add file materializes the declared
-        default (Iceberg initial-default semantics), a post-add file
-        keeps its real values. Order matters — a drop followed by a
-        re-add of the same name yields the NEW default, never the
-        dropped column's ghost values."""
+        """Replay schema-evolution ops, in order, onto one file-group's
+        frame: the ops of the manifest's log that came after the group
+        was written (the whole log for files without that record).
+        Every step is also presence-guarded: a pre-rename file gets
+        renamed; a pre-add file materializes the declared default
+        (Iceberg initial-default semantics). Order matters — a drop
+        followed by a re-add of the same name yields the NEW default,
+        never the dropped column's ghost values."""
         for op in ops or []:
             kind = op["op"]
             if kind == "rename" and op["from"] in df.columns:
@@ -938,13 +968,14 @@ class Warehouse:
 
     def _read_file_list(
         self, base: str, files: list[str], *, rowpos: bool = False,
-        schema_ops: list | None = None,
+        schema_ops: list | None = None, stats: dict | None = None,
     ) -> DataFrame:
         # Group by snapshot dir (the component after the last data/) so
         # partition values recover from the <col>=<val>/ path components
         # under each basePath; compaction collapses the table to one
         # group, bounding the union width.
         groups: dict[str, list[str]] = {}
+        applied: dict[str, int] = {}  # schema ops a group was written under
         for rel in files:
             # Normalize first: a shallow clone's entries reach into the
             # source table ("../src/data/s*/..."), and basePath must be
@@ -952,7 +983,9 @@ class Warehouse:
             full = os.path.normpath(os.path.join(base, rel))
             parts = full.split(os.sep)
             di = len(parts) - 1 - parts[::-1].index("data")
-            groups.setdefault(os.sep.join(parts[: di + 2]), []).append(full)
+            root = os.sep.join(parts[: di + 2])
+            groups.setdefault(root, []).append(full)
+            applied[root] = (stats or {}).get(rel, {}).get(self._OPS_KEY, 0)
         # No schema-inference job: files inside one data/s* snapshot dir
         # come from a single Spark job and share a schema, so the first
         # file's footer (read here, in-process) is the schema Spark
@@ -968,26 +1001,24 @@ class Warehouse:
             schema = footer_spark_schema(fs[0])
             if schema is not None:
                 reader = reader.schema(schema)
-            dfs.append(reader.parquet(*fs))
-        if rowpos:
-            # row identity for deletion vectors, resolved per group
-            # while _metadata is still bound to the scan
-            dfs = [
-                d.select(
+            d = reader.parquet(*fs)
+            if rowpos:
+                # row identity for deletion vectors, resolved per group
+                # while _metadata is still bound to the scan
+                d = d.select(
                     "*",
                     F.element_at(
                         F.split(F.col("_metadata.file_path"), "/data/"), -1
                     ).alias(self._DV_KEY),
                     F.col("_metadata.row_index").alias(self._DV_POS),
                 )
-                for d in dfs
-            ]
-        if schema_ops:
             # Per GROUP, before the union: groups of different ages can
             # disagree on names (pre- vs post-rename), and a cross-group
             # allowMissingColumns union of disagreeing names would
             # surface BOTH columns null-padded instead of one.
-            dfs = [self._apply_schema_ops(d, schema_ops) for d in dfs]
+            dfs.append(self._apply_schema_ops(
+                d, (schema_ops or [])[applied[root]:]
+            ))
         out = dfs[0]
         # Schema evolution across snapshots: an append that added a
         # column leaves older snapshots without it — surface those rows
@@ -1039,6 +1070,21 @@ class Warehouse:
                 except ValueError:
                     pass
         return sorted(out)
+
+    def _referenced_files(self, table: str) -> dict[int, set[str]]:
+        """{version: normalized data and vector files} for every readable
+        manifest on disk, committed or not."""
+        out = {}
+        for v in self._versions_on_disk(table):
+            try:
+                mv = self._manifest(table, v)
+                out[v] = {
+                    os.path.normpath(f)
+                    for f in mv["files"] + mv.get("dv_files", [])
+                }
+            except (OSError, json.JSONDecodeError, KeyError):
+                continue
+        return out
 
     def history(self, table: str) -> list[dict]:
         """Commit log of the table, newest first: one row per committed
@@ -1136,8 +1182,8 @@ class Warehouse:
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-        files = self._write_snapshot(table, clustered)
-        self._commit(table, m, [], files, None, "cluster_by")
+        _man, files = self._rewrite(table, m, m["files"], clustered, None,
+                                    "cluster_by")
         self.vacuum(table)
         return {
             "files_before": len(m["files"]),
@@ -1210,15 +1256,7 @@ class Warehouse:
         live: set[str] = set()          # retained versions' files
         retired_refs: set[str] = set()  # files some <=current manifest held
         inflight_refs: set[str] = set()  # files of fresh >current manifests
-        for v in self._versions_on_disk(table):
-            try:
-                mv = self._manifest(table, v)
-                files = {
-                    os.path.normpath(f)
-                    for f in mv["files"] + mv.get("dv_files", [])
-                }
-            except (OSError, json.JSONDecodeError, KeyError):
-                continue
+        for v, files in self._referenced_files(table).items():
             if v in retained:
                 live |= files
             elif v > current and not _old(
@@ -1255,6 +1293,44 @@ class Warehouse:
         return removed
 
     # -- watermarks --------------------------------------------------------
+    def appended_since(
+        self, table: str, version: int,
+    ) -> tuple[DataFrame | None, int]:
+        """The rows of the files committed after ``version``, read with
+        the current deletion vectors, and the version they were read
+        through: the incremental read of an append-only table, whatever
+        order its writers stamped their rows in. ``version=0`` reads the
+        whole table. The frame is None when the manifest's row counts
+        show no new row.
+
+        Raises FileNotFoundError when a manifest back to ``version`` has
+        expired, and ValueError when ``version`` is not on the committed
+        chain or a commit after it replaced files: that commit's files
+        hold rows already read, and reading them again would load those
+        rows twice."""
+        m = self._adopt_if_legacy(table)
+        cur = m
+        while version and cur["version"] != version:
+            if not cur.get("parent") or cur["version"] < version:
+                raise ValueError(
+                    f"table {table!r}: version {version} is not on the "
+                    "committed chain"
+                )
+            prev = self._manifest(table, cur["parent"])
+            if not set(prev["files"]) <= set(cur["files"]):
+                raise ValueError(
+                    f"table {table!r}: version {cur['version']} "
+                    f"({cur.get('operation')}) replaced files after "
+                    f"version {version}"
+                )
+            cur = prev
+        old = set(cur["files"]) if version else set()
+        new = [f for f in m["files"] if f not in old]
+        stats = m.get("stats", {})
+        if all(stats.get(f, {}).get(self._ROWS_KEY) == 0 for f in new):
+            return None, m["version"]
+        return self._read_files_dv(table, m, new), m["version"]
+
     @property
     def _wm_path(self) -> str:
         return os.path.join(self.root, "_meta", "watermarks.json")
@@ -1265,10 +1341,10 @@ class Warehouse:
                 return json.load(f)
         return {}
 
-    def get_watermark(self, name: str) -> str | None:
+    def get_watermark(self, name: str) -> str | int | None:
         return self._load_wm().get(name)
 
-    def set_watermark(self, name: str, value: str) -> None:
+    def set_watermark(self, name: str, value: str | int) -> None:
         wm = self._load_wm()
         wm[name] = value
         tmp = self._wm_path + ".tmp"
@@ -1305,8 +1381,8 @@ class Warehouse:
         files_before, total = self.file_stats(table)
         n_out = max(1, -(-total // max(1, target_file_bytes)))
         df = self._read_files_dv(table, m, m["files"])
-        files = self._write_snapshot(table, df.coalesce(n_out))
-        self._commit(table, m, [], files, None, "compact")
+        _man, files = self._rewrite(table, m, m["files"], df.coalesce(n_out),
+                                    None, "compact")
         self.vacuum(table)
         return {
             "files_before": files_before,
@@ -1358,17 +1434,14 @@ class Warehouse:
         # one task per partition value -> one output file per rewritten
         # partition (hash collisions co-locate two partitions in a task
         # but the partitioned write still splits them by directory)
-        new = self._write_snapshot(
-            table, cdf.repartition(F.col(pcol)), pcol
-        )
-        carried = [f for f in m["files"] if f not in set(frag)]
-        man = self._commit(table, m, carried, new, pcol,
-                           "compact_partitions_where")
+        man, new = self._rewrite(table, m, frag, cdf.repartition(F.col(pcol)),
+                                 pcol, "compact_partitions_where")
         self.vacuum(table)
+        carried = len(m["files"]) - len(frag)
         return {"partitions_rewritten": n_parts,
                 "files_before": len(m["files"]),
-                "files_after": len(carried) + len(new),
-                "carried": len(carried), "version": man["version"]}
+                "files_after": carried + len(new),
+                "carried": carried, "version": man["version"]}
 
     def stats_count(
         self, table: str, filters: list[tuple] | None = None,
@@ -1394,7 +1467,9 @@ class Warehouse:
         stats = m.get("stats", {})
         if filters:
             pcol = m.get("partition_col")
-            keep, _total = self.pruned_files(table, filters)
+            keep, _total = self.pruned_files(
+                table, filters, version=m["version"]
+            )
             total = 0
             for rel in keep:
                 st = stats.get(rel, {})
@@ -1512,7 +1587,8 @@ class Warehouse:
         compaction/cluster_by/overwrite materializes and clears them;
         stats-only counts disable themselves while DVs exist. Point
         deletes in huge files (GDPR erasure) want "dv"; bulk predicate
-        deletes want "rewrite".
+        deletes want "rewrite". A "dv" commit also records
+        ``rows_deleted`` in its ``meta``, which ``history()`` returns.
 
         Returns {version, candidates, carried, rows_deleted,
         files_rewritten}; ``version`` is None for the no-op case (no
@@ -1520,32 +1596,19 @@ class Warehouse:
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"unknown delete mode {mode!r}")
         m = self._adopt_if_legacy(table)
-        cands, _total = self.pruned_files(table, filters)
-        carried = [f for f in m["files"] if f not in set(cands)]
+        cands, total = self.pruned_files(table, filters, version=m["version"])
+        noop = {"version": None, "candidates": len(cands),
+                "carried": total - len(cands), "rows_deleted": 0,
+                "files_rewritten": 0}
         if not cands:
-            return {"version": None, "candidates": 0,
-                    "carried": len(carried), "rows_deleted": 0,
-                    "files_rewritten": 0}
+            return noop
         pcol = m.get("partition_col")
         if mode == "dv":
             # existing DVs applied first, so re-deleting an already
-            # deleted row is a no-op rather than a recount. The
-            # schema-op replay applies here too: a filter on a renamed/
-            # added column must see the evolved frame, same as read().
-            raw = self._read_file_list(
-                self.path(table), cands, rowpos=True,
-                schema_ops=m.get("schema_ops"),
+            # deleted row is a no-op rather than a recount
+            aug, pred = self._filters_pred(
+                self._read_files_dv(table, m, cands, rowpos=True), filters
             )
-            old_dvs = m.get("dv_files") or []
-            if old_dvs:
-                dv = self._read_file_list(self.path(table), old_dvs)
-                raw = raw.join(
-                    dv,
-                    (F.col(self._DV_KEY) == dv["file_key"])
-                    & (F.col(self._DV_POS) == dv["row_index"]),
-                    "left_anti",
-                )
-            aug, pred = self._filters_pred(raw, filters)
             # materialize the matched positions ONCE: count, coverage
             # keys and the vector write all reuse it (re-deriving would
             # re-scan every candidate file per consumer)
@@ -1555,47 +1618,35 @@ class Warehouse:
             ).localCheckpoint()
             rows_deleted = matched.count()
             if rows_deleted == 0:
-                return {"version": None, "candidates": len(cands),
-                        "carried": len(carried), "rows_deleted": 0,
-                        "files_rewritten": 0}
+                return noop
             # bounded collect: one key per touched candidate file
             covered = sorted(
                 r.file_key
                 for r in matched.select("file_key").distinct().collect()
             )
-            new_dv = self._write_snapshot(table, matched)
-            dv_meta = {
-                **(m.get("dv_meta") or {}),
-                **{rel: covered for rel in new_dv},
+            new_dvs = {
+                f: covered for f in self._write_snapshot(table, matched)
             }
-            man = self._publish(
-                table, m["files"], pcol, "delete_where_dv",
-                stats=m.get("stats", {}), expect_version=m["version"],
-                dvs=old_dvs + new_dv, dv_meta=dv_meta,
-            )
-            return {"version": man["version"], "candidates": len(cands),
-                    "carried": len(carried), "rows_deleted": rows_deleted,
-                    "files_rewritten": 0}
+            with self.commit_metadata(rows_deleted=rows_deleted):
+                man = self._commit(table, m, m["files"], [], pcol,
+                                   "delete_where_dv", new_dvs=new_dvs)
+            return {**noop, "version": man["version"],
+                    "rows_deleted": rows_deleted}
         cdf = self._read_files_dv(table, m, cands)
-        base_cols = list(cdf.columns)
         aug, pred = self._filters_pred(cdf, filters)
         keep_df = aug.filter(~F.coalesce(pred, F.lit(False))).select(
-            *base_cols
+            *cdf.columns
         )
         n_cand = cdf.count()
-        new = self._write_snapshot(
-            table, keep_df,
-            pcol if pcol and pcol in keep_df.columns else None,
-        )
-        man = self._commit(table, m, carried, new, pcol, "delete_where")
+        man, new = self._rewrite(table, m, cands, keep_df, pcol,
+                                 "delete_where")
         # kept rows from the footer row counts the commit just recorded
         rows = [man["stats"].get(f, {}).get(self._ROWS_KEY) for f in new]
         kept_rows = (
             sum(rows) if None not in rows
             else self._read_file_list(self.path(table), new).count()
         )
-        return {"version": man["version"], "candidates": len(cands),
-                "carried": len(carried),
+        return {**noop, "version": man["version"],
                 "rows_deleted": n_cand - kept_rows,
                 "files_rewritten": len(new)}
 
@@ -1622,12 +1673,10 @@ class Warehouse:
                 f"{pcol!r} (rows would move between partitions; use "
                 "read -> transform -> overwrite_partitions instead)"
             )
-        cands, _total = self.pruned_files(table, filters)
-        carried = [f for f in m["files"] if f not in set(cands)]
+        cands, total = self.pruned_files(table, filters, version=m["version"])
         if not cands:
-            return {"version": None, "candidates": 0,
-                    "carried": len(carried), "rows_updated": 0,
-                    "files_rewritten": 0}
+            return {"version": None, "candidates": 0, "carried": total,
+                    "rows_updated": 0, "files_rewritten": 0}
         cdf = self._read_files_dv(table, m, cands)
         base_cols = list(cdf.columns)
         unknown = [c for c in assignments if c not in base_cols]
@@ -1662,12 +1711,9 @@ class Warehouse:
         # before any file lands (carried files hold only unchanged,
         # previously-admitted rows).
         self.check_constraints(table, out)
-        new = self._write_snapshot(
-            table, out, pcol if pcol and pcol in out.columns else None
-        )
-        man = self._commit(table, m, carried, new, pcol, "update_where")
+        man, new = self._rewrite(table, m, cands, out, pcol, "update_where")
         return {"version": man["version"], "candidates": len(cands),
-                "carried": len(carried), "rows_updated": n_updated,
+                "carried": total - len(cands), "rows_updated": n_updated,
                 "files_rewritten": len(new)}
 
     def merge_into(
@@ -1745,8 +1791,7 @@ class Warehouse:
             lo, hi = env[f"mn_{k}"], env[f"mx_{k}"]
             if lo is not None and hi is not None:
                 filters.extend([(k, ">=", lo), (k, "<=", hi)])
-        cands, _total = self.pruned_files(table, filters)
-        carried = [f for f in m["files"] if f not in set(cands)]
+        cands, total = self.pruned_files(table, filters, version=m["version"])
         if cands:
             cdf = self._read_files_dv(table, m, cands)
             survivors = cdf.join(
@@ -1786,12 +1831,9 @@ class Warehouse:
         out = parts[0]
         for p_df in parts[1:]:
             out = out.unionByName(p_df, allowMissingColumns=True)
-        new = self._write_snapshot(
-            table, out, pcol if pcol and pcol in out.columns else None
-        )
-        man = self._commit(table, m, carried, new, pcol, "merge_into")
+        man, new = self._rewrite(table, m, cands, out, pcol, "merge_into")
         return {"version": man["version"], "candidates": len(cands),
-                "carried": len(carried), "rows_matched": n_matched,
+                "carried": total - len(cands), "rows_matched": n_matched,
                 "rows_inserted": n_inserted, "files_rewritten": len(new)}
 
     def clone(
@@ -2044,16 +2086,7 @@ class Warehouse:
         (space leaks a vacuum would reclaim). Read-only; pairs with
         ``vacuum`` the way fsck pairs with gc."""
         base = self.path(table)
-        referenced: set[str] = set()
-        for v in self._versions_on_disk(table):
-            try:
-                mv = self._manifest(table, v)
-                referenced |= {
-                    os.path.normpath(f)
-                    for f in mv["files"] + mv.get("dv_files", [])
-                }
-            except (OSError, json.JSONDecodeError, KeyError):
-                continue
+        referenced = set().union(*self._referenced_files(table).values())
         missing = [
             f for f in sorted(referenced)
             if not os.path.isfile(os.path.join(base, f))
@@ -2112,6 +2145,5 @@ def evolve_partitioning(
             f"{df.columns}"
         )
     wh.check_constraints(table, df)
-    files = wh._write_snapshot(table, df, partition_col)
-    return wh._commit(table, m, [], files, partition_col,
-                      "evolve_partitioning", schema_ops=[])
+    return wh._rewrite(table, m, m["files"], df, partition_col,
+                       "evolve_partitioning", schema_ops=[])[0]

@@ -535,12 +535,14 @@ def stream_gdpr_erasure(
     restart) is not mistaken for a replay. The delete commit is
     stamped with the same key via ``commit_metadata`` — so a crash in
     the window AFTER the DV delete published but BEFORE the audit
-    append is reconstructed on replay from the table history (version
-    from the stamped commit, rows_deleted by counting the deletion-
-    vector files that commit added) instead of re-running the delete,
-    which would match nothing and permanently under-record the erasure
-    as rows_deleted=0/version=None. At-least-once file delivery
-    therefore never double-counts OR loses an erasure's accounting.
+    append is reconstructed on replay from the table history: the
+    stamped commit gives the version, and the ``rows_deleted`` count
+    the vector delete records in that commit's ``meta`` gives the
+    count. Re-running the delete instead would match nothing and
+    permanently under-record the erasure as rows_deleted=0/
+    version=None. At-least-once file delivery therefore never
+    double-counts OR loses an erasure's accounting while vacuum
+    retention keeps the stamped commit in history.
     One delete per batch (not per key): the manifest grows by one
     commit per micro-batch however many users it covers.
 
@@ -571,7 +573,7 @@ def stream_gdpr_erasure(
         if not keys:
             return
 
-        def _audit(rows_deleted: int, version: int | None) -> None:
+        def _audit(rows_deleted: int | None, version: int | None) -> None:
             wh.append(audit_table, spark.createDataFrame(
                 [(app, batch_id, len(keys), rows_deleted, version)],
                 "app string, batch_id long, n_keys long, "
@@ -597,45 +599,8 @@ def stream_gdpr_erasure(
         )
         if prior is not None:
             # crash landed between the delete publish and the audit
-            # append: reconstruct the original accounting. The commit's
-            # newly-added DV files hold exactly the positions it
-            # deleted, so their row count IS rows_deleted. The WHOLE
-            # reconstruction (stamped manifest fetch, parent fetch, DV
-            # file read) runs under the retention-race fallback: vacuum
-            # can expire any of those artifacts between the crash and
-            # the replay, and an unhandled error inside foreachBatch
-            # would wedge the stream forever (round-6 ADVICE). Accurate
-            # reconstruction therefore requires vacuum retention longer
-            # than the crash-replay window; past it, the erasure itself
-            # is still durable (the commit is in history) and only its
-            # accounting degrades — to an overcount if just the parent
-            # expired, to 0 if the stamped commit's own artifacts did.
-            from pyspark.errors import AnalysisException
-
-            v = prior["version"]
-            try:
-                dv_v = set(
-                    wh._manifest(target_table, v).get("dv_files") or []
-                )
-                try:
-                    dv_p = set(
-                        wh._manifest(target_table, prior["parent"])
-                        .get("dv_files") or []
-                    )
-                except FileNotFoundError:
-                    # parent manifest expired mid-replay: counting every
-                    # live vector can only overcount, never lose the
-                    # erasure
-                    dv_p = set()
-                added = sorted(dv_v - dv_p)
-                n = (
-                    wh._read_file_list(wh.path(target_table), added)
-                    .count()
-                    if added else 0
-                )
-            except (FileNotFoundError, AnalysisException):
-                n = 0
-            _audit(n, v)
+            # append: the delete's commit recorded its own count
+            _audit(prior["meta"].get("rows_deleted"), prior["version"])
             return
         with wh.commit_metadata(gdpr_app=app, gdpr_batch=batch_id):
             res = wh.delete_where(

@@ -1590,3 +1590,39 @@ def test_evolve_schema_composes_with_deletion_vectors(spark, tmp_path):
     assert res["rows_deleted"] == 1
     got = {(r.k, r.amount) for r in wh.read("t").collect()}
     assert got == {(1, 10), (3, 30)}
+
+
+def test_evolve_schema_rename_then_readd_old_name(spark, tmp_path):
+    """Files written after a rename and a re-add of the old name hold
+    both columns; replaying the rename onto them would rename the new
+    column onto the old one. Each file replays only the ops that came
+    after it was written, before and after a compaction."""
+    wh = _mwh(spark, tmp_path)
+    wh.append("t", spark.createDataFrame([(1, 10)], "k int, a int"))
+    wh.evolve_schema("t", rename={"a": "b"})
+    wh.evolve_schema("t", add={"a": ("int", "-1")})
+    wh.append("t", spark.createDataFrame([(2, 20, 7)],
+                                         "k int, b int, a int"))
+    want = {(1, 10, -1), (2, 20, 7)}
+    assert {(r.k, r.b, r.a) for r in wh.read("t").collect()} == want
+    wh.compact("t")
+    assert {(r.k, r.b, r.a) for r in wh.read("t").collect()} == want
+
+
+def test_appended_since_reads_only_appended_files(spark, tmp_path):
+    wh = _mwh(spark, tmp_path)
+    wh.append("t", _ev_df(spark, [(1, 10, "a")]))
+    v1 = wh._current_version("t")
+    wh.append("t", _ev_df(spark, [(2, 20, "b"), (3, 30, "c")]))
+    wh.delete_where("t", [("k", "==", 3)], mode="dv")
+    df, v = wh.appended_since("t", v1)
+    assert v == wh._current_version("t")
+    assert sorted(r.k for r in df.collect()) == [2]
+    assert sorted(r.k for r in wh.appended_since("t", 0)[0].collect()) == [
+        1, 2]
+    assert wh.appended_since("t", v) == (None, v)
+    wh.delete_where("t", [("k", "==", 1)])
+    with pytest.raises(ValueError, match="replaced files"):
+        wh.appended_since("t", v)
+    with pytest.raises(ValueError, match="not on the committed chain"):
+        wh.appended_since("t", v + 10)

@@ -178,13 +178,14 @@ def test_manifest_read_submits_no_job(spark, tmp_path, monkeypatch):
 
 def test_noop_tick_job_count(spark, tmp_path):
     """Structural gate: a scheduler tick that finds nothing new on a small
-    manifest warehouse submits exactly 13 jobs: 1 for the ``isEmpty``
-    probe of unprocessed bronze rows and 12 for the quality step (its
-    one-pass aggregate, the orphan check's dimension broadcasts and the
-    ``quality_log`` append). Reads, KPI view registration and the summary
-    counts submit none. With schema inference on every read, per-check
-    quality plans and counted summaries, the same tick submitted 58, and
-    more on every later tick as snapshot groups accumulated."""
+    manifest warehouse submits exactly 12 jobs, all for the quality step
+    (its one-pass aggregate, the orphan check's dimension broadcasts and
+    the ``quality_log`` append). Finding no bronze file appended since
+    the watermark, reads, KPI view registration and the summary counts
+    submit none. With schema inference on every read, per-check quality
+    plans and counted summaries, the same tick submitted 58, and more on
+    every later tick as snapshot groups accumulated; with an ``isEmpty``
+    probe of the unprocessed bronze rows it submitted 13."""
     whdir = str(tmp_path / "wh")
     pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
         ["--source", "csv", "--generate-sample", "--sample-rows", "60",
@@ -192,7 +193,7 @@ def test_noop_tick_job_count(spark, tmp_path):
     noop = pipeline.parse_args(["--skip-ingest", "--manifest"])
     j0 = _jobs(spark)
     res = pipeline.run_pipeline(spark, whdir, noop)
-    assert _jobs(spark) - j0 == 13
+    assert _jobs(spark) - j0 == 12
     assert res["load"] == {"staged": 0}
     assert res["summary"]["fact_events"] == 60
 
@@ -215,14 +216,15 @@ def _stream_events(spark, lo, hi):
 def test_load_tick_job_count(spark, tmp_path):
     """Structural gate: a load tick whose batch adds no dimension member
     (20 new events on a 60-event manifest warehouse) submits exactly 5
-    jobs to land the batch and 30 to run the pipeline: 1 for the
-    ``isEmpty`` probe, 4 for the one aggregate over the staged batch
-    (watermark, size, touched fact buckets and the dimension probe), 13
-    for the fact upsert's write and 12 for the quality step. No dimension
-    is rewritten. The upsert is one full outer join, with its
-    surrogate-key base from the manifest. Before, the same tick submitted
-    11 and 77: two counts while landing, four dimension overwrites, a
-    three-join upsert, a bucket collect and a max(event_sk) aggregate."""
+    jobs to land the batch and 29 to run the pipeline: 4 for the one
+    aggregate over the staged batch (size, touched fact buckets and the
+    dimension probe), 13 for the fact upsert's write and 12 for the
+    quality step. No dimension is rewritten. The upsert is one full
+    outer join, with its surrogate-key base from the manifest. Before,
+    the same tick submitted 11 and 77: two counts while landing, four
+    dimension overwrites, a three-join upsert, a bucket collect and a
+    max(event_sk) aggregate; then 5 and 30, with an ``isEmpty`` probe of
+    the unprocessed bronze rows."""
     whdir = str(tmp_path / "wh")
     wh = Warehouse(spark, whdir)
     args = pipeline.parse_args(["--skip-ingest", "--manifest"])
@@ -239,7 +241,49 @@ def test_load_tick_job_count(spark, tmp_path):
     assert res["load"] == {"staged": 20}
     assert res["summary"]["fact_events"] == 80
     assert {t: wh._current_version(t) for t in versions} == versions
-    assert (j1 - j0, j2 - j1) == (5, 30)
+    assert (j1 - j0, j2 - j1) == (5, 29)
+
+
+def test_load_reads_rows_committed_out_of_ingested_at_order(spark, tmp_path):
+    """Bronze rows become visible in commit order, and a lander stamps
+    ingested_at before it commits: a batch stamped earlier than one
+    already loaded is still loaded."""
+    from datetime import datetime
+
+    whdir = str(tmp_path / "wh")
+    wh = Warehouse(spark, whdir)
+    args = pipeline.parse_args(["--skip-ingest"])
+    bronze.land_batch(wh, _stream_events(spark, 0, 20), source="stream",
+                      ingested_at=datetime(2025, 1, 2))
+    pipeline.run_pipeline(spark, whdir, args)
+    bronze.land_batch(wh, _stream_events(spark, 20, 40), source="stream",
+                      ingested_at=datetime(2025, 1, 1))
+    res = pipeline.run_pipeline(spark, whdir, args)
+    assert res["load"] == {"staged": 20}
+    assert res["summary"]["raw_events"] == 40
+    assert res["summary"]["fact_events"] == 40
+
+
+def test_load_resumes_once_from_an_ingested_at_watermark(spark, tmp_path):
+    """A warehouse whose watermark is still an ingested_at timestamp loads
+    the rows past it once, then continues from the bronze version."""
+    from datetime import datetime
+
+    whdir = str(tmp_path / "wh")
+    wh = Warehouse(spark, whdir)
+    args = pipeline.parse_args(["--skip-ingest"])
+    for lo, day in ((0, 1), (20, 3)):
+        bronze.land_batch(wh, _stream_events(spark, lo, lo + 20),
+                          source="stream", ingested_at=datetime(2025, 1, day))
+    wh.set_watermark(pipeline.WATERMARK, "2025-01-02 00:00:00")
+    assert pipeline.run_pipeline(spark, whdir, args)["load"] == {"staged": 20}
+    assert wh.get_watermark(pipeline.WATERMARK) == wh._current_version(
+        bronze.RAW_TABLE)
+    bronze.land_batch(wh, _stream_events(spark, 40, 50), source="stream",
+                      ingested_at=datetime(2025, 1, 1))
+    res = pipeline.run_pipeline(spark, whdir, args)
+    assert res["load"] == {"staged": 10}
+    assert res["summary"]["fact_events"] == 30
 
 
 def test_summary_counts_from_manifest_match_count(spark, tmp_path):

@@ -5,8 +5,9 @@
 - Every file-replacing operation leaves a manifest whose stats cover
   exactly its live files and whose deletion vectors each still cover a
   live file, with the image the operation promises.
-- Only ``Warehouse._commit`` and the metadata-only commits publish a
-  manifest themselves.
+- Only ``Warehouse._commit`` and the commits that reuse another
+  version's metadata publish a manifest themselves.
+- The streaming jobs use the warehouse through its public methods only.
 """
 
 from __future__ import annotations
@@ -96,6 +97,14 @@ def test_maintenance_rewrite_detects_racing_append(
 _DELETED = (1, 2, 25, 26)
 
 
+def _plain_table(spark, wh, partitioned):
+    """40 rows in two snapshots, no vectors."""
+    wh.overwrite("t", _rows(spark, range(20)).repartition(2),
+                 "p" if partitioned else None)
+    wh.append("t", _rows(spark, range(20, 40)).repartition(2))
+    return {(k, k % 4, 10 * k) for k in range(40)}
+
+
 def _dv_table(spark, wh, partitioned):
     """40 rows in two snapshots, four of them deleted by a vector."""
     wh.overwrite("t", _rows(spark, range(20)).repartition(2),
@@ -126,8 +135,18 @@ def _legacy_listing_table(spark, wh, partitioned):
     return {(k, k % 4, 10 * k) for k in range(20) if k not in (11, 12)}
 
 
+def _delete_dv(spark, wh):
+    wh.delete_where("t", [("k", "in", [5, 30])], mode="dv")
+
+
+def _after_delete_dv(rows):
+    return {r for r in rows if r[0] not in (5, 30)}
+
+
 _CASES = {
     # name: (partitioned, operation, expected image from the seeded one)
+    "delete_dv_first": (True, _delete_dv, _after_delete_dv),
+    "delete_dv_again": (True, _delete_dv, _after_delete_dv),
     "append": (
         True,
         lambda spark, wh: wh.append("t", _rows(spark, range(100, 104))),
@@ -192,7 +211,8 @@ def test_file_replacing_write_keeps_manifest_invariants(
 ):
     partitioned, op, expect = _CASES[name]
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    seed = _legacy_listing_table if name == "adoption" else _dv_table
+    seed = {"adoption": _legacy_listing_table,
+            "delete_dv_first": _plain_table}.get(name, _dv_table)
     rows = seed(spark, wh, partitioned)
     op(spark, wh)
 
@@ -207,11 +227,9 @@ def test_file_replacing_write_keeps_manifest_invariants(
 
 # -- one publish path --------------------------------------------------------
 
-# The commit of every file-replacing write, and the metadata-only commits
-# (deletion-vector deletes, clone, restore, schema evolution), which
-# reference existing files and so have no snapshot to commit.
-_PUBLISHERS = {"_commit", "delete_where", "clone", "restore",
-               "evolve_schema"}
+# The commit of every write, and the commits that reuse another version's
+# files, stats and vectors as they stand (clone, restore, schema evolution).
+_PUBLISHERS = {"_commit", "clone", "restore", "evolve_schema"}
 
 
 def test_only_commit_and_metadata_commits_publish():
@@ -230,3 +248,17 @@ def test_only_commit_and_metadata_commits_publish():
         "a write publishes outside Warehouse._commit: "
         f"{sorted(set(calls) - _PUBLISHERS)}")
     assert all(n == 1 for n in calls.values()), calls
+
+
+def test_streaming_jobs_read_no_private_warehouse_attribute():
+    from _event_intelligence_data_warehouse_spark.streaming import jobs
+
+    with open(jobs.__file__) as f:
+        tree = ast.parse(f.read())
+    private = sorted(
+        f"line {node.lineno}: wh.{node.attr}" for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name) and node.value.id == "wh"
+        and node.attr.startswith("_")
+    )
+    assert not private, private
