@@ -8,7 +8,7 @@ is canonical.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from _event_intelligence_data_warehouse_spark.functions.keys import (
@@ -22,6 +22,7 @@ from _event_intelligence_data_warehouse_spark.operators.upsert import (
     dedup_keys,
     merge_upsert,
 )
+from _event_intelligence_data_warehouse_spark.plans import quality
 
 
 def build_fact_rows(
@@ -175,8 +176,10 @@ def upsert_facts_partitioned(
     to a max aggregate that scans the event_sk column of every live
     file. ``bulk`` is passed to :func:`upsert_facts`: a
     caller that knows an upper bound on the batch's new keys saves the
-    surrogate-key size probe. Returns the affected bucket ids, sorted
-    (for observability/tests)."""
+    surrogate-key size probe. The write observes each affected bucket's
+    rows and rows with a NULL foreign key, and its commit records them
+    for the quality step's orphan check (``plans/quality.py``). Returns
+    the affected bucket ids, sorted (for observability/tests)."""
     from _event_intelligence_data_warehouse_spark import schemas
 
     affected = sorted(buckets)
@@ -192,5 +195,11 @@ def upsert_facts_partitioned(
     merged = upsert_facts(
         existing_aff, incoming, sk_source=sk_src, bulk=bulk
     ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))
-    wh.overwrite_partitions(table, merged, FACT_PART_COL)
+    obs = Observation()
+    merged = merged.observe(
+        obs, *quality.bucket_counters(F.col(FACT_PART_COL), affected)
+    )
+    counters = {quality.COUNTERS: lambda: quality.bucket_state(obs.get, affected)}
+    with wh.commit_metadata(**counters):
+        wh.overwrite_partitions(table, merged, FACT_PART_COL)
     return affected

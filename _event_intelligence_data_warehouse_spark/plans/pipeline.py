@@ -13,6 +13,10 @@ design:
   a row that a slower lander stamped earlier but committed later.
 - Each SQL script step is a DataFrame program; one fact-load path with the
   canonical key (SURVEY.md §0.2).
+- The quality step logs the same whole-table checks without reading a
+  table: the landing, the fact upsert and the dimension update record
+  counters in their commits, and the step folds the commits made since
+  its last run (``plans/quality.py``).
 """
 
 from __future__ import annotations
@@ -134,9 +138,11 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     ).first()
 
     # Only those dimensions are rebuilt and rewritten; the fact build
-    # reads them back and reuses the unchanged images.
+    # reads them back and reuses the unchanged images. An update keeps
+    # every key it had, which its commit records for the orphan check.
     for name in sorted(set(added) | (dims.keys() - present.keys())):
-        wh.overwrite(name, DIM_UPDATES[name](dims[name], stg, now))
+        with wh.commit_metadata(**{quality_mod.COUNTERS: quality_mod.KEYS_KEPT}):
+            wh.overwrite(name, DIM_UPDATES[name](dims[name], stg, now))
         dims[name] = wh.read(name)
 
     fact_rows = facts_mod.build_fact_rows(
@@ -159,20 +165,50 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
 
 
 def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
-    raw = wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS)
-    out = quality_mod.run_raw_checks_one_pass(raw, run_id).unionByName(
-        quality_mod.check_orphan_fact_records(
-            wh.read("fact_events", schemas.FACT_EVENTS),
-            wh.read("dim_date", schemas.DIM_DATE),
-            wh.read("dim_venue", schemas.DIM_VENUE),
-            wh.read("dim_category", schemas.DIM_CATEGORY),
-            wh.read("dim_source", schemas.DIM_SOURCE),
-            run_id,
-        )
-    )
-    out = out.select([f.name for f in schemas.QUALITY_LOG.fields])
-    wh.append(bronze.QUALITY_LOG_TABLE, out)
+    """Append the five check rows to ``quality_log``. The counters come
+    from the state in the last ``quality_log`` commit, advanced over the
+    bronze, fact and dimension commits made since, so the append is the
+    step's one Spark job. A commit without counters (another writer, a
+    vector delete, a compaction, a warehouse written before counters)
+    recounts in full; the recount is kept as state only when the fold
+    may go on from it."""
+    last = wh.last_commit(bronze.QUALITY_LOG_TABLE)
+    prior = (quality_mod.empty_state() if last["version"] == 0
+             else (last["meta"] or {}).get(quality_mod.STATE))
+    state = None
+    if prior is not None:
+        try:
+            state = quality_mod.fold(prior, {
+                t: wh.commits_since(t, v) for t, v in prior["versions"].items()
+            })
+        except (ValueError, FileNotFoundError):  # covered version gone
+            pass
+    keep = state is not None
+    if state is None:
+        state, keep = _recount_quality(wh)
+    out = quality_mod.state_rows(spark, state, run_id)
+    with wh.commit_metadata(**{quality_mod.STATE: state if keep else None}):
+        wh.append(bronze.QUALITY_LOG_TABLE,
+                  out.select([f.name for f in schemas.QUALITY_LOG.fields]))
     return wh.read(bronze.QUALITY_LOG_TABLE)
+
+
+def _recount_quality(wh: Warehouse) -> tuple[dict, bool]:
+    """The quality state from full scans, and whether to keep it: not
+    when a table moved while it was read."""
+    versions = {t: wh.last_commit(t)["version"] for t in quality_mod.TABLES}
+    fact = wh.read("fact_events", schemas.FACT_EVENTS)
+    state, keep = quality_mod.full_state(
+        wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS),
+        fact,
+        *(wh.read(t, GOLD[t]) for t in quality_mod.DIM_TABLES),
+        bucket=(F.col(facts_mod.FACT_PART_COL)
+                if facts_mod.FACT_PART_COL in fact.columns
+                else facts_mod.fact_bucket()),
+        versions=versions,
+    )
+    moved = any(wh.last_commit(t)["version"] != v for t, v in versions.items())
+    return state, keep and not moved
 
 
 def step_kpis(wh: Warehouse, spark: SparkSession) -> dict[str, DataFrame]:

@@ -2,9 +2,10 @@
 
 Reference parity: ``scripts/scheduler.py:54-57`` schedules a daily full
 pipeline run at 06:00 and an hourly quality-only run (the CLI's
-``--skip-ingest`` path, which with watermark incrementality reduces to a
-metadata-probe no-op when no new data landed — see
-tests/test_scheduler.py).
+``--skip-ingest`` path). When no new data landed, the load finds nothing
+past its watermark and the quality step folds no new counters, so the
+run submits one Spark job, the ``quality_log`` append (see
+tests/test_scheduler.py and tests/test_metadata_path.py).
 
 Stdlib-only (the ``schedule`` library is not available here) and
 in-process: runs reuse one SparkSession instead of paying a JVM boot per

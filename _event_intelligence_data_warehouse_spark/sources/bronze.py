@@ -19,6 +19,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from _event_intelligence_data_warehouse_spark import schemas
+from _event_intelligence_data_warehouse_spark.plans import quality
 from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
 RAW_TABLE = "raw_events"
@@ -38,7 +39,12 @@ def land_batch(
     ingested_at: datetime | None = None,
 ) -> dict:
     """Append a CSV-contract batch to bronze, dedup-on-write; returns run
-    stats and writes the ingestion_log rows (running -> success/failed)."""
+    stats and writes the ingestion_log rows (running -> success/failed).
+
+    The append's commit records the counters of quality checks 1-4 over
+    the rows it lands, and the bronze version its anti-join read, so the
+    quality step folds them in without rescanning bronze
+    (``plans/quality.py``)."""
     run_id = run_id or str(uuid.uuid4())
     ingested_at = ingested_at or datetime.now(timezone.utc).replace(tzinfo=None)
     spark = batch.sparkSession
@@ -51,8 +57,8 @@ def land_batch(
         for src, dst in _CSV_TO_RAW.items():
             if src in rows.columns:
                 rows = rows.withColumnRenamed(src, dst)
-        # Both run counts ride the landing write as observed metrics
-        # instead of two count() actions over the batch.
+        # Both run counts and the quality counters ride the landing
+        # write as observed metrics instead of actions over the batch.
         fetched_obs, loaded_obs = Observation(), Observation()
         rows = rows.observe(fetched_obs, F.count(F.lit(1)).alias("n"))
 
@@ -75,6 +81,9 @@ def land_batch(
         # Dedup-on-write: drop in-batch duplicates (keep first by id), then
         # anti-join the already-landed (source, raw_event_id) keys.
         landed = landed.dropDuplicates(["source", "raw_event_id"])
+        # read before the keys: a commit in between shows as a parent
+        # other than this version
+        read = wh.last_commit(RAW_TABLE)["version"]
         existing = wh.read(RAW_TABLE, schemas.RAW_EVENTS).select(
             "source", "raw_event_id"
         )
@@ -87,9 +96,14 @@ def land_batch(
         fresh = fresh.withColumn(
             "ingest_id", F.xxhash64(F.col("source"), F.col("raw_event_id"))
         )
-        fresh = fresh.observe(loaded_obs, F.count(F.lit(1)).alias("n"))
-        wh.append(RAW_TABLE, fresh.select([f.name for f in schemas.RAW_EVENTS.fields]))
-        fetched, loaded = fetched_obs.get["n"], loaded_obs.get["n"]
+        fresh = fresh.observe(
+            loaded_obs, *quality.raw_counters(), quality.null_id_sources()
+        )
+        counters = {quality.COUNTERS: lambda: {"read": read, **loaded_obs.get}}
+        with wh.commit_metadata(**counters):
+            wh.append(RAW_TABLE,
+                      fresh.select([f.name for f in schemas.RAW_EVENTS.fields]))
+        fetched, loaded = fetched_obs.get["n"], loaded_obs.get["checked"]
 
         finished_at = datetime.now(timezone.utc).replace(tzinfo=None)
         _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,

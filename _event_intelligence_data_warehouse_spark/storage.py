@@ -479,6 +479,10 @@ class Warehouse:
         silently drop the interleaved writer's files. Full
         ``overwrite`` intentionally omits it (replace-everything is
         last-writer-wins by definition)."""
+        # callables staged by commit_metadata resolve now, after the
+        # write's jobs ran and before anything is published
+        meta = {k: v() if callable(v) else v
+                for k, v in (self._commit_meta or {}).items()}
         os.makedirs(self._mdir(table), exist_ok=True)
         base_v = self._current_version(table)
         if expect_version is not None and base_v != expect_version:
@@ -515,7 +519,7 @@ class Warehouse:
                 schema_ops = None
         manifest = {
             "version": v,
-            **({"meta": self._commit_meta} if self._commit_meta else {}),
+            **({"meta": meta} if meta else {}),
             # committed-chain lineage: orphan manifests from crashed
             # writers occupy version numbers but are never anyone's
             # parent, so history()/time travel walk parent links and
@@ -572,6 +576,10 @@ class Warehouse:
 
             with wh.commit_metadata(inputs={"documents": 7}, run="r42"):
                 wh.overwrite("curated", df)
+
+        A callable value is called when the manifest is published, after
+        the write's jobs have run: values observed during the write
+        (``DataFrame.observe``) enter the same commit as its rows.
         """
         import contextlib
 
@@ -1309,27 +1317,55 @@ class Warehouse:
         hold rows already read, and reading them again would load those
         rows twice."""
         m = self._adopt_if_legacy(table)
-        cur = m
-        while version and cur["version"] != version:
-            if not cur.get("parent") or cur["version"] < version:
-                raise ValueError(
-                    f"table {table!r}: version {version} is not on the "
-                    "committed chain"
-                )
-            prev = self._manifest(table, cur["parent"])
-            if not set(prev["files"]) <= set(cur["files"]):
-                raise ValueError(
-                    f"table {table!r}: version {cur['version']} "
-                    f"({cur.get('operation')}) replaced files after "
-                    f"version {version}"
-                )
-            cur = prev
-        old = set(cur["files"]) if version else set()
+        old = set()
+        if version:
+            chain = self._chain_since(table, m, version)
+            for prev, cur in zip(chain, chain[1:]):
+                if not set(prev["files"]) <= set(cur["files"]):
+                    raise ValueError(
+                        f"table {table!r}: version {cur['version']} "
+                        f"({cur.get('operation')}) replaced files after "
+                        f"version {version}"
+                    )
+            old = set(chain[0]["files"])
         new = [f for f in m["files"] if f not in old]
         stats = m.get("stats", {})
         if all(stats.get(f, {}).get(self._ROWS_KEY) == 0 for f in new):
             return None, m["version"]
         return self._read_files_dv(table, m, new), m["version"]
+
+    def commits_since(self, table: str, version: int) -> list[dict]:
+        """The commits after ``version`` up to CURRENT, oldest first, as
+        ``{"version", "parent", "operation", "meta"}`` rows: what an
+        incremental reader folds in since the version it last covered.
+        ``version=0`` means since the table was created. Raises as
+        :meth:`appended_since` does when ``version`` is off the committed
+        chain or a manifest back to it has expired."""
+        chain = self._chain_since(table, self._adopt_if_legacy(table), version)
+        return [self._commit_row(m) for m in chain[1:]]
+
+    def last_commit(self, table: str) -> dict:
+        """The CURRENT commit as a :meth:`commits_since` row; version 0
+        when the table has none."""
+        return self._commit_row(self._adopt_if_legacy(table))
+
+    @staticmethod
+    def _commit_row(m: dict) -> dict:
+        return {k: m.get(k) for k in ("version", "parent", "operation", "meta")}
+
+    def _chain_since(self, table: str, head: dict, version: int) -> list[dict]:
+        """The committed manifests from ``version`` (version 0: the empty
+        table) up to ``head``, oldest first, by parent links."""
+        chain = [head]
+        while chain[-1]["version"] != version:
+            cur = chain[-1]
+            if cur["version"] < version or cur.get("parent") is None:
+                raise ValueError(
+                    f"table {table!r}: version {version} is not on the "
+                    "committed chain"
+                )
+            chain.append(self._manifest(table, cur["parent"]))
+        return chain[::-1]
 
     @property
     def _wm_path(self) -> str:

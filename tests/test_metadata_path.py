@@ -176,24 +176,46 @@ def test_manifest_read_submits_no_job(spark, tmp_path, monkeypatch):
     assert _jobs(spark) - j0 >= len(groups)
 
 
-def test_noop_tick_job_count(spark, tmp_path):
+def _step_jobs(spark, monkeypatch) -> dict[str, int]:
+    """Jobs of each pipeline step in the runs that follow, by step: the
+    transform-and-load, the quality step, and the KPIs plus summary."""
+    jobs = {}
+    for step, key in (("step_transform_and_load", "load"),
+                      ("step_quality", "quality"),
+                      ("step_kpis", "kpis"), ("summary", "kpis")):
+        def counted(*args, _real=getattr(pipeline, step), _key=key,
+                    **kwargs):
+            j0 = _jobs(spark)
+            try:
+                return _real(*args, **kwargs)
+            finally:
+                jobs[_key] = jobs.get(_key, 0) + _jobs(spark) - j0
+        monkeypatch.setattr(pipeline, step, counted)
+    return jobs
+
+
+def test_noop_tick_job_count(spark, tmp_path, monkeypatch):
     """Structural gate: a scheduler tick that finds nothing new on a small
-    manifest warehouse submits exactly 12 jobs, all for the quality step
-    (its one-pass aggregate, the orphan check's dimension broadcasts and
-    the ``quality_log`` append). Finding no bronze file appended since
-    the watermark, reads, KPI view registration and the summary counts
-    submit none. With schema inference on every read, per-check quality
-    plans and counted summaries, the same tick submitted 58, and more on
-    every later tick as snapshot groups accumulated; with an ``isEmpty``
-    probe of the unprocessed bronze rows it submitted 13."""
+    manifest warehouse submits exactly 1 job, the quality step's
+    ``quality_log`` append: the five checks fold the counters of the
+    commits since the last run, and there are none. Finding no bronze
+    file appended since the watermark, reads, KPI view registration and
+    the summary counts submit none. With schema inference on every read,
+    per-check quality plans and counted summaries, the same tick
+    submitted 58, and more on every later tick as snapshot groups
+    accumulated; with an ``isEmpty`` probe of the unprocessed bronze rows
+    it submitted 13; with the quality checks rescanning bronze and the
+    fact table joined to four dimensions, 12."""
     whdir = str(tmp_path / "wh")
     pipeline.run_pipeline(spark, whdir, pipeline.parse_args(
         ["--source", "csv", "--generate-sample", "--sample-rows", "60",
          "--manifest"]))
     noop = pipeline.parse_args(["--skip-ingest", "--manifest"])
+    steps = _step_jobs(spark, monkeypatch)
     j0 = _jobs(spark)
     res = pipeline.run_pipeline(spark, whdir, noop)
-    assert _jobs(spark) - j0 == 12
+    assert _jobs(spark) - j0 == 1
+    assert steps == {"load": 0, "quality": 1, "kpis": 0}
     assert res["load"] == {"staged": 0}
     assert res["summary"]["fact_events"] == 60
 
@@ -213,18 +235,21 @@ def _stream_events(spark, lo, hi):
     ))
 
 
-def test_load_tick_job_count(spark, tmp_path):
+def test_load_tick_job_count(spark, tmp_path, monkeypatch):
     """Structural gate: a load tick whose batch adds no dimension member
     (20 new events on a 60-event manifest warehouse) submits exactly 5
-    jobs to land the batch and 29 to run the pipeline: 4 for the one
-    aggregate over the staged batch (size, touched fact buckets and the
-    dimension probe), 13 for the fact upsert's write and 12 for the
-    quality step. No dimension is rewritten. The upsert is one full
-    outer join, with its surrogate-key base from the manifest. Before,
-    the same tick submitted 11 and 77: two counts while landing, four
-    dimension overwrites, a three-join upsert, a bucket collect and a
-    max(event_sk) aggregate; then 5 and 30, with an ``isEmpty`` probe of
-    the unprocessed bronze rows."""
+    jobs to land the batch and 18 to run the pipeline: 17 to transform
+    and load (4 for the one aggregate over the staged batch: size,
+    touched fact buckets and the dimension probe; 13 for the fact
+    upsert's write) and 1 for the quality step's ``quality_log`` append,
+    which folds the counters the landing and the upsert observed. KPIs
+    and the summary submit none. No dimension is rewritten. The upsert
+    is one full outer join, with its surrogate-key base from the
+    manifest. Before, the same tick submitted 11 and 77: two counts while
+    landing, four dimension overwrites, a three-join upsert, a bucket
+    collect and a max(event_sk) aggregate; then 5 and 30, with an
+    ``isEmpty`` probe of the unprocessed bronze rows; then 5 and 29, with
+    12 jobs of quality checks rescanning bronze and the fact table."""
     whdir = str(tmp_path / "wh")
     wh = Warehouse(spark, whdir)
     args = pipeline.parse_args(["--skip-ingest", "--manifest"])
@@ -233,6 +258,7 @@ def test_load_tick_job_count(spark, tmp_path):
     versions = {t: wh._current_version(t)
                 for t in ("dim_date", "dim_venue", "dim_category",
                           "dim_source")}
+    steps = _step_jobs(spark, monkeypatch)
     j0 = _jobs(spark)
     bronze.land_batch(wh, _stream_events(spark, 60, 80), source="stream")
     j1 = _jobs(spark)
@@ -241,7 +267,36 @@ def test_load_tick_job_count(spark, tmp_path):
     assert res["load"] == {"staged": 20}
     assert res["summary"]["fact_events"] == 80
     assert {t: wh._current_version(t) for t in versions} == versions
-    assert (j1 - j0, j2 - j1) == (5, 29)
+    assert (j1 - j0, j2 - j1) == (5, 18)
+    assert steps == {"load": 17, "quality": 1, "kpis": 0}
+
+
+def test_cold_load_job_count(spark, tmp_path, monkeypatch):
+    """Structural gate: the first land of 60 events into a fresh warehouse
+    submits exactly 5 jobs, and the first ``run_pipeline`` creates the
+    four dimensions and the fact table in 41 to 44 jobs, then folds the
+    quality checks from the empty state in exactly 1 (every commit
+    carries counters); KPIs and the summary submit none. The creating
+    writes' count is not exact: adaptive execution plans the
+    ``dim_venue`` write in 10 to 12 jobs and the fact write in 10 or 11,
+    by which of their stages finish first, at the parent commit too. The
+    bound allows one job over the highest count seen. With the quality
+    checks rescanning bronze and the fact table, the run submitted 53 to
+    55 (12 of them quality)."""
+    whdir = str(tmp_path / "wh")
+    wh = Warehouse(spark, whdir)
+    steps = _step_jobs(spark, monkeypatch)
+    j0 = _jobs(spark)
+    bronze.land_batch(wh, _stream_events(spark, 0, 60), source="stream")
+    j1 = _jobs(spark)
+    res = pipeline.run_pipeline(
+        spark, whdir, pipeline.parse_args(["--skip-ingest"]))
+    j2 = _jobs(spark)
+    assert res["summary"]["fact_events"] == 60
+    assert j1 - j0 == 5
+    assert (steps["quality"], steps["kpis"]) == (1, 0)
+    assert steps["load"] <= 45
+    assert j2 - j1 == steps["load"] + 1
 
 
 def test_load_reads_rows_committed_out_of_ingested_at_order(spark, tmp_path):
