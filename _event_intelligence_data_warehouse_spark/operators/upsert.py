@@ -11,11 +11,13 @@ Spark has no in-place mutation, so:
 
 Scale notes: ``merge_upsert`` is one full outer join on the key, so
 both sides shuffle once. It rewrites whatever image it is given: the fact
-load hands it only the hash buckets its batch touches
-(``plans/facts.upsert_facts_partitioned``), so the rewrite tracks the
-touched buckets, not the table. With few buckets a small batch still
-touches all of them; behind Delta/Iceberg the same plan becomes a MERGE
-with file-level pruning, and the operator's interface doesn't change.
+load (``plans/facts.upsert_facts_partitioned``) first probes which batch
+keys already exist and hands it only the hash buckets that hold one, so
+a batch of new keys meets an empty image, the join drops out of the
+plan, and its rows are appended. The rewrite tracks the batch's updates,
+not the buckets it touches; behind Delta/Iceberg the same plan becomes a
+MERGE with file-level pruning, and the operator's interface doesn't
+change.
 """
 
 from __future__ import annotations

@@ -123,17 +123,19 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     now = F.current_timestamp()
     dims = {name: wh.read(name, GOLD[name]) for name in DIM_UPDATES}
     present = {name: dims[name] for name in dims if wh.exists(name)}
-    # One pass over the cached batch: the batch size, the fact buckets
-    # its keys fall in and the dimensions it adds members to (a table
-    # that does not exist yet is always written, even if empty). New
-    # fact keys never outnumber staged rows, so the size also picks the
-    # surrogate-key regime without a probe job on the join result.
+    # One pass over the cached batch: the batch size, the fact keys and
+    # the buckets they fall in, and the dimensions it adds members to (a
+    # table that does not exist yet is always written, even if empty).
+    # New fact keys never outnumber staged rows, so the size also picks
+    # the surrogate-key regime without a probe job on the join result.
+    nk = event_nk("source", "raw_event_id")
     rows = dims_mod.with_new_members(stg, present, {
-        "_bucket": facts_mod.fact_bucket(event_nk("source", "raw_event_id")),
+        "_bucket": facts_mod.fact_bucket(nk), "_nk": nk,
     })
-    staged, buckets, added = rows.agg(
+    staged, buckets, keys, added = rows.agg(
         F.count("_bucket"),  # a staged row's own row has a bucket
         F.collect_set("_bucket"),
+        F.collect_set("_nk"),
         F.collect_set("dim"),
     ).first()
 
@@ -154,11 +156,12 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
         loaded_at=now,
     ).select([f.name for f in schemas.FACT_EVENTS.fields if f.name != "event_sk"]
              + ["_ingest_id"])
-    # Partition-pruned upsert: only the hash buckets containing this
-    # batch's keys are read and rewritten (storage.overwrite_partitions) —
-    # at 100 TB the merge cost tracks the increment, not the table.
+    # Batch-sized upsert: the batch's new keys are appended to their hash
+    # buckets, and only a bucket that holds an updated key (or reached
+    # the file bound) is read and rewritten — at 100 TB the write cost
+    # tracks the increment, not the table.
     facts_mod.upsert_facts_partitioned(
-        wh, fact_rows, buckets=buckets,
+        wh, fact_rows, buckets=buckets, keys=keys,
         bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
     )
     return {"staged": staged}

@@ -15,11 +15,11 @@ The checks are whole-table counts, and two paths give them:
   counters in its own commit's metadata (``COUNTERS``), at no extra job.
   ``bronze.land_batch`` observes :func:`raw_counters` over the rows it
   lands; the fact upsert observes :func:`bucket_counters` for each bucket
-  it rewrites; the pipeline's dimension update records ``KEYS_KEPT``.
-  The quality step keeps the running counters as state in its own
-  ``quality_log`` commit (``STATE``) and adds the commits made since
-  (:func:`fold`); a commit without counters sends it back to a full
-  recount (:func:`full_state`).
+  it rewrites or appends to; the pipeline's dimension update records
+  ``KEYS_KEPT``. The quality step keeps the running counters as state in
+  its own ``quality_log`` commit (``STATE``) and adds the commits made
+  since (:func:`fold`); a commit without counters sends it back to a
+  full recount (:func:`full_state`).
 
 Both end in :func:`log_rows`, the one place pass rate and status are
 computed.
@@ -114,15 +114,20 @@ def bucket_counters(bucket: Column, buckets: list[int]) -> list[Column]:
     return out
 
 
-def bucket_state(observed: dict, buckets: list[int]) -> dict | None:
+def bucket_state(observed: dict, buckets: list[int],
+                 replaced: list[int]) -> dict | None:
     """The counters of a fact write from its observed
-    :func:`bucket_counters`; None when it wrote rows outside
-    ``buckets``, whose partitions it replaced uncounted."""
+    :func:`bucket_counters`: those of the ``replaced`` buckets, whose
+    rows it rewrote, under ``buckets``, and those of the others, whose
+    rows it added to the files they had, under ``added``. None when it
+    wrote rows outside ``buckets``, which it wrote uncounted."""
     out = {str(b): [observed[f"rows_{b}"], observed[f"orphans_{b}"]]
            for b in buckets}
     if sum(n for n, _o in out.values()) != observed["rows"]:
         return None
-    return {"buckets": out}
+    gone = {str(b) for b in replaced}
+    return {"buckets": {b: c for b, c in out.items() if b in gone},
+            "added": {b: c for b, c in out.items() if b not in gone}}
 
 
 def log_rows(counts: DataFrame, run_id: str) -> DataFrame:
@@ -341,10 +346,11 @@ def fold(state: dict, commits: dict[str, list[dict]]) -> dict | None:
     landing published on top of a version it did not read may have
     landed keys another writer committed in between, so it counts as
     carrying no counters. Check 5 replaces the counters of each bucket a
-    fact upsert rewrote. Its orphans are the rows with a NULL foreign key,
-    which is all of them while no fact row holds a dangling key: the load
-    resolves keys against the current dimensions, and a dimension update
-    that records counters never drops a key."""
+    fact upsert rewrote and adds those of each bucket it appended to. Its
+    orphans are the rows with a NULL foreign key, which is all of them
+    while no fact row holds a dangling key: the load resolves keys
+    against the current dimensions, and a dimension update that records
+    counters never drops a key."""
     raw = dict(state["raw"])
     nulls = set(state["null_id_sources"])
     buckets = dict(state["buckets"])
@@ -364,6 +370,9 @@ def fold(state: dict, commits: dict[str, list[dict]]) -> dict | None:
                 nulls |= landed
             elif table == FACT_TABLE:
                 buckets.update(q["buckets"])
+                for b, (n, o) in q.get("added", {}).items():
+                    n0, o0 = buckets.get(b, (0, 0))
+                    buckets[b] = [n0 + n, o0 + o]
             versions[table] = c["version"]
     return {"versions": versions, "raw": raw,
             "null_id_sources": sorted(nulls), "buckets": buckets}

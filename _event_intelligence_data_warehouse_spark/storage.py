@@ -261,9 +261,16 @@ class Warehouse:
         if bad:
             raise ConstraintViolation(table, bad)
 
-    def append(self, table: str, df: DataFrame) -> None:
+    def append(
+        self, table: str, df: DataFrame, *, version: int | None = None
+    ) -> None:
+        """Add ``df``'s rows as new files. ``version`` is the table
+        version ``df`` was derived from (say, an anti-join against the
+        table's keys): the append then publishes only on top of that
+        version and raises ConcurrentWriteError if another writer
+        committed after it. None appends to whatever is current."""
         self.check_constraints(table, df)
-        m = self._adopt_if_legacy(table)
+        m = self._base(table, version)
         self._rewrite(table, m, [], df, m.get("partition_col"), "append")
 
     def overwrite(
@@ -285,7 +292,8 @@ class Warehouse:
                      schema_ops=[])
 
     def overwrite_partitions(
-        self, table: str, df: DataFrame, partition_col: str
+        self, table: str, df: DataFrame, partition_col: str, *,
+        partitions: list | None = None, version: int | None = None,
     ) -> None:
         """Dynamic partition overwrite: replace ONLY the partitions present
         in ``df``, leave every other partition's files untouched on disk.
@@ -295,13 +303,18 @@ class Warehouse:
         rewrite cost is proportional to the increment, not the table
         (contrast ``overwrite``, which rewrites the full image).
 
+        ``partitions`` names the partition values whose live files the
+        write replaces instead; ``df``'s rows in any other partition are
+        added next to that partition's files. ``version`` is the table
+        version ``df`` was derived from, checked as in :meth:`append`.
+
         The swap is atomic across partitions: the new partitions' files
         land in a fresh snapshot dir, and one manifest publish replaces
         the replaced partitions' entries while keeping every untouched
         partition's — readers resolve the pointer and never observe a mix.
         """
         self.check_constraints(table, df)
-        m = self._adopt_if_legacy(table)
+        m = self._base(table, version)
         bad = [
             f for f in m["files"]
             if self._partition_of(f, partition_col) is None
@@ -313,13 +326,27 @@ class Warehouse:
                 "migrate with overwrite(df, partition_col) first"
             )
         new = self._write_snapshot(table, df, partition_col)
-        touched = {self._partition_of(f, partition_col) for f in new}
+        touched = (
+            {self._partition_of(f, partition_col) for f in new}
+            if partitions is None else {str(p) for p in partitions}
+        )
         kept = [
             f for f in m["files"]
             if self._partition_of(f, partition_col) not in touched
         ]
         self._commit(table, m, kept, new, partition_col,
                      "overwrite_partitions")
+
+    def _base(self, table: str, version: int | None) -> dict:
+        """The current manifest, which a write derived from ``version``
+        must still be at (None: any)."""
+        m = self._adopt_if_legacy(table)
+        if version is not None and m["version"] != version:
+            raise ConcurrentWriteError(
+                f"table {table!r}: derived from version {version} but "
+                f"{m['version']} is now current"
+            )
+        return m
 
     # -- manifest commit protocol ------------------------------------------
     # Layout: <table>/data/s<id>/... immutable snapshot dirs (only ever

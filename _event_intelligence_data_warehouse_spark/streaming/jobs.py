@@ -158,7 +158,8 @@ def stream_facts_from_bronze(
     checkpoint makes each bronze file process exactly once
     (Trigger.AvailableNow = drain-and-exit, cron-able), the upsert makes
     reprocessing idempotent anyway (MERGE on event_nk), and per-batch
-    cost is bounded by the partition-pruned bucket rewrite. Dimensions
+    cost is bounded by the batch: new keys are appended, and only the
+    buckets holding a re-processed key are rewritten. Dimensions
     are read fresh per batch — maintained by the (slower-cadence) batch
     pipeline, the standard split between dim maintenance and fact
     streaming.
@@ -208,12 +209,13 @@ def stream_facts_from_bronze(
             # the upsert share one computation of the build. ``n`` also
             # bounds the batch's new keys, so it picks the surrogate-key
             # regime without the upsert's own size probe, and the same
-            # pass names the fact buckets the upsert rewrites.
-            n, buckets = fact_rows.agg(
-                F.count("*"), F.collect_set(facts_mod.fact_bucket())
+            # pass names the fact keys and buckets the upsert writes.
+            n, buckets, keys = fact_rows.agg(
+                F.count("*"), F.collect_set(facts_mod.fact_bucket()),
+                F.collect_set("event_nk"),
             ).first()
             facts_mod.upsert_facts_partitioned(
-                wh, fact_rows, buckets=buckets,
+                wh, fact_rows, buckets=buckets, keys=keys,
                 bulk=n > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
             )
             cache.release_all()

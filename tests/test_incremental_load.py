@@ -167,8 +167,9 @@ def test_sk_base_from_manifest_matches_aggregate(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     batch = _facts(spark, [(None, f"csv_{i}", "onsale", 1) for i in range(6)],
                    with_sk=False)
-    buckets = batch.agg(F.collect_set(facts_mod.fact_bucket())).first()[0]
-    facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets)
+    buckets, keys = batch.agg(F.collect_set(facts_mod.fact_bucket()),
+                              F.collect_set("event_nk")).first()
+    facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets, keys=keys)
     full = wh.read("fact_events")
     assert facts_mod._sk_base(wh, "fact_events", full) == 6
     wh.delete_where("fact_events", [("event_sk", "==", 6)], mode="dv")

@@ -238,18 +238,22 @@ def _stream_events(spark, lo, hi):
 def test_load_tick_job_count(spark, tmp_path, monkeypatch):
     """Structural gate: a load tick whose batch adds no dimension member
     (20 new events on a 60-event manifest warehouse) submits exactly 5
-    jobs to land the batch and 18 to run the pipeline: 17 to transform
-    and load (4 for the one aggregate over the staged batch: size,
-    touched fact buckets and the dimension probe; 13 for the fact
-    upsert's write) and 1 for the quality step's ``quality_log`` append,
-    which folds the counters the landing and the upsert observed. KPIs
-    and the summary submit none. No dimension is rewritten. The upsert
-    is one full outer join, with its surrogate-key base from the
+    jobs to land the batch and 13 to run the pipeline: 12 to transform
+    and load (4 for the one aggregate over the staged batch: size, fact
+    keys, touched fact buckets and the dimension probe; 1 for the scan
+    that finds none of the keys in the fact table; 7 for the fact write,
+    which appends the new keys: batch dedup, four dimension broadcasts,
+    the surrogate-key window and the write) and 1 for the quality step's
+    ``quality_log`` append, which folds the counters the landing and the
+    upsert observed. KPIs and the summary submit none. No dimension and
+    no fact bucket is rewritten; the surrogate-key base comes from the
     manifest. Before, the same tick submitted 11 and 77: two counts while
     landing, four dimension overwrites, a three-join upsert, a bucket
     collect and a max(event_sk) aggregate; then 5 and 30, with an
     ``isEmpty`` probe of the unprocessed bronze rows; then 5 and 29, with
-    12 jobs of quality checks rescanning bronze and the fact table."""
+    12 jobs of quality checks rescanning bronze and the fact table; then
+    5 and 18, with every touched bucket read, merged in a full outer join
+    and rewritten (13 jobs)."""
     whdir = str(tmp_path / "wh")
     wh = Warehouse(spark, whdir)
     args = pipeline.parse_args(["--skip-ingest", "--manifest"])
@@ -267,8 +271,8 @@ def test_load_tick_job_count(spark, tmp_path, monkeypatch):
     assert res["load"] == {"staged": 20}
     assert res["summary"]["fact_events"] == 80
     assert {t: wh._current_version(t) for t in versions} == versions
-    assert (j1 - j0, j2 - j1) == (5, 18)
-    assert steps == {"load": 17, "quality": 1, "kpis": 0}
+    assert (j1 - j0, j2 - j1) == (5, 13)
+    assert steps == {"load": 12, "quality": 1, "kpis": 0}
 
 
 def test_cold_load_job_count(spark, tmp_path, monkeypatch):

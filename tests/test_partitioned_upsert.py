@@ -1,6 +1,8 @@
 """Partition-pruned fact upsert: result-equality with the full-rewrite
-merge, and the physical property that makes it the 100 TB path — buckets
-not containing incoming keys are neither read nor rewritten."""
+merge, and the physical properties that make it the 100 TB path — buckets
+not containing incoming keys are neither read nor rewritten, buckets that
+receive only new keys are appended to, and a batch's cost does not grow
+with the table."""
 
 from __future__ import annotations
 
@@ -34,10 +36,28 @@ def _fact_batch(spark, ids, *, status="onsale", ts="2026-01-01 00:00:00"):
 
 
 def _upsert(wh, batch):
-    """``upsert_facts_partitioned`` with the batch's buckets computed the
-    way a caller folds them into its own aggregate."""
-    buckets = batch.agg(F.collect_set(facts_mod.fact_bucket())).first()[0]
-    return facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets)
+    """``upsert_facts_partitioned`` with the batch's buckets and keys
+    computed the way a caller folds them into its own aggregate."""
+    buckets, keys = batch.agg(F.collect_set(facts_mod.fact_bucket()),
+                              F.collect_set("event_nk")).first()
+    return facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets,
+                                              keys=keys)
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _data_files(wh, table: str) -> dict[str, bytes]:
+    """Every parquet file under the table's directory -> its bytes."""
+    base = wh.path(table)
+    out = {}
+    for root, _dirs, fs in os.walk(base):
+        for f in fs:
+            if f.endswith(".parquet"):
+                with open(os.path.join(root, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(root, f), base)] = fh.read()
+    return out
 
 
 def _snapshot(wh, table: str) -> dict[str, tuple[str, ...]]:
@@ -101,6 +121,80 @@ def test_untouched_buckets_are_not_rewritten(spark, tmp_path):
     row = (wh.read("fact_events")
            .filter(F.col("event_nk") == "csv_MOCK_00000").first())
     assert row["event_status"] == "cancelled"
+
+
+def test_new_key_buckets_keep_their_files(spark, tmp_path):
+    """A bucket that receives only new keys is appended to: its old files
+    stay live byte-for-byte and new ones join them; every other bucket is
+    untouched."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _upsert(wh, _fact_batch(spark, range(60)))
+    before = _snapshot(wh, "fact_events")
+    content = _data_files(wh, "fact_events")
+
+    touched = _upsert(wh, _fact_batch(spark, [100]))
+    after = _snapshot(wh, "fact_events")
+
+    [part] = [f"{facts_mod.FACT_PART_COL}={b}" for b in touched]
+    assert part in before, "test needs the new key's bucket populated"
+    assert set(before[part]) < set(after[part]), "old files not kept"
+    now = _data_files(wh, "fact_events")
+    for f in before[part]:
+        assert now[f] == content[f]
+    for p, files in before.items():
+        if p != part:
+            assert after[p] == files, f"bucket {p} was rewritten"
+    meta = wh.last_commit("fact_events")["meta"]["quality"]
+    assert meta["buckets"] == {} and list(meta["added"]) == [part.split("=")[1]]
+    row = (wh.read("fact_events")
+           .filter(F.col("event_nk") == "csv_MOCK_00100").first())
+    assert row["event_sk"] == 61
+
+
+def test_batch_write_does_not_grow_with_the_table(spark, tmp_path):
+    """The same 20-key batch of new keys upserted into a 60-row and a
+    600-row fact table submits the same jobs and writes the same fact
+    bytes, within 10%: the write tracks the batch, not the table."""
+    batch = _fact_batch(spark, range(1000, 1020))
+    buckets, keys = batch.agg(F.collect_set(facts_mod.fact_bucket()),
+                              F.collect_set("event_nk")).first()
+    cost = []
+    for n in (60, 600):
+        wh = Warehouse(spark, str(tmp_path / f"wh{n}"))
+        _upsert(wh, _fact_batch(spark, range(n)))
+        before = _data_files(wh, "fact_events")
+        j0 = _jobs(spark)
+        facts_mod.upsert_facts_partitioned(wh, batch, buckets=buckets,
+                                           keys=keys, bulk=False)
+        jobs = _jobs(spark) - j0
+        written = sum(len(b) for f, b in _data_files(wh, "fact_events").items()
+                      if f not in before)
+        assert wh.read("fact_events").count() == n + 20
+        cost.append((jobs, written))
+    (jobs_small, bytes_small), (jobs_big, bytes_big) = cost
+    assert jobs_small == jobs_big
+    assert abs(bytes_big - bytes_small) <= 0.1 * bytes_small
+
+
+def test_files_per_bucket_stay_bounded(spark, tmp_path):
+    """Over 2*K insert-only batches no bucket holds more than K live
+    files (K = ``FACT_BUCKET_MAX_FILES``): a touched bucket at the bound
+    is rewritten into one file instead of gaining another. Keys stay
+    unique and complete."""
+    k = facts_mod.FACT_BUCKET_MAX_FILES
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _upsert(wh, _fact_batch(spark, range(60)))
+    rewrites = 0
+    for t in range(2 * k):
+        lo = 100 + 20 * t
+        _upsert(wh, _fact_batch(spark, range(lo, lo + 20)))
+        files = [p["files"] for p in wh.partition_profile("fact_events")]
+        assert max(files) <= k, (t, files)
+        rewrites += bool(
+            wh.last_commit("fact_events")["meta"]["quality"]["buckets"])
+    assert rewrites > 0, "no batch reached the bound"
+    sks = [r[0] for r in wh.read("fact_events").select("event_sk").collect()]
+    assert len(sks) == len(set(sks)) == 60 + 2 * k * 20
 
 
 def test_pipeline_fact_table_is_bucket_partitioned(spark, tmp_path):
