@@ -133,14 +133,15 @@ def upsert_facts(
 # the leading partition) so one bucket ~ one rewrite unit of a few GB.
 FACT_BUCKETS = 16
 FACT_PART_COL = "p_bucket"
+FACT_TABLE = quality.FACT_TABLE
 
 
-def fact_bucket(nk: Column | str = "event_nk", n: int = FACT_BUCKETS) -> Column:
+def fact_bucket(nk: Column | str = "event_nk") -> Column:
     """Immutable partition bucket for a fact row: xxhash64 of the natural
     key. Re-ingesting a key always lands in its original bucket, so an
     upsert touches exactly the buckets of its incoming keys."""
     nk = F.col(nk) if isinstance(nk, str) else nk
-    return F.pmod(F.xxhash64(nk), F.lit(n)).cast("int")
+    return F.pmod(F.xxhash64(nk), F.lit(FACT_BUCKETS)).cast("int")
 
 
 def _sk_base(wh, table: str, full: DataFrame) -> DataFrame | int:
@@ -192,8 +193,6 @@ def upsert_facts_partitioned(
     *,
     buckets: list[int],
     keys: list[str],
-    table: str = "fact_events",
-    n_buckets: int = FACT_BUCKETS,
     bulk: bool | None = None,
 ) -> list[int]:
     """Partition-pruned fact upsert: the 100 TB path.
@@ -223,21 +222,21 @@ def upsert_facts_partitioned(
     from _event_intelligence_data_warehouse_spark import schemas
 
     affected = sorted(buckets)
-    version = wh.last_commit(table)["version"]
-    if wh.exists(table):
-        replaced = _replaced_buckets(wh, table, affected, keys)
-        full = wh.read(table)
+    version = wh.last_commit(FACT_TABLE)["version"]
+    if wh.exists(FACT_TABLE):
+        replaced = _replaced_buckets(wh, FACT_TABLE, affected, keys)
+        full = wh.read(FACT_TABLE)
         existing = full.filter(
             F.col(FACT_PART_COL).isin(replaced)
         ).drop(FACT_PART_COL)
-        sk_src = _sk_base(wh, table, full)
+        sk_src = _sk_base(wh, FACT_TABLE, full)
     else:
         replaced = []
-        existing = wh.read(table, schemas.FACT_EVENTS)
+        existing = wh.read(FACT_TABLE, schemas.FACT_EVENTS)
         sk_src = 0
     merged = upsert_facts(
         existing, incoming, sk_source=sk_src, bulk=bulk
-    ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))
+    ).withColumn(FACT_PART_COL, fact_bucket())
     if replaced:
         # one file per rewritten bucket, so a rewrite resets its count
         merged = merged.repartition(F.col(FACT_PART_COL))
@@ -248,6 +247,6 @@ def upsert_facts_partitioned(
     counters = {quality.COUNTERS: lambda: quality.bucket_state(
         obs.get, affected, replaced)}
     with wh.commit_metadata(**counters):
-        wh.overwrite_partitions(table, merged, FACT_PART_COL,
+        wh.overwrite_partitions(FACT_TABLE, merged, FACT_PART_COL,
                                 partitions=replaced, version=version)
     return affected

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import uuid
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +40,8 @@ from _event_intelligence_data_warehouse_spark.plans import quality as quality_mo
 from _event_intelligence_data_warehouse_spark.plans.staging import stage_events
 from _event_intelligence_data_warehouse_spark.sources import bronze
 from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+T = TypeVar("T")
 
 # Holds the bronze version the last fact load read through. The name is
 # from when it held an ingested_at timestamp; a warehouse that still
@@ -88,11 +91,12 @@ def step_ingest(wh: Warehouse, args, spark: SparkSession) -> dict:
     raise ValueError(f"unknown source {args.source!r}")
 
 
-def unprocessed_raw(wh: Warehouse) -> tuple[DataFrame | None, int]:
-    """Bronze rows committed after the fact-load watermark, and the bronze
+def unprocessed_raw(wh: Warehouse,
+                    watermark: str) -> tuple[DataFrame | None, int]:
+    """Bronze rows committed after the version in ``watermark``, and the
     version they were read through — the incremental filter
     (transform_events.sql:75 re-expressed). None when there are none."""
-    wm = wh.get_watermark(WATERMARK)
+    wm = wh.get_watermark(watermark)
     raw, version = wh.appended_since(
         bronze.RAW_TABLE, wm if isinstance(wm, int) else 0
     )
@@ -103,20 +107,61 @@ def unprocessed_raw(wh: Warehouse) -> tuple[DataFrame | None, int]:
     return raw, version
 
 
-def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
-    """Staging cleanse + dim maintenance + fact upsert, then advance the
-    watermark to exactly the batch that was loaded (fixes the reference's
-    broken mark-processed — SURVEY.md §0.3)."""
-    raw, version = unprocessed_raw(wh)
+def drain_bronze(
+    wh: Warehouse, watermark: str, load: Callable[[DataFrame], T],
+) -> T | None:
+    """Stage the bronze rows committed after ``watermark``, ``load`` the
+    cached batch, then advance the watermark to exactly the version read
+    (fixes the reference's broken mark-processed — SURVEY.md §0.3).
+    Returns ``load``'s result, or None when nothing new was committed.
+    The read resolves the manifests, so rows a deletion vector hides and
+    unpublished files are never loaded; a failed load leaves the
+    watermark, and the next drain replays the batch. A bronze commit that
+    replaced files raises ValueError (nothing compacts ``raw_events``)."""
+    raw, version = unprocessed_raw(wh, watermark)
     if raw is None:
-        return {"staged": 0}
-    stg = stage_events(raw, only_unprocessed=False).cache()
+        return None
+    stg = stage_events(raw).cache()
     try:
-        out = _load_staged(wh, stg)
+        out = load(stg)
     finally:
         stg.unpersist()
-    wh.set_watermark(WATERMARK, version)
+    wh.set_watermark(watermark, version)
     return out
+
+
+def write_facts(
+    wh: Warehouse, stg: DataFrame, dims: dict[str, DataFrame], *,
+    staged: int, buckets: list[int], keys: list[str],
+) -> None:
+    """Star-join the staged batch against ``dims`` and upsert the fact
+    rows into ``buckets`` by ``keys`` (the batch's). ``staged``, the row
+    count, bounds the new keys, so it picks the surrogate-key regime
+    without a probe job on the join result."""
+    fact_rows = facts_mod.build_fact_rows(
+        stg,
+        dims["dim_date"],
+        dims["dim_venue"],
+        dims["dim_category"],
+        dims["dim_source"],
+        loaded_at=F.current_timestamp(),
+    ).select([f.name for f in schemas.FACT_EVENTS.fields if f.name != "event_sk"]
+             + ["_ingest_id"])
+    # Batch-sized upsert: the batch's new keys are appended to their hash
+    # buckets, and only a bucket that holds an updated key (or reached
+    # the file bound) is read and rewritten — at 100 TB the write cost
+    # tracks the increment, not the table.
+    facts_mod.upsert_facts_partitioned(
+        wh, fact_rows, buckets=buckets, keys=keys,
+        bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
+    )
+
+
+def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
+    """Staging cleanse + dim maintenance + fact upsert over the bronze
+    rows committed since the last load."""
+    out = drain_bronze(wh, WATERMARK, lambda stg: _load_staged(wh, stg))
+    return {"staged": 0} if out is None else out
 
 
 def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
@@ -126,8 +171,6 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     # One pass over the cached batch: the batch size, the fact keys and
     # the buckets they fall in, and the dimensions it adds members to (a
     # table that does not exist yet is always written, even if empty).
-    # New fact keys never outnumber staged rows, so the size also picks
-    # the surrogate-key regime without a probe job on the join result.
     nk = event_nk("source", "raw_event_id")
     rows = dims_mod.with_new_members(stg, present, {
         "_bucket": facts_mod.fact_bucket(nk), "_nk": nk,
@@ -147,23 +190,7 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
             wh.overwrite(name, DIM_UPDATES[name](dims[name], stg, now))
         dims[name] = wh.read(name)
 
-    fact_rows = facts_mod.build_fact_rows(
-        stg,
-        dims["dim_date"],
-        dims["dim_venue"],
-        dims["dim_category"],
-        dims["dim_source"],
-        loaded_at=now,
-    ).select([f.name for f in schemas.FACT_EVENTS.fields if f.name != "event_sk"]
-             + ["_ingest_id"])
-    # Batch-sized upsert: the batch's new keys are appended to their hash
-    # buckets, and only a bucket that holds an updated key (or reached
-    # the file bound) is read and rewritten — at 100 TB the write cost
-    # tracks the increment, not the table.
-    facts_mod.upsert_facts_partitioned(
-        wh, fact_rows, buckets=buckets, keys=keys,
-        bulk=staged > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
-    )
+    write_facts(wh, stg, dims, staged=staged, buckets=buckets, keys=keys)
     return {"staged": staged}
 
 

@@ -3,7 +3,7 @@
 Re-expresses the reference's cleansing view
 (/root/reference/transform/transform_events.sql:53-75) as a lazy DataFrame
 transformation — the Spark analog of a non-materialized view. One output
-row per unprocessed raw row; all casts are NULL-on-malformed.
+row per raw row; all casts are NULL-on-malformed.
 """
 
 from __future__ import annotations
@@ -21,18 +21,13 @@ from _event_intelligence_data_warehouse_spark.functions.cleanse import (
 )
 
 
-def stage_events(raw: DataFrame, *, only_unprocessed: bool = True) -> DataFrame:
-    """transform.stg_events (transform_events.sql:53-75).
-
-    The incremental filter (``WHERE is_processed = FALSE``, :75) is a plain
-    predicate: at scale it rides parquet min/max stats / partition pruning
-    on the watermark column instead of a mutable flag (SURVEY.md §4).
+def stage_events(raw: DataFrame) -> DataFrame:
+    """transform.stg_events (transform_events.sql:53-75), one row per raw
+    row. The incremental filter (``WHERE is_processed = FALSE``, :75) is
+    the bronze-version watermark of ``pipeline.drain_bronze``, which hands
+    in only the rows committed since the last load (SURVEY.md §4).
     """
-    df = raw
-    if only_unprocessed and "is_processed" in df.columns:
-        df = df.filter(~F.coalesce(F.col("is_processed"), F.lit(False)))
-
-    return df.select(
+    return raw.select(
         F.col("ingest_id"),
         F.col("source"),
         F.col("raw_event_id"),

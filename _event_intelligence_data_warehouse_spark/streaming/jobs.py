@@ -1,10 +1,13 @@
 """Structured Streaming wirings (SURVEY.md §7 stretch goal, now core).
 
-``Trigger.AvailableNow`` turns these into incremental batch jobs with a
-checkpoint — the Spark-native replacement for the reference's
-``is_processed`` polling loop (scheduler.py:54-57): each invocation
-processes exactly the files that arrived since the last checkpoint, then
-exits.
+The jobs that read an external input directory are file streams under
+``Trigger.AvailableNow``: incremental batch jobs with a checkpoint — the
+Spark-native replacement for the reference's ``is_processed`` polling
+loop (scheduler.py:54-57). Each invocation processes exactly the files
+that arrived since the last checkpoint, then exits. The bronze -> gold
+fact merge reads a warehouse table instead, so it drains the bronze
+commits made since its watermark through the pipeline's own incremental
+load, never the table's directory.
 """
 
 from __future__ import annotations
@@ -145,102 +148,57 @@ def dedup_event_stream(
     )
 
 
-def stream_facts_from_bronze(
-    spark: SparkSession, wh, checkpoint_dir: str,
-    *, max_files_per_trigger: int = 16,
-) -> None:
-    """Continuous bronze -> gold: watch the bronze landing directory as a
-    file stream and MERGE each micro-batch of raw events into the
-    partitioned fact table via foreachBatch (cleanse -> star join against
-    the CURRENT dimensions -> partition-pruned upsert).
+# Holds the bronze version the last stream fact merge read through.
+STREAM_WATERMARK = "stream_fact_merge.bronze_version"
 
-    This is the streaming deployment of the warehouse load: the
-    checkpoint makes each bronze file process exactly once
-    (Trigger.AvailableNow = drain-and-exit, cron-able), the upsert makes
-    reprocessing idempotent anyway (MERGE on event_nk), and per-batch
-    cost is bounded by the batch: new keys are appended, and only the
-    buckets holding a re-processed key are rewritten. Dimensions
-    are read fresh per batch — maintained by the (slower-cadence) batch
-    pipeline, the standard split between dim maintenance and fact
-    streaming.
 
-    The stream watches the bronze table's snapshot dirs
-    (``raw_events/data/*``), where every append lands. Known limit: it
-    sees a snapshot once its files are written, not once its manifest is
-    published, so the files of an append whose publish failed are
-    loaded too."""
-    from _event_intelligence_data_warehouse_spark import schemas
-    from _event_intelligence_data_warehouse_spark.operators.upsert import (
-        SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
-    )
+def stream_facts_from_bronze(spark: SparkSession, wh) -> None:
+    """Continuous bronze -> gold, cron-able: MERGE the bronze rows
+    committed since the last drain into the partitioned fact table
+    (cleanse -> star join against the CURRENT dimensions -> partition-
+    pruned upsert) and log one ``stream_fact_merge`` run row.
+
+    It is the pipeline's incremental load (``pipeline.drain_bronze``)
+    under its own watermark, so it merges only published rows that no
+    deletion vector hides, and a crash before the watermark advances
+    replays into the idempotent MERGE on event_nk. Dimensions are read
+    fresh per drain — maintained by the (slower-cadence) batch pipeline,
+    the standard split between dim maintenance and fact streaming.
+    Limit: a bronze commit that replaced files makes the drain raise
+    ValueError; nothing in this package compacts ``raw_events``."""
+    import uuid
+
+    from _event_intelligence_data_warehouse_spark.functions.keys import event_nk
     from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
-    from _event_intelligence_data_warehouse_spark.plans.staging import (
-        stage_events,
-    )
+    from _event_intelligence_data_warehouse_spark.plans import pipeline
     from _event_intelligence_data_warehouse_spark.sources import bronze
 
-    stream = (
-        spark.readStream.schema(schemas.RAW_EVENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(wh.path(bronze.RAW_TABLE), "data", "*"))
-    )
+    def merge(stg: DataFrame) -> int:
+        nk = event_nk("source", "raw_event_id")
+        n, buckets, keys = stg.agg(
+            F.count("*"), F.collect_set(facts_mod.fact_bucket(nk)),
+            F.collect_set(nk),
+        ).first()
+        dims = {t: wh.read(t, pipeline.GOLD[t]) for t in pipeline.DIM_UPDATES}
+        pipeline.write_facts(wh, stg, dims, staged=n, buckets=buckets,
+                             keys=keys)
+        return n
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import datetime as dt
+    def now() -> dt.datetime:
+        return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
-        if batch_df.isEmpty():
-            return
-        started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        run_id = f"stream-fact-merge-{batch_id}"
-        try:
-            from _event_intelligence_data_warehouse_spark import cache
-
-            stg = stage_events(batch_df, only_unprocessed=False)
-            fact_rows = cache.persist(facts_mod.build_fact_rows(
-                stg,
-                wh.read("dim_date", schemas.DIM_DATE),
-                wh.read("dim_venue", schemas.DIM_VENUE),
-                wh.read("dim_category", schemas.DIM_CATEGORY),
-                wh.read("dim_source", schemas.DIM_SOURCE),
-                loaded_at=F.current_timestamp(),
-            ))
-            # Log what actually LOADS (post-cleanse/dedup fact rows),
-            # not the raw batch size; the persist means the count and
-            # the upsert share one computation of the build. ``n`` also
-            # bounds the batch's new keys, so it picks the surrogate-key
-            # regime without the upsert's own size probe, and the same
-            # pass names the fact keys and buckets the upsert writes.
-            n, buckets, keys = fact_rows.agg(
-                F.count("*"), F.collect_set(facts_mod.fact_bucket()),
-                F.collect_set("event_nk"),
-            ).first()
-            facts_mod.upsert_facts_partitioned(
-                wh, fact_rows, buckets=buckets, keys=keys,
-                bulk=n > SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
-            )
-            cache.release_all()
-        except Exception as exc:
-            bronze._log(
-                wh, spark, run_id, "stream_fact_merge", started,
-                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-                0, 0, "failed", str(exc)[:500],
-            )
-            raise
-        # S9 parity for the streaming path: one success row per merged
-        # micro-batch, so kpi_pipeline_health sees streaming runs too.
-        bronze._log(
-            wh, spark, run_id, "stream_fact_merge", started,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            n, n, "success", None,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    started = now()
+    run_id = f"stream-fact-merge-{uuid.uuid4()}"
+    try:
+        n = pipeline.drain_bronze(wh, STREAM_WATERMARK, merge)
+    except Exception as exc:
+        bronze._log(wh, spark, run_id, "stream_fact_merge", started, now(),
+                    0, 0, "failed", str(exc)[:500])
+        raise
+    if n is not None:
+        # S9 parity: kpi_pipeline_health sees streaming runs too
+        bronze._log(wh, spark, run_id, "stream_fact_merge", started, now(),
+                    n, n, "success", None)
 
 
 # Applied-source-file ledger for the streaming rollup cascade: exactly-

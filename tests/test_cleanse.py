@@ -93,6 +93,9 @@ def test_stage_events_full_row(spark):
 
 
 def test_incremental_filter(spark):
+    """Staging keeps every row it is handed, whatever its
+    ``is_processed``: the incremental filter is the load's bronze-version
+    watermark, not the flag."""
     from _event_intelligence_data_warehouse_spark import schemas
     from _event_intelligence_data_warehouse_spark.plans.staging import stage_events
 
@@ -125,5 +128,4 @@ def test_incremental_filter(spark):
             }
         )
     raw = spark.createDataFrame(rows, schemas.RAW_EVENTS)
-    assert stage_events(raw).count() == 2
-    assert stage_events(raw, only_unprocessed=False).count() == 3
+    assert stage_events(raw).count() == 3

@@ -116,7 +116,7 @@ def test_fact_image_matches_whole_image_upsert(spark, tmp_path, monkeypatch):
 
     bronze.land_batch(wh, _batch(spark, 110, 120), source="csv")
     n = len(results)
-    jobs.stream_facts_from_bronze(spark, wh, str(tmp_path / "ckpt"))
+    jobs.stream_facts_from_bronze(spark, wh)
     streamed = results[n:]
     assert streamed and all(r["equal"] and r["unique"] for r in streamed)
     assert any(r["replaced"] for r in streamed)

@@ -298,8 +298,7 @@ def test_venue_tie_break_does_not_depend_on_partitioning(spark, tmp_path):
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     bronze.land_batch(wh, generate_sample_events(spark, 200), source="csv")
-    stg = stage_events(wh.read(bronze.RAW_TABLE),
-                       only_unprocessed=False).cache()
+    stg = stage_events(wh.read(bronze.RAW_TABLE)).cache()
     coords = (dims_mod.member_tuples("dim_venue", stg)
               .groupBy("venue_nk")
               .agg(F.countDistinct("latitude", "longitude").alias("n")))

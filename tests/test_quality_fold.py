@@ -154,7 +154,7 @@ def test_commits_without_counters_recount(spark, tmp_path):
 
     def stream_merge():
         bronze.land_batch(wh, _batch(spark, 60, 70), source="csv")
-        jobs.stream_facts_from_bronze(spark, wh, str(tmp_path / "ckpt"))
+        jobs.stream_facts_from_bronze(spark, wh)
 
     kinds = [
         ("dv_delete", lambda: wh.delete_where(

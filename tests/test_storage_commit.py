@@ -7,7 +7,8 @@
   live file, with the image the operation promises.
 - Only ``Warehouse._commit`` and the commits that reuse another
   version's metadata publish a manifest themselves.
-- The streaming jobs use the warehouse through its public methods only.
+- The streaming jobs use the warehouse through its public methods only,
+  and no pipeline module reads a table by its directory.
 """
 
 from __future__ import annotations
@@ -248,6 +249,30 @@ def test_only_commit_and_metadata_commits_publish():
         "a write publishes outside Warehouse._commit: "
         f"{sorted(set(calls) - _PUBLISHERS)}")
     assert all(n == 1 for n in calls.values()), calls
+
+
+def test_no_pipeline_module_reads_a_table_by_path():
+    """Every read of a warehouse table outside ``storage.py`` resolves
+    its manifest: a module under ``plans/``, ``sources/`` or
+    ``streaming/`` that lists a table's directory through
+    ``Warehouse.path`` would see files no commit published and rows a
+    deletion vector hides."""
+    pkg = os.path.dirname(storage.__file__)
+    calls = []
+    for sub in ("plans", "sources", "streaming"):
+        for name in sorted(os.listdir(os.path.join(pkg, sub))):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(pkg, sub, name)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            calls += [
+                f"{sub}/{name}:{node.lineno}" for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "path"
+            ]
+    assert not calls, calls
 
 
 def test_streaming_jobs_read_no_private_warehouse_attribute():

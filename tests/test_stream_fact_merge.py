@@ -1,9 +1,12 @@
-"""Streaming bronze -> gold fact MERGE (foreachBatch + AvailableNow):
-exactly-once per bronze file via the checkpoint, idempotent via the
-event_nk upsert, incremental for genuinely new keys."""
+"""Streaming bronze -> gold fact MERGE: each drain loads the bronze
+commits made since its watermark through the pipeline's incremental load
+(so only published, undeleted rows), idempotent via the event_nk upsert,
+incremental for genuinely new keys. Also the file-stream MERGE into a
+warehouse table (``stream_merge_into``)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from _event_intelligence_data_warehouse_spark.plans import pipeline
@@ -17,7 +20,6 @@ from _event_intelligence_data_warehouse_spark.streaming import jobs
 
 def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
     whdir = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
     args = pipeline.parse_args(
         ["--warehouse-dir", whdir, "--source", "csv", "--generate-sample",
          "--sample-rows", "120"]
@@ -28,7 +30,7 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
     assert n0 == 120
 
     # Drain 1: every bronze row re-merges; MERGE semantics keep counts.
-    jobs.stream_facts_from_bronze(spark, wh, ckpt)
+    jobs.stream_facts_from_bronze(spark, wh)
     assert wh.read("fact_events").count() == n0
 
     # Land a batch of genuinely new keys, drain again -> facts grow.
@@ -36,18 +38,18 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
         "event_id", F.concat(F.lit("S_"), F.col("event_id"))
     )
     bronze.land_batch(wh, fresh, source="csv")
-    jobs.stream_facts_from_bronze(spark, wh, ckpt)
+    jobs.stream_facts_from_bronze(spark, wh)
     n1 = wh.read("fact_events").count()
     assert n1 == n0 + 30, "new bronze keys did not reach the fact table"
 
-    # Drain 3 with no new bronze files: checkpoint processes nothing.
-    jobs.stream_facts_from_bronze(spark, wh, ckpt)
+    # Drain 3 with no new bronze commit: the watermark processes nothing.
+    jobs.stream_facts_from_bronze(spark, wh)
     assert wh.read("fact_events").count() == n1
     # surrogate keys stayed unique through the streaming merges
     sks = wh.read("fact_events").select("event_sk").collect()
     vals = [r[0] for r in sks]
     assert len(vals) == len(set(vals))
-    # every merged micro-batch left a success row in the run log (S9
+    # every drain that merged rows left a success row in the run log (S9
     # parity for the streaming path) and loaded counts are conserved
     stream_runs = (
         bronze.current_runs(wh)
@@ -61,9 +63,9 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
 def test_stream_fact_merge_skips_surrogate_key_probe(
     spark, tmp_path, monkeypatch
 ):
-    """Each micro-batch already counts its fact rows, an upper bound on
-    its new keys, so it must pass the surrogate-key regime down instead
-    of letting assign_surrogate_keys probe (persist + count) per batch."""
+    """Each drain already counts its staged rows, an upper bound on its
+    new keys, so it must pass the surrogate-key regime down instead of
+    letting assign_surrogate_keys probe (persist + count) per batch."""
     from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
 
     whdir = str(tmp_path / "wh")
@@ -82,29 +84,35 @@ def test_stream_fact_merge_skips_surrogate_key_probe(
         return real_assign(*a, **kw)
 
     monkeypatch.setattr(facts_mod, "assign_surrogate_keys", spy)
-    jobs.stream_facts_from_bronze(spark, wh, str(tmp_path / "ckpt"))
+    jobs.stream_facts_from_bronze(spark, wh)
     assert seen, "the drain never reached the fact upsert"
     assert None not in seen, f"surrogate-key probe ran: bulk={seen}"
     assert wh.read("fact_events").count() == 40
 
 
-def test_stream_fact_merge_crash_restart_is_exactly_once(
-    spark, tmp_path, monkeypatch
-):
-    """Crash-injection for the streaming MERGE: kill the foreachBatch loop
-    BETWEEN micro-batches — after the 2nd batch's warehouse write lands
-    but before its streaming checkpoint commits (the worst-case crash
-    point: data visible, progress not recorded) — then restart from the
-    same checkpoint. At-least-once replay + the idempotent event_nk MERGE
-    must yield exactly-once fact state: no lost batch, no double-applied
-    batch, unique surrogate keys."""
-    import pytest
-    from pyspark.errors import StreamingQueryException
+def _drain_pipeline(spark, wh):
+    pipeline.step_transform_and_load(wh, spark)
 
+
+def _drain_stream(spark, wh):
+    jobs.stream_facts_from_bronze(spark, wh)
+
+
+@pytest.mark.parametrize("drain", [_drain_pipeline, _drain_stream],
+                         ids=["pipeline", "stream"])
+def test_stream_fact_merge_crash_restart_is_exactly_once(
+    spark, tmp_path, monkeypatch, drain
+):
+    """Crash-injection for the incremental fact load of both entry
+    points: kill the drain after its fact write lands but before its
+    watermark advances (the worst-case crash point: data visible,
+    progress not recorded), then drain again. The replay of the whole
+    batch into the idempotent event_nk MERGE must yield exactly-once
+    fact state: no lost row, no double-applied row, unique surrogate
+    keys."""
     from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
 
     whdir = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
     args = pipeline.parse_args(
         ["--warehouse-dir", whdir, "--source", "csv", "--generate-sample",
          "--sample-rows", "120"]
@@ -112,11 +120,10 @@ def test_stream_fact_merge_crash_restart_is_exactly_once(
     pipeline.run_pipeline(spark, whdir, args)
     wh = Warehouse(spark, whdir)
     n0 = wh.read("fact_events").count()
-    jobs.stream_facts_from_bronze(spark, wh, ckpt)  # drain the backlog
+    drain(spark, wh)  # drain the backlog
 
     # Land 30 genuinely new keys as six separate bronze batches (six
-    # landing files), so with maxFilesPerTrigger=1 the next drain runs
-    # them as several micro-batches.
+    # bronze commits), which the next drain reads as one batch.
     import os
 
     raw_dir = wh.path(bronze.RAW_TABLE)
@@ -138,43 +145,42 @@ def test_stream_fact_merge_crash_restart_is_exactly_once(
         )
     base30.unpersist()
     assert _n_files() - before_files >= 4, (
-        "need several new bronze files to force multiple micro-batches"
+        "need several new bronze files"
     )
 
     real_upsert = facts_mod.upsert_facts_partitioned
     calls = {"n": 0}
 
-    def crash_after_second_write(wh_, incoming, **kw):
+    def crash_after_first_write(wh_, incoming, **kw):
         out = real_upsert(wh_, incoming, **kw)  # the write COMPLETES
         calls["n"] += 1
-        if calls["n"] == 2:
+        if calls["n"] == 1:
             raise RuntimeError("injected crash after batch write")
         return out
 
     monkeypatch.setattr(
-        facts_mod, "upsert_facts_partitioned", crash_after_second_write
+        facts_mod, "upsert_facts_partitioned", crash_after_first_write
     )
-    with pytest.raises(StreamingQueryException):
-        jobs.stream_facts_from_bronze(
-            spark, wh, ckpt, max_files_per_trigger=1
-        )
-    assert calls["n"] == 2, "crash was injected between micro-batches"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        drain(spark, wh)
+    assert calls["n"] == 1, "crash was injected after the fact write"
     mid = wh.read("fact_events").count()
     assert n0 <= mid <= n0 + 30, "mid-crash state outside replay envelope"
-    # the crashed batch left a failed row in the run log
-    failed = (
-        bronze.current_runs(wh)
-        .filter((F.col("source") == "stream_fact_merge")
-                & (F.col("status") == "failed"))
-        .count()
-    )
-    assert failed >= 1
+    if drain is _drain_stream:
+        # the crashed drain left a failed row in the run log
+        failed = (
+            bronze.current_runs(wh)
+            .filter((F.col("source") == "stream_fact_merge")
+                    & (F.col("status") == "failed"))
+            .count()
+        )
+        assert failed >= 1
 
-    # Restart from the same checkpoint with the crash removed: the batch
-    # whose offsets never committed replays (idempotently), the rest
-    # process once, and the fact table converges to exactly-once state.
+    # Restart with the crash removed: the batch whose watermark never
+    # advanced replays (idempotently), and the fact table converges to
+    # exactly-once state.
     monkeypatch.setattr(facts_mod, "upsert_facts_partitioned", real_upsert)
-    jobs.stream_facts_from_bronze(spark, wh, ckpt, max_files_per_trigger=1)
+    drain(spark, wh)
     assert wh.read("fact_events").count() == n0 + 30
     nks = [r[0] for r in wh.read("fact_events").select("event_nk").collect()]
     assert len(nks) == len(set(nks)), "replayed batch double-applied"
@@ -182,8 +188,69 @@ def test_stream_fact_merge_crash_restart_is_exactly_once(
     assert len(sks) == len(set(sks))
 
     # A further drain with nothing new processes nothing.
-    jobs.stream_facts_from_bronze(spark, wh, ckpt, max_files_per_trigger=1)
+    drain(spark, wh)
     assert wh.read("fact_events").count() == n0 + 30
+
+
+def test_stream_fact_merge_loads_only_published_live_rows(spark, tmp_path):
+    """The drain reads bronze through its manifests: keys a deletion
+    vector erased from ``raw_events`` and rows of a snapshot whose
+    commit never published do not reach ``fact_events``, and the fact
+    image equals the one the pipeline's load makes from the same
+    state."""
+    import shutil
+
+    from _event_intelligence_data_warehouse_spark import schemas
+
+    whdir = str(tmp_path / "wh")
+    args = pipeline.parse_args(
+        ["--warehouse-dir", whdir, "--source", "csv", "--generate-sample",
+         "--sample-rows", "60"]
+    )
+    pipeline.run_pipeline(spark, whdir, args)
+    wh = Warehouse(spark, whdir)
+    jobs.stream_facts_from_bronze(spark, wh)  # drain the backlog
+
+    # 10 new keys with the categories, dates and current venue versions
+    # of keys already loaded, so the pipeline's load changes no dimension.
+    sample = generate_sample_events(spark, 10)
+    venues = wh.read("dim_venue").filter(F.col("is_current")).select(
+        "venue_name", F.col("city").alias("venue_city"),
+        F.col("latitude").cast("string").alias("lat"),
+        F.col("longitude").cast("string").alias("lon"))
+    fresh = (sample.join(venues, ["venue_name", "venue_city"])
+             .withColumn("event_id", F.concat(F.lit("N_"), F.col("event_id")))
+             .withColumn("venue_lat", F.col("lat"))
+             .withColumn("venue_lon", F.col("lon")))
+    bronze.land_batch(wh, fresh.select(sample.columns), source="csv")
+    erased = [f"N_MOCK_{i:05d}" for i in (1, 4, 5, 8)]
+    for key in erased:
+        wh.delete_where(bronze.RAW_TABLE, [("raw_event_id", "==", key)],
+                        mode="dv")
+    unpublished = wh.read(bronze.RAW_TABLE).limit(6).withColumn(
+        "raw_event_id", F.concat(F.lit("U_"), F.col("raw_event_id")))
+    wh._write_snapshot(bronze.RAW_TABLE, unpublished)  # no commit
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(whdir, copy)
+    jobs.stream_facts_from_bronze(spark, wh)
+    pipeline.step_transform_and_load(Warehouse(spark, copy), spark)
+
+    fact = wh.read("fact_events")
+    keys = {r[0] for r in fact.select("event_nk").collect()}
+    assert not keys & {f"csv_{k}" for k in erased}, "erased key loaded"
+    assert not {k for k in keys if k.startswith("csv_U_")}, (
+        "unpublished row loaded")
+    assert len({k for k in keys if k.startswith("csv_N_")}) == 6
+
+    cols = [f.name for f in schemas.FACT_EVENTS.fields
+            if f.name != "loaded_at"]
+
+    def image(w):
+        return sorted(map(tuple, w.read("fact_events").select(cols).collect()),
+                      key=repr)
+
+    assert image(wh) == image(Warehouse(spark, copy))
 
 
 def test_stream_merge_into_exactly_once_and_replay_safe(spark, tmp_path):
