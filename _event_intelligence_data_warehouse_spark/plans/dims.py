@@ -149,7 +149,7 @@ def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFr
     )
 
 
-def _member_key(name: str, cols: dict[str, Column], types: dict) -> Column:
+def member_key(name: str, cols: dict[str, Column], types: dict) -> Column:
     """The JSON text of the dimension name and the member's columns, cast
     to the image's types, matched the way ``update_dim_*`` matches them:
     the SCD2 attributes of a venue null-safely, every other column by
@@ -201,9 +201,9 @@ def with_new_members(
         rows.append(F.struct(
             *[F.lit(None).cast(t).alias(n) for n, t in types.items()],
             F.when(where, F.lit(name)).alias("dim"),
-            F.when(where, _member_key(name, cols, image_types)).alias("key"),
+            F.when(where, member_key(name, cols, image_types)).alias("key"),
         ))
-        held = image.select(_member_key(
+        held = image.select(member_key(
             name, {c: F.col(c) for c in cols}, image_types
         ).alias("key"))
         images = held if images is None else images.unionByName(held)

@@ -1,4 +1,4 @@
-"""Fact load: batch dedup -> star join -> merge upsert
+"""Fact load: star join -> merge upsert
 (/root/reference/warehouse/load_facts.sql re-expressed; SURVEY.md §2.5-2.6).
 
 One fact-load path with key ``source || '_' || raw_event_id`` — the
@@ -19,10 +19,21 @@ from _event_intelligence_data_warehouse_spark.functions.keys import (
 )
 from _event_intelligence_data_warehouse_spark.operators.upsert import (
     assign_surrogate_keys,
-    dedup_keys,
     merge_upsert,
 )
 from _event_intelligence_data_warehouse_spark.plans import quality
+from _event_intelligence_data_warehouse_spark.plans.dims import member_key
+
+
+# Dimension name -> (its surrogate key, its key columns by their names in
+# the dimension, each from the staged column it is matched with)
+_STAR = {
+    "dim_date": ("date_id", {"full_date": "event_date"}),
+    "dim_venue": ("venue_sk", {"venue_nk": "_venue_nk"}),
+    "dim_category": ("category_sk", {"category_name": "category",
+                                     "subcategory": "subcategory"}),
+    "dim_source": ("source_sk", {"source_name": "source"}),
+}
 
 
 def build_fact_rows(
@@ -34,50 +45,51 @@ def build_fact_rows(
     *,
     loaded_at: Column,
 ) -> DataFrame:
-    """Deduped staging batch -> fact rows with resolved dimension keys.
+    """Staging batch, unique on (source, raw_event_id) -> fact rows with
+    resolved dimension keys (``pipeline.write_facts`` deduplicates a
+    batch that is not).
 
-    Joins (load_facts.sql:75-90): all LEFT on equi-keys; the venue join is
-    on the md5 expression key with the ``is_current`` residual (J2). Dims
-    are broadcast — at 100 TB the fact side streams and no shuffle occurs
-    on the fact table at all for this stage.
-    """
-    batch = dedup_keys(
-        stg,
-        ["source", "raw_event_id"],
-        [F.desc("ingested_at"), F.desc("ingest_id")],
-    ).withColumn("_venue_nk", venue_nk("venue_name", "venue_city"))
-
-    dd = F.broadcast(dim_date.select("date_id", "full_date"))
-    dv = F.broadcast(
-        dim_venue.filter(F.col("is_current")).select("venue_sk", "venue_nk")
-    )
-    dc = F.broadcast(
-        dim_category.select(
-            "category_sk", F.col("category_name"), F.col("subcategory").alias(
-                "_subcat"
-            )
+    Joins (load_facts.sql:75-90): all LEFT on equi-keys, the venue join
+    against the ``is_current`` versions only (J2). The four dimensions
+    are one broadcast: their images are unioned into one lookup of
+    (key text, surrogate key) rows, the key text carrying the
+    dimension's name (``dims.member_key``), and the batch joins that
+    lookup four times. The four build sides canonicalize to one plan, so
+    the exchange runs once and three joins reuse it. Each join renames
+    the lookup's columns to names no dimension has: an alias to a
+    dimension's own column name is dropped as redundant in one union
+    branch, and the four build sides would no longer be equal. At 100 TB
+    the fact side streams and no shuffle occurs on the fact table for
+    this stage."""
+    images = {"dim_date": dim_date,
+              "dim_venue": dim_venue.filter(F.col("is_current")),
+              "dim_category": dim_category, "dim_source": dim_source}
+    types = {name: dict(image.dtypes) for name, image in images.items()}
+    lookup = None
+    for name, (sk, cols) in _STAR.items():
+        held = images[name].select(
+            member_key(name, {c: F.col(c) for c in cols}, types[name])
+            .alias("key"),
+            F.col(sk).cast("long").alias("sk"),
         )
-    )
-    ds = F.broadcast(dim_source.select("source_sk", "source_name"))
+        lookup = held if lookup is None else lookup.unionByName(held)
 
-    joined = (
-        batch.join(dd, batch.event_date == dd.full_date, "left")
-        .join(dv, batch._venue_nk == dv.venue_nk, "left")
-        .join(
-            dc,
-            (batch.category == dc.category_name)
-            & (batch.subcategory == dc._subcat),
-            "left",
+    joined = stg.withColumn("_venue_nk", venue_nk("venue_name", "venue_city"))
+    fks = []
+    for name, (sk, cols) in _STAR.items():
+        tag = name.removeprefix("dim_")
+        side = F.broadcast(lookup.select(
+            F.col("key").alias(f"_key_{tag}"), F.col("sk").alias(f"_sk_{tag}")
+        ))
+        key = member_key(
+            name, {c: F.col(s) for c, s in cols.items()}, types[name]
         )
-        .join(ds, batch.source == ds.source_name, "left")
-    )
+        joined = joined.join(side, key == side[f"_key_{tag}"], "left")
+        fks.append(F.col(f"_sk_{tag}").alias(sk))
 
     return joined.select(
         event_nk("source", "raw_event_id").alias("event_nk"),
-        F.col("date_id").cast("long"),
-        F.col("venue_sk").cast("long"),
-        F.col("category_sk").cast("long"),
-        F.col("source_sk").cast("long"),
+        *fks,
         F.col("event_name"),
         F.col("url").alias("event_url"),
         F.col("event_status"),

@@ -32,6 +32,7 @@ from _event_intelligence_data_warehouse_spark import schemas
 from _event_intelligence_data_warehouse_spark.functions.keys import event_nk
 from _event_intelligence_data_warehouse_spark.operators.upsert import (
     SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
+    dedup_keys,
 )
 from _event_intelligence_data_warehouse_spark.plans import dims as dims_mod
 from _event_intelligence_data_warehouse_spark.plans import facts as facts_mod
@@ -111,21 +112,22 @@ def drain_bronze(
     wh: Warehouse, watermark: str, load: Callable[[DataFrame], T],
 ) -> T | None:
     """Stage the bronze rows committed after ``watermark``, ``load`` the
-    cached batch, then advance the watermark to exactly the version read
-    (fixes the reference's broken mark-processed — SURVEY.md §0.3).
-    Returns ``load``'s result, or None when nothing new was committed.
-    The read resolves the manifests, so rows a deletion vector hides and
+    batch, then advance the watermark to exactly the version read (fixes
+    the reference's broken mark-processed — SURVEY.md §0.3). Returns
+    ``load``'s result, or None when nothing new was committed. The read
+    resolves the manifests, so rows a deletion vector hides and
     unpublished files are never loaded; a failed load leaves the
     watermark, and the next drain replays the batch. A bronze commit that
-    replaced files raises ValueError (nothing compacts ``raw_events``)."""
+    replaced files raises ValueError (nothing compacts ``raw_events``).
+
+    The batch is not cached: it is a projection over files that were
+    appended and are never rewritten, so each read of it gives the same
+    rows, and under adaptive execution filling a cache is a job of its
+    own."""
     raw, version = unprocessed_raw(wh, watermark)
     if raw is None:
         return None
-    stg = stage_events(raw).cache()
-    try:
-        out = load(stg)
-    finally:
-        stg.unpersist()
+    out = load(stage_events(raw))
     wh.set_watermark(watermark, version)
     return out
 
@@ -135,9 +137,19 @@ def write_facts(
     staged: int, buckets: list[int], keys: list[str],
 ) -> None:
     """Star-join the staged batch against ``dims`` and upsert the fact
-    rows into ``buckets`` by ``keys`` (the batch's). ``staged``, the row
-    count, bounds the new keys, so it picks the surrogate-key regime
-    without a probe job on the join result."""
+    rows into ``buckets`` by ``keys`` (the batch's distinct non-NULL
+    ``event_nk`` values). ``staged``, the row count, bounds the new keys,
+    so it picks the surrogate-key regime without a probe job on the join
+    result. A batch with as many keys as rows is key-unique, so it skips
+    the batch dedup (a shuffle that would keep every row); one with a
+    NULL or repeated key keeps the latest row per (source, raw_event_id)
+    (load_facts.sql:12-17), a NULL id counting as one key per source."""
+    if len(keys) < staged:
+        stg = dedup_keys(
+            stg,
+            ["source", "raw_event_id"],
+            [F.desc("ingested_at"), F.desc("ingest_id")],
+        )
     fact_rows = facts_mod.build_fact_rows(
         stg,
         dims["dim_date"],
@@ -168,7 +180,7 @@ def _load_staged(wh: Warehouse, stg: DataFrame) -> dict:
     now = F.current_timestamp()
     dims = {name: wh.read(name, GOLD[name]) for name in DIM_UPDATES}
     present = {name: dims[name] for name in dims if wh.exists(name)}
-    # One pass over the cached batch: the batch size, the fact keys and
+    # One pass over the batch: the batch size, the fact keys and
     # the buckets they fall in, and the dimensions it adds members to (a
     # table that does not exist yet is always written, even if empty).
     nk = event_nk("source", "raw_event_id")

@@ -163,9 +163,12 @@ def stream_facts_from_bronze(spark: SparkSession, wh) -> None:
     deletion vector hides, and a crash before the watermark advances
     replays into the idempotent MERGE on event_nk. Dimensions are read
     fresh per drain — maintained by the (slower-cadence) batch pipeline,
-    the standard split between dim maintenance and fact streaming.
-    Limit: a bronze commit that replaced files makes the drain raise
-    ValueError; nothing in this package compacts ``raw_events``."""
+    the standard split between dim maintenance and fact streaming. A
+    first drain starts at the bronze version the pipeline's load read
+    through, when that watermark is a version: the rows before it are
+    already facts. Limit: a bronze commit that replaced files makes the
+    drain raise ValueError; nothing in this package compacts
+    ``raw_events``."""
     import uuid
 
     from _event_intelligence_data_warehouse_spark.functions.keys import event_nk
@@ -187,6 +190,10 @@ def stream_facts_from_bronze(spark: SparkSession, wh) -> None:
     def now() -> dt.datetime:
         return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
+    if wh.get_watermark(STREAM_WATERMARK) is None:
+        loaded = wh.get_watermark(pipeline.WATERMARK)
+        if isinstance(loaded, int):
+            wh.set_watermark(STREAM_WATERMARK, loaded)
     started = now()
     run_id = f"stream-fact-merge-{uuid.uuid4()}"
     try:

@@ -529,3 +529,81 @@ def test_global_window_sanctions_are_exhaustive(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_gw = count_global_windows(plan)
     assert n_gw <= 2  # the asc+desc bucket prefixes, nothing per-user
+
+
+def _fact_write_plan(spark, wh, monkeypatch) -> list[tuple[str, str]]:
+    """Run the pipeline's load on ``wh`` and return the executed plan of
+    its fact write as (operator name, node text) lines. The written
+    frame is executed once more after the write, through its own query
+    execution, so the plan is adaptive execution's final one, where
+    reused exchanges show."""
+    import re
+
+    from _event_intelligence_data_warehouse_spark.plans import pipeline
+    from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+    written = []
+    real = Warehouse.overwrite_partitions
+
+    def capture(self, table, df, *args, **kwargs):
+        written.append(df)
+        return real(self, table, df, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", capture)
+    pipeline.step_transform_and_load(wh, spark)
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", real)
+    [df] = written
+    df.collect()
+    final = _plan(df).split("== Final Plan ==")[1]
+    final = final.split("== Initial Plan ==")[0]
+    lines = []
+    for line in final.splitlines():
+        text = re.sub(r"^\*\(\d+\) ", "", line.lstrip(" :+-"))
+        lines.append((text.split(" ", 1)[0], text))
+    return lines
+
+
+def test_fact_write_shares_one_dimension_broadcast(spark, tmp_path,
+                                                   monkeypatch):
+    """The pipeline's fact write joins the batch to the four dimensions
+    through one broadcast that the other three joins reuse, and a
+    key-unique batch is not deduplicated: no window on (source,
+    raw_event_id). A batch holding a key twice keeps that window. The
+    broadcast is shared only while the four build sides canonicalize
+    equal; renaming the lookup's columns to a dimension's own column
+    names breaks that, and each join broadcasts again."""
+    import re
+    from datetime import datetime
+
+    from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.plans import pipeline
+    from _event_intelligence_data_warehouse_spark.sources import bronze
+    from _event_intelligence_data_warehouse_spark.sources.synthetic import (
+        generate_sample_events,
+    )
+    from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    events = generate_sample_events(spark, 80)
+    bronze.land_batch(wh, events.filter(F.col("event_id") < "MOCK_00060"),
+                      source="csv")
+    pipeline.step_transform_and_load(wh, spark)
+    bronze.land_batch(wh, events.filter(F.col("event_id") >= "MOCK_00060"),
+                      source="csv")
+    plan = _fact_write_plan(spark, wh, monkeypatch)
+    ops = [op for op, _ in plan]
+    assert ops.count("BroadcastExchange") == 1, plan
+    assert sum(op == "ReusedExchange" and "BroadcastExchange" in text
+               for op, text in plan) == 3, plan
+    assert ops.count("BroadcastHashJoin") == 4, plan
+    dedup = re.compile(r"\[source#\d+, raw_event_id#\d+\]")
+    assert not [t for op, t in plan if op == "Window" and dedup.search(t)]
+
+    twice = wh.read(bronze.RAW_TABLE).filter(
+        F.col("raw_event_id") == "MOCK_00007"
+    ).select([f.name for f in schemas.RAW_EVENTS.fields])
+    for day in (1, 2):
+        wh.append(bronze.RAW_TABLE, twice.withColumn(
+            "ingested_at", F.lit(datetime(2030, 1, day))))
+    plan = _fact_write_plan(spark, wh, monkeypatch)
+    assert [t for op, t in plan if op == "Window" and dedup.search(t)], plan

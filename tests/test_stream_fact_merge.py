@@ -29,9 +29,11 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
     n0 = wh.read("fact_events").count()
     assert n0 == 120
 
-    # Drain 1: every bronze row re-merges; MERGE semantics keep counts.
+    # Drain 1 starts where the pipeline's load stopped: nothing to merge.
     jobs.stream_facts_from_bronze(spark, wh)
     assert wh.read("fact_events").count() == n0
+    assert (wh.get_watermark(jobs.STREAM_WATERMARK)
+            == wh.get_watermark(pipeline.WATERMARK))
 
     # Land a batch of genuinely new keys, drain again -> facts grow.
     fresh = generate_sample_events(spark, 30).withColumn(
@@ -57,7 +59,7 @@ def test_stream_fact_merge_is_incremental_and_idempotent(spark, tmp_path):
         .collect()
     )
     assert stream_runs and all(r["status"] == "success" for r in stream_runs)
-    assert sum(r["records_loaded"] for r in stream_runs) == n0 + 30
+    assert sum(r["records_loaded"] for r in stream_runs) == 30
 
 
 def test_stream_fact_merge_skips_surrogate_key_probe(
@@ -83,11 +85,15 @@ def test_stream_fact_merge_skips_surrogate_key_probe(
         seen.append(kw.get("bulk"))
         return real_assign(*a, **kw)
 
+    fresh = generate_sample_events(spark, 10).withColumn(
+        "event_id", F.concat(F.lit("S_"), F.col("event_id"))
+    )
+    bronze.land_batch(wh, fresh, source="csv")
     monkeypatch.setattr(facts_mod, "assign_surrogate_keys", spy)
     jobs.stream_facts_from_bronze(spark, wh)
     assert seen, "the drain never reached the fact upsert"
     assert None not in seen, f"surrogate-key probe ran: bulk={seen}"
-    assert wh.read("fact_events").count() == 40
+    assert wh.read("fact_events").count() == 50
 
 
 def _drain_pipeline(spark, wh):
